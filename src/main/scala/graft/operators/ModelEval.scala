@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Q
 import graft.functions.Rounding.{roundN, roundNSql}
+import graft.pipeline.Concurrent
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -233,29 +234,18 @@ object ModelEval {
     // fold's fit is 1 + Iterations driver-coordinated grand-aggregate
     // jobs over the SAME cached frame, sequential only because the driver
     // called them sequentially — the folds are independent, so they now
-    // run from a fold-count thread pool and their small jobs interleave
+    // run concurrently (one thread per fold) and their small jobs interleave
     // on the idle executor capacity (each aggregate is far narrower than
     // the cluster). Per-fold trajectories and results are unchanged:
     // every fold's GD is self-contained and its weights land in plan
     // literals, fold order is restored on collection below.
-    val perFold = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(CvFolds)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      try {
-        val futs = (0 until CvFolds).map { k =>
-          Future {
-            val (ws, _, _, _) = TrainClassifier.fit(f.filter(col("fold") =!= k))
-            val p = TrainClassifier.sigma(TrainClassifier.margin(ws))
-            val sc = f.filter(col("fold") === k)
-              .select(floor(p * lit(Micro) + lit(0.5)).cast("long").as("mu"), col("y"))
-            aucOf(sc)
-          }
-        }
-        futs.map(Await.result(_, Duration.Inf))
-      } finally pool.shutdown()
-    }
+    val perFold = Concurrent.all((0 until CvFolds).map { k => () =>
+      val (ws, _, _, _) = TrainClassifier.fit(f.filter(col("fold") =!= k))
+      val p = TrainClassifier.sigma(TrainClassifier.margin(ws))
+      val sc = f.filter(col("fold") === k)
+        .select(floor(p * lit(Micro) + lit(0.5)).cast("long").as("mu"), col("y"))
+      aucOf(sc)
+    })
     val foldRows = perFold.zipWithIndex.map { case (a, k) =>
       a.select(lit(k).as("fold"), col("n_pos"), col("n_neg"), col("auc"))
     }.reduce(_ unionByName _)

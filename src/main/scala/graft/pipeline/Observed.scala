@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   *
   * This is the scale-correct form of the reference's validation metrics:
   * validate.py runs a Spark action per rule (~12 scans); the pipeline's
-  * single-pass aggregate (EcommercePipeline.tableRules) cut that to one
+  * per-table audit aggregate (EcommercePipeline.validate) cut that to one
   * job per table; `observe` removes even that — the metrics ride the job
   * that was going to run anyway, for free at any data size.
   */

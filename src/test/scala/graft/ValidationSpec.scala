@@ -3,13 +3,10 @@ package graft
 import graft.pipeline.EcommercePipeline
 import graft.pipeline.EcommercePipeline.ValidationError
 
-/** Fail-fast validation rules on synthetic violating inputs (the reference
-  * only ever sees clean data, so each rule's firing path needs its own
-  * fixture; SURVEY.md §5 test plan). Fixtures are tiny CSV layouts in the
-  * reference's directory shape. */
-class ValidationSpec extends SparkSuite {
-
-  private def writeCsvLayout(products: String, orders: String, items: String): String = {
+/** CSV fixtures in the reference's directory shape (also used by
+  * PipelineRunSpec). */
+object ValidationSpec {
+  def writeCsvLayout(products: String, orders: String, items: String): String = {
     val dir = java.nio.file.Files.createTempDirectory("graft_val").toString
     def put(rel: String, content: String): Unit = {
       val f = new java.io.File(s"$dir/$rel")
@@ -22,13 +19,20 @@ class ValidationSpec extends SparkSuite {
     dir
   }
 
-  private val productsHeader = "id,sku,cost,category,name,brand,retail_price,department"
-  private val ordersHeader = "order_id,user_id,status,created_at,returned_at,shipped_at,delivered_at,num_of_item"
-  private val itemsHeader = "id,order_id,user_id,product_id,status,created_at,shipped_at,delivered_at,returned_at,sale_price"
+  val productsHeader = "id,sku,cost,category,name,brand,retail_price,department"
+  val ordersHeader = "order_id,user_id,status,created_at,returned_at,shipped_at,delivered_at,num_of_item"
+  val itemsHeader = "id,order_id,user_id,product_id,status,created_at,shipped_at,delivered_at,returned_at,sale_price"
 
-  private val cleanProducts = s"$productsHeader\n1,sku1,1.0,Beauty,n1,b1,2.0,d1\n2,sku2,1.0,Toys,n2,,3.0,d2"
-  private val cleanOrders = s"$ordersHeader\n10,100,delivered,2025-03-08T10:00:00,,,,1\n11,101,returned,2025-03-09T10:00:00,,,,2"
-  private val cleanItems = s"$itemsHeader\n1,10,100,1,delivered,2025-03-08T10:00:00,,,,5.0\n2,11,101,2,returned,2025-03-09T10:00:00,,,,7.5"
+  val cleanProducts = s"$productsHeader\n1,sku1,1.0,Beauty,n1,b1,2.0,d1\n2,sku2,1.0,Toys,n2,,3.0,d2"
+  val cleanOrders = s"$ordersHeader\n10,100,delivered,2025-03-08T10:00:00,,,,1\n11,101,returned,2025-03-09T10:00:00,,,,2"
+  val cleanItems = s"$itemsHeader\n1,10,100,1,delivered,2025-03-08T10:00:00,,,,5.0\n2,11,101,2,returned,2025-03-09T10:00:00,,,,7.5"
+}
+
+/** Fail-fast validation rules on synthetic violating inputs (the reference
+  * only ever sees clean data, so each rule's firing path needs its own
+  * fixture; SURVEY.md §5 test plan). */
+class ValidationSpec extends SparkSuite {
+  import ValidationSpec._
 
   test("clean layout validates Right") {
     val p = new EcommercePipeline(spark, writeCsvLayout(cleanProducts, cleanOrders, cleanItems))
@@ -88,5 +92,33 @@ class ValidationSpec extends SparkSuite {
       case Left(e) => assert(e.rule === "fk_order") // fires before unique_key on id
       case other => fail(s"unexpected: $other")
     }
+  }
+
+  test("duplicate order_items id fails unique_key on order_items") {
+    val dupItems = s"$itemsHeader\n1,10,100,1,delivered,2025-03-08T10:00:00,,,,5.0\n1,11,101,2,returned,2025-03-09T10:00:00,,,,7.5"
+    val p = new EcommercePipeline(spark, writeCsvLayout(cleanProducts, cleanOrders, dupItems))
+    assert(p.validate() === Left(ValidationError("order_items", "unique_key", "duplicate id values")))
+  }
+
+  test("header-only order_items fails the emptiness guard on order_items") {
+    val p = new EcommercePipeline(spark, writeCsvLayout(cleanProducts, cleanOrders, itemsHeader))
+    assert(p.validate() === Left(ValidationError("order_items", "non_empty", "table has no rows")))
+  }
+
+  test("fk_product detail counts distinct missing product_ids, not rows") {
+    // three rows, two distinct unknown products (998 twice, 999 once)
+    val badItems = s"$itemsHeader\n1,10,100,998,delivered,2025-03-08T10:00:00,,,,5.0\n" +
+      "2,10,100,998,delivered,2025-03-08T10:00:00,,,,5.0\n3,11,101,999,returned,2025-03-09T10:00:00,,,,7.5"
+    val p = new EcommercePipeline(spark, writeCsvLayout(cleanProducts, cleanOrders, badItems))
+    assert(p.validate() ===
+      Left(ValidationError("order_items", "fk_product", "product_ids with no product row: 2")))
+  }
+
+  test("a null in products is reported before a null in orders") {
+    val badProducts = s"$productsHeader\n1,sku1,1.0,Beauty,n1,b1,2.0,\n2,sku2,1.0,Toys,n2,,3.0,d2"
+    val badOrders = s"$ordersHeader\n10,,delivered,2025-03-08T10:00:00,,,,1\n11,101,returned,2025-03-09T10:00:00,,,,2"
+    val p = new EcommercePipeline(spark, writeCsvLayout(badProducts, badOrders, cleanItems))
+    assert(p.validate() ===
+      Left(ValidationError("products", "required_field", "department has 1 null values")))
   }
 }
