@@ -1,59 +1,26 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times the headline queries (Registry entries with
   * bench=true, falling back to all) on SPARK_GRAFT_SF_DIR and prints one
   * JSON line the driver consumes (BENCH_r{N}.json). */
 object Bench {
 
-  /** Warm + best-of-2 spin — the calibration stamp. Taken once per
-    * HEADLINE RUN and once per DECADE POINT (round-10 verdict #3: the
-    * committed events decade recorded a 16 s q_kpi_category point that an
-    * isolated run measures at 4.7 s — batch-run contamination inflating
-    * one endpoint is invisible to a monotonicity flag, so every α fit
-    * carries per-point calib and is REFUSED when calib drifts > 25%
-    * across the decade's points). Machinery lives in [[BenchCore]],
-    * shared with the fresh-JVM-per-family [[BenchDeep]]. */
-  private def calibSpin(): Double = BenchCore.calibSpin()
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchCore.session("graft-bench")
 
     val headline = {
       val b = Registry.all.filter(_.bench)
       if (b.nonEmpty) b else Registry.all
     }
-    // JVM + parquet-footer warmup on the smallest SF so the timed runs
-    // measure the plan, not classloading.
-    headline.foreach { q =>
-      try q.run(spark, "/root/testdata/sf0.001").count()
-      catch { case _: Throwable => () }
-    }
-    spark.catalog.clearCache() // drop warmup persists before timing
-    // Best-of-N per query: single-shot timings on a shared VM include
-    // CPU-steal/GC noise (observed same-plan swings of 6-10×); the min
-    // over SUCCESSFUL runs is the steady-state number. Cache cleared
-    // between runs so each timing pays its own materialization. A query
-    // that fails every run records -1.0 (round-10 advice: timing a fast
-    // failure as a legitimate measurement fed bogus near-zero numbers
-    // into the α fits with no error marker) — alphaMonoJson treats
-    // non-positive times as null evidence.
-    def timeQs(qs: Seq[Q], dir: String, runs: Int): Seq[(String, Double)] =
-      BenchCore.timeQs(spark, qs, dir, runs)
-    def time(dir: String, runs: Int): Seq[(String, Double)] = timeQs(headline, dir, runs)
+    BenchCore.warmUp(spark, headline)
+    // Best-of-N per query (BenchCore.timeQs): single-shot timings on a
+    // shared VM include CPU-steal/GC noise (observed same-plan swings of
+    // 6-10×). Every headline run and every decade point carries its own
+    // calibration stamp (BenchCore.calibSpin; round-10 verdict #3), and α
+    // fits are REFUSED when calib drifts > 25% across a decade's points.
+    def time(dir: String, runs: Int): Seq[(String, Double)] =
+      BenchCore.timeQs(spark, headline, dir, runs)
     // SPARK_GRAFT_BENCH_FAST=1 skips the scale-evidence passes — a local
     // iteration shortcut (the driver never sets it, so BENCH_r{N}.json
     // always carries the full evidence)
@@ -61,25 +28,14 @@ object Bench {
     // best-of-N for the scale decades (round-9 verdict task #5: endpoint α
     // fits are noise-sensitive; N defaults to the historical 2, raise via
     // env for evidence runs)
-    val benchRuns = sys.env.get("SPARK_GRAFT_BENCH_RUNS")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(2)
-
-    // Endpoint-suspect re-timing + calib-gated α fits live in BenchCore
-    // (shared with the fresh-JVM BenchDeep); thin local aliases keep the
-    // evidence passes below unchanged.
-    def retimeSuspects(qs: Seq[Q], pts: Seq[(Long, String)],
-        series: Seq[Seq[(String, Double)]]): Seq[Seq[(String, Double)]] =
-      BenchCore.retimeSuspects(spark, qs, pts, series)
-    def alphaMonoJson(names: Seq[String], series: Seq[(Long, Map[String, Double])],
-        calibs: Seq[Double]): (String, String, String) =
-      BenchCore.alphaMonoJson(names, series, calibs)
+    val benchRuns = BenchCore.benchRuns(2)
 
     // ---- Headline pass 1 of 2 (round-11 verdict task #4: the repo shipped
     // two contradictory totals with no noise statement — the headline is
     // now best-of-N over TWO runs SPACED by the evidence passes, each with
     // its own calib stamp, and the artifact carries both raw runs plus the
     // measured noise band).
-    val calibRun1 = calibSpin()
+    val calibRun1 = BenchCore.calibSpin()
     val results = time(sfDir, 3)
     def fmt(rs: Seq[(String, Double)]) =
       rs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
@@ -142,6 +98,12 @@ object Bench {
         System.err.println(s"[bench] multi-scale pass failed: ${e.getMessage}")
         ""
     }
+    // 5k -> 16k -> 50k synthetic-corpus points, shared by the lsh and text
+    // passes (each dir is generated once, by whichever pass runs first)
+    def docDecade(tag: String,
+        gen: (org.apache.spark.sql.SparkSession, Long) => org.apache.spark.sql.DataFrame) =
+      BenchCore.docPoints(spark, tag, Seq(5000L, 16000L, 50000L), gen)
+
     // ---- LSH dedup scale evidence (round-4 verdict ask #1): the band-
     // bucket candidate volume is the LSH family's only data-dependent
     // growing term, and harness testdata stops at sf0.1 (5k docs) — so
@@ -153,19 +115,10 @@ object Bench {
     val lshScale = if (fast) "" else try {
       val lshNames = BenchSets.lshDecade
       val lshQs = Registry.all.filter(q => lshNames.contains(q.name))
-      def points(tag: String,
-          gen: (org.apache.spark.sql.SparkSession, Long) => org.apache.spark.sql.DataFrame) =
-        Seq(5000L, 16000L, 50000L).map { n =>
-          val d = s"/tmp/graft_synth_docs_${tag}_$n"
-          if (!new java.io.File(s"$d/documents.parquet").exists())
-            gen(spark, n).write.mode("overwrite").parquet(s"$d/documents.parquet")
-          n -> d
-        }
-      val synthPoints = points("v2", graft.sources.SyntheticDocs.corpus(_, _))
+      val synthPoints = docDecade("v2", graft.sources.SyntheticDocs.corpus(_, _))
       // open-vocabulary (web-like) decade: candidate volume should track
       // dup density here, isolating the fixed-vocab df-cohort artifact
-      val zipfPoints = points("zipf", graft.sources.SyntheticDocs.zipfCorpus(_, _))
-      def timeLsh(dir: String): Seq[(String, Double)] = timeQs(lshQs, dir, benchRuns)
+      val zipfPoints = docDecade("zipf", graft.sources.SyntheticDocs.zipfCorpus(_, _))
       def docRows(dir: String): Long =
         spark.read.parquet(s"$dir/documents.parquet").count()
       def candCounts(dir: String): (Long, Long) = {
@@ -184,10 +137,10 @@ object Bench {
       def decade(pts: Seq[(Long, String)]): (String, String, String, String) = {
         val raw = pts.map { case (n, d) =>
           val cp = candCounts(d)
-          val cal = calibSpin()
-          (n, d, cp, cal, timeLsh(d))
+          val cal = BenchCore.calibSpin()
+          (n, d, cp, cal, BenchCore.timeQs(spark, lshQs, d, benchRuns))
         }
-        val data = raw.zip(retimeSuspects(lshQs, pts, raw.map(_._5)))
+        val data = raw.zip(BenchCore.retimeSuspects(spark, lshQs, pts, raw.map(_._5)))
           .map { case ((n, d, cp, cal, _), ts) => (n, d, cp, cal, ts) }
         val rowsJson = data.map { case (n, d, cp, cal, ts) =>
           s"""{"dir":"$d","rows":$n,"candidates":${cp._1},"candidates_pruned":${cp._2},"calib":$cal,${
@@ -195,7 +148,7 @@ object Bench {
         }.mkString(",")
         // per-query exponent over the decade (same generator at both
         // ends, so the points sit on one curve by construction)
-        val (alphas, mono, calibJson) = alphaMonoJson(lshQs.map(_.name),
+        val (alphas, mono, calibJson) = BenchCore.alphaMonoJson(lshQs.map(_.name),
           data.map { case (n, _, _, _, ts) => (n, ts.toMap) },
           data.map(_._4))
         (rowsJson, alphas, mono, calibJson)
@@ -228,14 +181,16 @@ object Bench {
         graft.sources.SyntheticEvents.writePoint(spark, d, n)
         n -> d
       }
-      val raw = pts.map { case (n, d) => (n, d, calibSpin(), timeQs(qs2, d, benchRuns)) }
-      val data = raw.zip(retimeSuspects(qs2, pts, raw.map(_._4)))
+      val raw = pts.map { case (n, d) =>
+        (n, d, BenchCore.calibSpin(), BenchCore.timeQs(spark, qs2, d, benchRuns))
+      }
+      val data = raw.zip(BenchCore.retimeSuspects(spark, qs2, pts, raw.map(_._4)))
         .map { case ((n, d, cal, _), ts) => (n, d, cal, ts) }
       val ptsJson = data.map { case (n, d, cal, ts) =>
         s"""{"dir":"$d","events":$n,"calib":$cal,${
           ts.map { case (k, v) => "\"" + k + "\":" + v }.mkString(",")}}"""
       }.mkString(",")
-      val (alphas, mono, calibJson) = alphaMonoJson(qs2.map(_.name),
+      val (alphas, mono, calibJson) = BenchCore.alphaMonoJson(qs2.map(_.name),
         data.map { case (n, _, _, ts) => (n, ts.toMap) }, data.map(_._3))
       s""","events_scale":{"points":[$ptsJson],"alpha_decade":{$alphas},""" +
         s""""monotone_decade":{$mono},$calibJson}"""
@@ -267,16 +222,16 @@ object Bench {
         val cf = operators.Similarity.embedCandidateCount(spark, d, adaptive = false)
         val ca = operators.Similarity.embedCandidateCount(spark, d, adaptive = true)
         spark.catalog.clearCache()
-        val cal = calibSpin()
-        (n, d, cf, ca, cal, timeQs(qs3, d, benchRuns))
+        val cal = BenchCore.calibSpin()
+        (n, d, cf, ca, cal, BenchCore.timeQs(spark, qs3, d, benchRuns))
       }
-      val data = raw.zip(retimeSuspects(qs3, pts, raw.map(_._6)))
+      val data = raw.zip(BenchCore.retimeSuspects(spark, qs3, pts, raw.map(_._6)))
         .map { case ((n, d, cf, ca, cal, _), ts) => (n, d, cf, ca, cal, ts) }
       val ptsJson = data.map { case (n, d, cf, ca, cal, ts) =>
         s"""{"dir":"$d","rows":$n,"cand_fixed":$cf,"cand_adaptive":$ca,"calib":$cal,${
           ts.map { case (k, v) => "\"" + k + "\":" + v }.mkString(",")}}"""
       }.mkString(",")
-      val (alphas, mono, calibJson) = alphaMonoJson(qs3.map(_.name),
+      val (alphas, mono, calibJson) = BenchCore.alphaMonoJson(qs3.map(_.name),
         data.map { case (n, _, _, _, _, ts) => (n, ts.toMap) }, data.map(_._5))
       s""","embed_scale":{"points":[$ptsJson],"alpha_decade":{$alphas},""" +
         s""""monotone_decade":{$mono},$calibJson}"""
@@ -299,31 +254,25 @@ object Bench {
       // harness-statistics v2 vocabulary contains — it gets the v2 decade.
       val zipfNames = BenchSets.textZipfDecade
       val v2Names = BenchSets.textV2Decade
-      def mkPts(tag: String,
-          gen: (org.apache.spark.sql.SparkSession, Long) => org.apache.spark.sql.DataFrame) =
-        Seq(5000L, 16000L, 50000L).map { n =>
-          val d = s"/tmp/graft_synth_docs_${tag}_$n"
-          if (!new java.io.File(s"$d/documents.parquet").exists())
-            gen(spark, n).write.mode("overwrite").parquet(s"$d/documents.parquet")
-          n -> d
-        }
       def decade(names: Seq[String], pts: Seq[(Long, String)]): (String, String, String, String) = {
         val qs4 = Registry.all.filter(q => names.contains(q.name))
-        val raw = pts.map { case (n, d) => (n, d, calibSpin(), timeQs(qs4, d, benchRuns)) }
-        val data = raw.zip(retimeSuspects(qs4, pts, raw.map(_._4)))
+        val raw = pts.map { case (n, d) =>
+          (n, d, BenchCore.calibSpin(), BenchCore.timeQs(spark, qs4, d, benchRuns))
+        }
+        val data = raw.zip(BenchCore.retimeSuspects(spark, qs4, pts, raw.map(_._4)))
           .map { case ((n, d, cal, _), ts) => (n, d, cal, ts) }
         val ptsJson = data.map { case (n, d, cal, ts) =>
           s"""{"dir":"$d","rows":$n,"calib":$cal,${
             ts.map { case (k, v) => "\"" + k + "\":" + v }.mkString(",")}}"""
         }.mkString(",")
-        val (alphas, mono, calibJson) = alphaMonoJson(qs4.map(_.name),
+        val (alphas, mono, calibJson) = BenchCore.alphaMonoJson(qs4.map(_.name),
           data.map { case (n, _, _, ts) => (n, ts.toMap) }, data.map(_._3))
         (ptsJson, alphas, mono, calibJson)
       }
       val (zipfJson, zipfAlpha, zipfMono, zipfCal) =
-        decade(zipfNames, mkPts("zipf", graft.sources.SyntheticDocs.zipfCorpus(_, _)))
+        decade(zipfNames, docDecade("zipf", graft.sources.SyntheticDocs.zipfCorpus(_, _)))
       val (v2Json, v2Alpha, v2Mono, v2Cal) =
-        decade(v2Names, mkPts("v2", graft.sources.SyntheticDocs.corpus(_, _)))
+        decade(v2Names, docDecade("v2", graft.sources.SyntheticDocs.corpus(_, _)))
       s""","text_scale":{"points":[$zipfJson],"alpha_decade":{$zipfAlpha},""" +
         s""""monotone_decade":{$zipfMono},"calib":{$zipfCal},"points_v2":[$v2Json],""" +
         s""""alpha_v2_decade":{$v2Alpha},"monotone_v2_decade":{$v2Mono},"calib_v2":{$v2Cal}}"""
@@ -387,7 +336,7 @@ object Bench {
     // documented ~1.5× multi-core noise band a back-to-back re-run hides).
     // The published headline is the per-query BEST of the two runs; the
     // artifact carries both raw runs and the measured band.
-    val calibRun2 = calibSpin()
+    val calibRun2 = BenchCore.calibSpin()
     val results2 = time(sfDir, 3)
     val r1 = results.toMap
     val r2 = results2.toMap
@@ -419,59 +368,6 @@ object Bench {
     // (calib_spin_sec / a reference value) to normalize host noise.
     val calib = math.min(calibRun1, calibRun2)
 
-    // ---- 100× deep decade (round-9 verdict task #5): a third scale point
-    // at 500k rows — two decades end to end — for the SCALE-DESIGNED
-    // flagship queries (BenchSets.deep*: adaptive ANN/near-dup, DF-pruned
-    // MinHash, prefix-filter set-sim, capped TextRank, PMI). Env-gated
-    // (SPARK_GRAFT_BENCH_DEEP=1) because the 500k TextRank point costs
-    // minutes per run; results go to BENCH_DEEP.json, never the driver
-    // line. Per-family degrade-don't-crash.
-    if (sys.env.get("SPARK_GRAFT_BENCH_DEEP").contains("1")) try {
-      // shared machinery in BenchCore; graft.BenchDeep is the preferred
-      // clean-evidence path (one fresh JVM per family — see its scaladoc)
-      def family(tag: String, names: Seq[String], pts: Seq[(Long, String)],
-          extras: String => String = _ => ""): String =
-        BenchCore.deepFamily(spark, tag, names, pts, benchRuns, extras)
-      val deepNs = Seq(5000L, 50000L, 500000L)
-      val embedPts = deepNs.map { n =>
-        val d = s"/tmp/graft_synth_embed_$n"
-        graft.sources.SyntheticEmbeddings.writePoint(spark, d, n); n -> d
-      }
-      val docPts = deepNs.map { n =>
-        val d = s"/tmp/graft_synth_docs_zipf_$n"
-        if (!new java.io.File(s"$d/documents.parquet").exists())
-          graft.sources.SyntheticDocs.zipfCorpus(spark, n)
-            .write.mode("overwrite").parquet(s"$d/documents.parquet")
-        n -> d
-      }
-      // 100× events decade (round-10 verdict task #4): 600k → 6M → 60M
-      // events (lineitem at the harness 6× ratio → 360M rows at the top)
-      // for the reference-derived KPI star join and sessionization.
-      val eventsPts = Seq(600000L, 6000000L, 60000000L).map { n =>
-        val d = s"/tmp/graft_synth_events_$n"
-        graft.sources.SyntheticEvents.writePoint(spark, d, n); n -> d
-      }
-      val embedJson = family("embed", BenchSets.deepEmbed, embedPts, d => {
-        val ca = operators.Similarity.embedCandidateCount(spark, d, adaptive = true)
-        spark.catalog.clearCache(); s""","cand_adaptive":$ca"""
-      })
-      val lshJson = family("lsh", BenchSets.deepLsh, docPts, d => {
-        val c = operators.NearDup.lshCandidateCount(spark, d)
-        spark.catalog.clearCache()
-        val p = operators.NearDup.lshPrunedCandidateCount(spark, d)
-        spark.catalog.clearCache()
-        s""","candidates":$c,"candidates_pruned":$p"""
-      })
-      val textJson = family("text", BenchSets.deepText, docPts)
-      val eventsJson = family("events", BenchSets.deepEvents, eventsPts)
-      val out = new java.io.PrintWriter("BENCH_DEEP.json", "UTF-8")
-      try out.println(
-        s"""{"runs":$benchRuns,"calib_spin_sec":$calib,$embedJson,$lshJson,$textJson,$eventsJson}""")
-      finally out.close()
-      System.err.println("[bench] deep pass written to BENCH_DEEP.json")
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] deep pass failed: ${e.getMessage}")
-    }
     // Round-5 verdict ask #2: the driver's tail capture truncated the
     // FRONT of the old one-giant-line output (scale evidence grew past the
     // capture window), losing the primary metric. The scale-evidence blob

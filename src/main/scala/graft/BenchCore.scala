@@ -1,10 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Shared measurement machinery for the bench mains ([[Bench]],
-  * [[BenchDeep]]): calibration spin, best-of-N query timing, the
-  * endpoint-suspect re-timer, and the calib-gated α/monotonicity fits.
+/** The one SparkSession factory every main uses, plus the measurement
+  * machinery shared by the bench mains ([[Bench]], [[BenchWide]],
+  * [[BenchDeep]], [[TimeQueries]]): warm-up, best-of-N settings,
+  * calibration spin, best-of-N query timing, the endpoint-suspect
+  * re-timer, and the calib-gated α/monotonicity fits.
   * Extracted (round-12) so each deep decade family can run in its OWN
   * fresh JVM — the round-11 measured phantom (29.2 s vs 3.2 s on identical
   * work, flat calib) is within-JVM state that per-point calibration cannot
@@ -29,14 +31,17 @@ private[graft] object BenchCore {
 
   /** Best-of-N per query; min over SUCCESSFUL runs, -1 when every run
     * failed (never a timed failure). Cache cleared between runs so each
-    * timing pays its own materialization. */
-  def timeQs(spark: SparkSession, qs: Seq[Q], dir: String, runs: Int): Seq[(String, Double)] =
+    * timing pays its own materialization. A failed run is logged to
+    * stderr and passed to `onFail`. */
+  def timeQs(spark: SparkSession, qs: Seq[Q], dir: String, runs: Int,
+      onFail: (Q, Throwable) => Unit = (_, _) => ()): Seq[(String, Double)] =
     qs.map { q =>
       val ts = (1 to runs).flatMap { _ =>
         val t0 = System.nanoTime()
         val ok = try { q.run(spark, dir).count(); true }
           catch { case e: Throwable =>
             System.err.println(s"[bench] ${q.name} FAILED at $dir: ${e.toString.take(200)}")
+            onFail(q, e)
             false
           }
         spark.catalog.clearCache()
@@ -131,20 +136,49 @@ private[graft] object BenchCore {
     s""""$tag":null"""
   }
 
-  /** The bench SparkSession (one config shared by every bench main). */
+  /** The SparkSession of every main: `local[n]` with n shuffle partitions,
+    * n = SPARK_GRAFT_CPUS, else the host's available processors. The graft
+    * extensions are not configured here: GraftExtensionsProvider
+    * (META-INF/services) registers them once on every session. */
   def session(appName: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      // events.parquet is TIMESTAMP(NANOS); read as long, see Tables.events
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Synthetic-corpus decade points: `/tmp/graft_synth_docs_<tag>_<n>` per
+    * row count n, written by `gen` only when absent. */
+  def docPoints(spark: SparkSession, tag: String, ns: Seq[Long],
+      gen: (SparkSession, Long) => DataFrame): Seq[(Long, String)] = ns.map { n =>
+    val d = s"/tmp/graft_synth_docs_${tag}_$n"
+    if (!new java.io.File(s"$d/documents.parquet").exists())
+      gen(spark, n).write.mode("overwrite").parquet(s"$d/documents.parquet")
+    n -> d
+  }
+
+  /** Best-of-N for the bench mains: SPARK_GRAFT_BENCH_RUNS when it is a
+    * positive integer, else `default`. */
+  def benchRuns(default: Int): Int = sys.env.get("SPARK_GRAFT_BENCH_RUNS")
+    .flatMap(_.toIntOption).filter(_ > 0).getOrElse(default)
+
+  /** Classloading + parquet-footer warm-up: each query runs once at `dir`
+    * (failures ignored) and its persists are dropped, so the timed runs
+    * measure the plan, not classloading. */
+  def warmUp(spark: SparkSession, qs: Seq[Q], dir: String = "/root/testdata/sf0.001"): Unit =
+    qs.foreach { q =>
+      try q.run(spark, dir).count()
+      catch { case _: Throwable => () }
+      spark.catalog.clearCache()
+    }
 }

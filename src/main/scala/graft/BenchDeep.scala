@@ -18,9 +18,9 @@ package graft
   *   runMain graft.BenchDeep merge
   *     — assembles the per-family fragments into BENCH_DEEP.json.
   *
-  * SPARK_GRAFT_BENCH_RUNS sets best-of-N (default 2). The in-process deep
-  * pass in [[Bench]] (SPARK_GRAFT_BENCH_DEEP=1) remains for one-shot runs;
-  * this main is the clean-evidence path. */
+  * SPARK_GRAFT_BENCH_RUNS sets best-of-N (default 2). This main is the
+  * only deep-decade path: [[Bench]] times the 5k-50k decades in its own
+  * JVM and stops there. */
 object BenchDeep {
 
   private val DeepNs = Seq(5000L, 50000L, 500000L)
@@ -31,8 +31,7 @@ object BenchDeep {
     val family = args.headOption.getOrElse("merge")
     if (family == "merge") { merge(); return }
     require(Families.contains(family), s"unknown family '$family' (${Families.mkString("/")})")
-    val benchRuns = sys.env.get("SPARK_GRAFT_BENCH_RUNS")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(2)
+    val benchRuns = BenchCore.benchRuns(2)
     val ptsOverride = args.lift(1).map(_.split(",").toSeq.map(_.trim.toLong))
     val spark = BenchCore.session(s"graft-bench-deep-$family")
 
@@ -42,13 +41,7 @@ object BenchDeep {
       case "text" => BenchSets.deepText
       case "events" => BenchSets.deepEvents
     }
-    val qs = Registry.all.filter(q => names.contains(q.name))
-    // classloading/footer warmup at the smallest SF
-    qs.foreach { q =>
-      try q.run(spark, "/root/testdata/sf0.001").count()
-      catch { case _: Throwable => () }
-    }
-    spark.catalog.clearCache()
+    BenchCore.warmUp(spark, Registry.all.filter(q => names.contains(q.name)))
 
     // generate every point FIRST (idempotent), then settle: the round-11
     // events contamination was the 600k calib stamped while the JVM was
@@ -65,7 +58,8 @@ object BenchDeep {
           spark.catalog.clearCache(); s""","cand_adaptive":$ca"""
         })
       case "lsh" =>
-        val pts = docPoints(spark, ptsOverride.getOrElse(DeepNs))
+        val pts = BenchCore.docPoints(spark, "zipf", ptsOverride.getOrElse(DeepNs),
+          sources.SyntheticDocs.zipfCorpus(_, _))
         settle(spark)
         BenchCore.deepFamily(spark, "lsh", names, pts, benchRuns, d => {
           val c = operators.NearDup.lshCandidateCount(spark, d)
@@ -75,7 +69,8 @@ object BenchDeep {
           s""","candidates":$c,"candidates_pruned":$p"""
         })
       case "text" =>
-        val pts = docPoints(spark, ptsOverride.getOrElse(DeepNs))
+        val pts = BenchCore.docPoints(spark, "zipf", ptsOverride.getOrElse(DeepNs),
+          sources.SyntheticDocs.zipfCorpus(_, _))
         settle(spark)
         // setsim variance decomposition (round-13 verdict task #4): time
         // the candidate surface alone vs the full verify, and record the
@@ -105,15 +100,6 @@ object BenchDeep {
       s"""{"runs":$benchRuns,"fresh_jvm":true,"calib_spin_sec":${BenchCore.calibSpin()},$json}""")
     System.err.println(s"[bench-deep] wrote BENCH_DEEP_$family.json")
     spark.stop()
-  }
-
-  private def docPoints(spark: org.apache.spark.sql.SparkSession,
-      ns: Seq[Long]): Seq[(Long, String)] = ns.map { n =>
-    val d = s"/tmp/graft_synth_docs_zipf_$n"
-    if (!new java.io.File(s"$d/documents.parquet").exists())
-      sources.SyntheticDocs.zipfCorpus(spark, n)
-        .write.mode("overwrite").parquet(s"$d/documents.parquet")
-    n -> d
   }
 
   /** Post-generation settle: force GC, then spin until two consecutive

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Wide-tier benchmark: times EVERY registered query (all of Registry.all,
   * not just the 19 bench=true headliners) at SPARK_GRAFT_SF_DIR and writes
   * BENCH_WIDE.json — the coverage tier whose absence let two pathologies
@@ -19,47 +17,16 @@ import org.apache.spark.sql.SparkSession
 object BenchWide {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-wide")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val runs = BenchCore.benchRuns(1)
+    val spark = BenchCore.session("graft-bench-wide")
 
     val all = Registry.all
-    // classloading/footer warmup at the smallest SF
-    all.foreach { q =>
-      try q.run(spark, "/root/testdata/sf0.001").count()
-      catch { case _: Throwable => () }
-    }
-    spark.catalog.clearCache()
+    BenchCore.warmUp(spark, all)
 
     var errors = List.empty[String]
-    val timed = all.map { q =>
-      // min over SUCCESSFUL runs only (round-10 advice: with runs > 1 a
-      // query failing one run but succeeding another reported min(-1, t)
-      // = -1, discarding the valid measurement); -1 only when every run
-      // failed.
-      val ts = (1 to runs).flatMap { _ =>
-        val t0 = System.nanoTime()
-        val ok = try { q.run(spark, sfDir).count(); true }
-          catch { case e: Throwable =>
-            errors ::= s"""{"query":"${q.name}","error":${jsonStr(e.toString.take(200))}}"""
-            false
-          }
-        spark.catalog.clearCache()
-        if (ok) Some((System.nanoTime() - t0) / 1e9) else None
-      }
-      q.name -> (if (ts.nonEmpty) ts.min else -1.0)
-    }.sortBy(-_._2)
+    val timed = BenchCore.timeQs(spark, all, sfDir, runs, (q, e) =>
+      errors ::= s"""{"query":"${q.name}","error":${jsonStr(e.toString.take(200))}}""")
+      .sortBy(-_._2)
 
     // ---- Regression delta vs the prior committed BENCH_WIDE.json (round-10
     // verdict task #7): flag >2× per-query swings in either direction so a
@@ -96,17 +63,7 @@ object BenchWide {
       """"delta_vs_prior":null,"""
     }
 
-    val calib = {
-      def spin(): Double = {
-        val t0 = System.nanoTime()
-        var x = 88172645463325252L
-        var i = 0
-        while (i < 200000000) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
-        if (x == 0) println("")
-        (System.nanoTime() - t0) / 1e9
-      }
-      spin(); (1 to 3).map(_ => spin()).min
-    }
+    val calib = BenchCore.calibSpin()
     val qs = timed.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val total = timed.collect { case (_, v) if v > 0 => v }.sum
     val line =

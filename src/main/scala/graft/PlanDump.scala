@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the executed physical plan of registered queries.
   * Usage: runMain graft.PlanDump <sfDir> <name>[,<name>...] [chars] */
 object PlanDump {
@@ -9,15 +7,7 @@ object PlanDump {
     val dir = args(0)
     val names = args(1).split(",").toSeq
     val limit = args.lift(2).map(_.toInt).getOrElse(5000)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = BenchCore.session("graft-plan-dump")
     val exec = args.lift(3).contains("exec")
     names.foreach { n =>
       println(s"===== $n =====")

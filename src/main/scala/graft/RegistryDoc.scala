@@ -31,11 +31,12 @@ object BenchSets {
       embedDecade.map(_ -> "embed") ++ textZipfDecade.map(_ -> "text-zipf") ++
       textV2Decade.map(_ -> "text-v2")).toMap
 
-  /** 100× deep decade (5k → 50k → 500k, SPARK_GRAFT_BENCH_DEEP=1): the
-    * SCALE-DESIGNED flagships only — each family's fixed-parameter
-    * siblings (fixed-plane kNN, uncapped TextRank, unpruned materialize)
-    * stop at the 50k decade BY DESIGN, because their cost model is the
-    * quadratic the adaptive/pruned/capped paths exist to avoid. */
+  /** 100× deep decade (5k → 50k → 500k, timed by [[BenchDeep]], one fresh
+    * JVM per family): the SCALE-DESIGNED flagships only — each family's
+    * fixed-parameter siblings (fixed-plane kNN, uncapped TextRank, unpruned
+    * materialize) stop at the 50k decade BY DESIGN, because their cost
+    * model is the quadratic the adaptive/pruned/capped paths exist to
+    * avoid. */
   val deepEmbed: Seq[String] =
     Seq("q_sim_knn_lsh_adaptive", "q_dedup_embed_cos", "q_dedup_embed_cos_probe",
       "q_embed_hard_negatives", "q_split_semantic_leakage")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (like PlanDump): best-of-N wall times for an arbitrary
   * comma-separated registry query list — the source of the PLANS.md
   * engine-vs-DuckDB tables. Usage:
@@ -14,14 +12,7 @@ object TimeQueries {
   def main(args: Array[String]): Unit = {
     val (sfDir, names) = (args(0), args(1).split(",").toSeq)
     val runs = args.lift(2).map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = BenchCore.session("graft-time-queries")
     val wantBytes = sys.env.get("SPARK_GRAFT_SHUFFLE_BYTES").contains("1")
     val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
     if (wantBytes) spark.sparkContext.addSparkListener(
@@ -35,11 +26,7 @@ object TimeQueries {
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val qs = names.map(Registry.byName)
     println(f"CALIB ${BenchCore.calibSpin()}%7.3f")
-    qs.foreach { q => // warmup: classload + the TARGET dir's parquet footers
-      try q.run(spark, sfDir).count()
-      catch { case _: Throwable => () }
-      spark.catalog.clearCache()
-    }
+    BenchCore.warmUp(spark, qs, sfDir) // the TARGET dir's parquet footers
     qs.foreach { q =>
       val samples = (1 to runs).map { _ =>
         shuffleBytes.set(0L)

@@ -125,10 +125,12 @@ object RewriteSelfDot extends org.apache.spark.sql.catalyst.rules.Rule[
     }
 }
 
-/** Session extension registering the engine's native functions and
-  * optimizer rules, the public `SparkSessionExtensions` path: sessions add
-  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")` and
-  * call them via `call_function("vec_dot", a, b)` or SQL. */
+/** Session extension registering the engine's native functions, optimizer
+  * rules and planner strategy; call the functions via
+  * `call_function("vec_dot", a, b)` or SQL. [[GraftExtensionsProvider]]
+  * registers it on every session, so do not also set `spark.sql.extensions`
+  * to it: that registers everything twice (each rule and strategy runs
+  * twice, and each function is replaced by its own copy). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((
@@ -160,9 +162,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 /** ServiceLoader auto-registration (Spark 3.2+ reads
   * `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`):
-  * every session created with this jar on the classpath gets the engine
-  * functions even without the `spark.sql.extensions` config — so a host
-  * harness constructing its own SparkSession can still run every query. */
+  * every session created with this jar on the classpath gets
+  * [[GraftExtensions]] exactly once — the mains' sessions
+  * (`BenchCore.session`), the test suite's, and a host harness's own. */
 class GraftExtensionsProvider extends org.apache.spark.sql.SparkSessionExtensionsProvider {
   override def apply(ext: SparkSessionExtensions): Unit = new GraftExtensions()(ext)
 }

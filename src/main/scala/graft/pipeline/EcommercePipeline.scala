@@ -46,6 +46,23 @@ object EcommercePipeline {
   /** A table's counts: rows, nulls per required field (schema order), and
     * key values that repeat an earlier one (0 for a table without a key). */
   private final case class Audit(rows: Long, nulls: Seq[(String, Long)], repeatedKeys: Long)
+
+  /** Shared category-KPI body (no orderBy — a streaming aggregation cannot
+    * sort; the batch wrapper adds it): the batch [[EcommercePipeline.categoryKpis]]
+    * and the streaming `EventStreams.kpiCategoryStream` are one definition
+    * in two execution modes. */
+  private[graft] def categoryKpiAgg(orderItems: DataFrame, orders: DataFrame,
+      products: DataFrame): DataFrame =
+    orderItems.alias("oi")
+      .join(orders.alias("o"), col("oi.order_id") === col("o.order_id"), "inner")
+      .join(broadcast(products.alias("p")), col("oi.product_id") === col("p.id"), "inner")
+      .withColumn("order_date", to_date(col("oi.created_at")))
+      .groupBy(col("p.category"), col("order_date"))
+      .agg(
+        round(sum(col("oi.sale_price")), 2).as("daily_revenue"),
+        round(avg(col("oi.sale_price")), 2).as("avg_order_value"),
+        round(count(when(col("oi.status") === "returned", 1)) / count(lit(1)) * 100, 2)
+          .as("avg_return_rate"))
 }
 
 final class EcommercePipeline(spark: SparkSession, dataDir: String) {
@@ -133,21 +150,9 @@ final class EcommercePipeline(spark: SparkSession, dataDir: String) {
   /** Category-level KPIs (transform.py:94-121; golden rows notebook cell 13).
     * Output schema: (category, order_date, daily_revenue, avg_order_value,
     * avg_return_rate). */
-  def categoryKpis: DataFrame = {
-    val oi = orderItems.alias("oi")
-    val o = orders.alias("o")
-    val p = products.alias("p")
-    oi.join(o, col("oi.order_id") === col("o.order_id"), "inner")
-      .join(broadcast(p), col("oi.product_id") === col("p.id"), "inner")
-      .withColumn("order_date", to_date(col("oi.created_at")))
-      .groupBy(col("p.category"), col("order_date"))
-      .agg(
-        round(sum(col("oi.sale_price")), 2).as("daily_revenue"),
-        round(avg(col("oi.sale_price")), 2).as("avg_order_value"),
-        round(count(when(col("oi.status") === "returned", 1)) / count(lit(1)) * 100, 2)
-          .as("avg_return_rate"))
+  def categoryKpis: DataFrame =
+    EcommercePipeline.categoryKpiAgg(orderItems, orders, products)
       .orderBy(col("category"), col("order_date"))
-  }
 
   /** Order-level KPIs (transform.py:123-147; golden rows notebook cell 17).
     * Quirks preserved: return_rate numerator and total_items_sold both count

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Events
+import graft.pipeline.EcommercePipeline
 import graft.schema.Schemas
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -13,9 +14,11 @@ import org.apache.spark.sql.types._
   * no external orchestration needed (SURVEY.md §1.3, §2.8).
   *
   * The aggregation bodies are shared with the batch operators
-  * ([[graft.operators.Events]]) — one definition, two execution modes —
-  * which is what makes the streaming results provably equal to the batch
-  * results (tested by StreamingSpec's replay).
+  * ([[graft.operators.Events]], [[graft.operators.Kpis]], and
+  * [[graft.pipeline.EcommercePipeline]] for the category KPIs) — one
+  * definition, two execution modes — which is what makes the streaming
+  * results provably equal to the batch results (tested by the replay
+  * specs).
   *
   * Watermark policy: the reference never defines late-data semantics (its
   * "streaming" re-runs batch over complete files), so 48h is OUR documented
@@ -124,28 +127,20 @@ object EventStreams {
     * the unbounded stream (files arrive one per micro-batch, exactly the
     * S3-arrival model), orders/products are static dimensions →
     * stream-static joins, grouped aggregation maintained incrementally in
-    * `complete`/`update` output mode. No orderBy: sorting is the sink's
-    * concern in a continuous query. */
+    * `complete`/`update` output mode. The body is the batch pipeline's
+    * ([[graft.pipeline.EcommercePipeline.categoryKpiAgg]]) without its
+    * orderBy: sorting is the sink's concern in a continuous query. */
   def kpiCategoryStream(spark: SparkSession, dataDir: String,
       maxFilesPerTrigger: Int = 1): DataFrame = {
     val items = spark.readStream
       .schema(Schemas.orderItems)
       .option("header", "true")
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .csv(s"$dataDir/order_items").alias("oi")
+      .csv(s"$dataDir/order_items")
     val orders = spark.read.schema(Schemas.orders)
-      .option("header", "true").csv(s"$dataDir/orders").alias("o")
+      .option("header", "true").csv(s"$dataDir/orders")
     val products = spark.read.schema(Schemas.products)
-      .option("header", "true").csv(s"$dataDir/products.csv").alias("p")
-    items
-      .join(orders, col("oi.order_id") === col("o.order_id"), "inner")
-      .join(broadcast(products), col("oi.product_id") === col("p.id"), "inner")
-      .withColumn("order_date", to_date(col("oi.created_at")))
-      .groupBy(col("p.category"), col("order_date"))
-      .agg(
-        round(sum(col("oi.sale_price")), 2).as("daily_revenue"),
-        round(avg(col("oi.sale_price")), 2).as("avg_order_value"),
-        round(count(when(col("oi.status") === "returned", 1)) / count(lit(1)) * 100, 2)
-          .as("avg_return_rate"))
+      .option("header", "true").csv(s"$dataDir/products.csv")
+    EcommercePipeline.categoryKpiAgg(items, orders, products)
   }
 }

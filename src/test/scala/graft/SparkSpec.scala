@@ -4,8 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole suite (JVM-wide; Spark session
-  * startup dominates test wall-clock otherwise). UTC + small shuffle
-  * partitioning mirror Verify/Bench configuration. */
+  * startup dominates test wall-clock otherwise). UTC and the nanos-as-long
+  * parquet read match `BenchCore.session`; the core and shuffle-partition
+  * counts are a fixed 4 so test plans do not depend on the host's cores.
+  * The graft extensions come from GraftExtensionsProvider, as for every
+  * session. */
 object SparkSpec {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -14,7 +17,6 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

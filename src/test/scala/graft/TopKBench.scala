@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,15 +9,10 @@ import org.apache.spark.sql.functions._
 object TopKBench {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // measure the UNREWRITTEN window form (else RewriteWindowTopK routes
-      // the window variant through the same native operator)
-      .config("spark.graft.topkRewrite.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = BenchCore.session("graft-topk-bench")
+    // measure the UNREWRITTEN window form (else RewriteWindowTopK routes
+    // the window variant through the same native operator)
+    spark.conf.set("spark.graft.topkRewrite.enabled", "false")
     def li = spark.read.parquet(s"$dir/lineitem.parquet").select(
       col("l_returnflag").as("g"), col("l_orderkey").as("o"),
       col("l_linenumber").as("n"), col("l_extendedprice").as("p"))

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Native vec_dot expression: value correctness, codegen/interpreted
-  * agreement, null propagation, SQL registration via GraftExtensions. */
+  * agreement, null propagation, SQL registration via GraftExtensions, and
+  * that registration happening exactly once per session. */
 class VectorExpressionSpec extends SparkSuite {
   import spark.implicits._
 
@@ -93,5 +94,25 @@ class VectorExpressionSpec extends SparkSuite {
     }
     assert(e.getMessage.toLowerCase.contains("foldable") ||
       e.getMessage.toLowerCase.contains("data type mismatch"))
+  }
+
+  test("GraftExtensions is registered once: functions resolve, each rule and strategy once") {
+    val scalars = spark.sql(
+      "SELECT vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)), vec_norm2(array(3.0d, 4.0d))," +
+        " lev_within('kitten', 'sitting', 3)," +
+        " vec_argmin_sqdist(array(3L, 4L), array(array(0L, 0L), array(3L, 4L)))").head()
+    assert(scalars.getDouble(0) === 11.0)
+    assert(scalars.getDouble(1) === 25.0)
+    assert(scalars.getLong(3) === 0L * 64 + 1)
+    val agg = spark.sql("SELECT max_by_longs(o, v) AS m FROM VALUES (1L, 10L), (2L, 20L) AS t(o, v)")
+      .selectExpr("m.v1").head().getLong(0)
+    assert(agg === 20L)
+
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    val strategies = state.planner.extraPlanningStrategies
+    assert(strategies.count(_ eq graft.plans.TopKStrategy) === 1)
+    val rules = state.optimizer.extendedOperatorOptimizationRules
+    assert(rules.count(_ eq graft.functions.RewriteSelfDot) === 1)
+    assert(rules.count(_ eq graft.plans.RewriteWindowTopK) === 1)
   }
 }
