@@ -28,9 +28,15 @@ object Tables {
   def supplier(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "supplier")
   def nation(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "nation")
   def region(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "region")
-  /** events.parquet's `ts` physical type varies by generator era, so this is
-    * the ONE normalization point — every batch consumer reads events through
-    * here and always sees a session-tz TIMESTAMP (micros, UTC sessions):
+  /** The events table with `ts` normalized by [[normalizeTs]]: every batch
+    * consumer reads events through here. */
+  def events(spark: SparkSession, sfDir: String): DataFrame =
+    normalizeTs(load(spark, sfDir, "events"))
+
+  /** The ONE `ts` normalization point, for batch and streaming alike (the
+    * stream monitors apply it to their file sources): events parquet's `ts`
+    * physical type varies by generator era, and after this every consumer
+    * sees a session-tz TIMESTAMP (micros, UTC sessions):
     *  - TIMESTAMP(NANOS): Spark can't represent nanos and by default refuses
     *    to read; the sessions set `spark.sql.legacy.parquet.nanosAsLong=true`
     *    so the column arrives as LongType nanos, floor-divided to exact
@@ -39,15 +45,16 @@ object Tables {
     *  - TIMESTAMP(MICROS, isAdjustedToUTC=false): Spark 4 infers
     *    TIMESTAMP_NTZ, which time-arithmetic like `unix_micros` rejects;
     *    cast to the session-tz type — a value-identity under the UTC
-    *    sessions, and DuckDB reads the same naive micros directly. */
-  def events(spark: SparkSession, sfDir: String): DataFrame = {
-    val raw = load(spark, sfDir, "events")
+    *    sessions, and DuckDB reads the same naive micros directly.
+    * A consumer that needs integer micros takes `unix_micros(col("ts"))`
+    * of the result. */
+  def normalizeTs(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    raw.schema("ts").dataType match {
-      case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => raw
+    df.schema("ts").dataType match {
+      case LongType => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
+      case _ => df
     }
   }
   def documents(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "documents")

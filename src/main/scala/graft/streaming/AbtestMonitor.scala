@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Inference
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
@@ -62,26 +62,16 @@ object AbtestMonitor {
     * the single-row batch-exact statistic swap-published into `stateDir`
     * after every micro-batch. */
   def monitor(spark: SparkSession, srcDir: String, stateDir: String,
-      checkpointDir: String, maxFilesPerTrigger: Int = 1,
+      checkpointDir: String,
       schema: Option[org.apache.spark.sql.types.StructType] = None): StreamingQuery = {
     import spark.implicits._
-    val raw = UpsertSink.fileStream(spark, srcDir, maxFilesPerTrigger, schema)
-    val evs = raw
+    val evs = UpsertSink.fileStream(spark, srcDir, schema)
       .select(col("user_id").cast("long").as("user_id"),
         when(col("event_type") === "purchase" &&
           col("value") >= Inference.ConvThreshold, 1).otherwise(0).as("conv"))
       .as[Ev]
-    userFlags(spark, evs).toDF().writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        UpsertSink.upsertBatch(batch, Seq("user_id"), stateDir + "_flags")
-        val flags = batch.sparkSession.read.parquet(stateDir + "_flags")
-        val result = Inference.abtestFromFlags(flags)
-        val tmp = stateDir + ".tmp"
-        result.write.mode("overwrite").parquet(tmp)
-        UpsertSink.swapInto(tmp, stateDir)
-      }
-      .start()
+    UpsertSink.keyedParquetUpsert(userFlags(spark, evs).toDF(), Seq("user_id"),
+      stateDir + "_flags", checkpointDir,
+      Seq(stateDir -> Inference.abtestFromFlags))
   }
 }

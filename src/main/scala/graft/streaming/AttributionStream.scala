@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.Tables
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
@@ -15,7 +16,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * each batch re-derives every purchase's winning channel (latest touch
   * with ts ≤ purchase ts; ties to higher event_id — the batch sort order
   * (ts, side, event_id) restated) and emits one row per purchase. The
-  * foreachBatch sink upserts per (user_id, purchase_id) — attribution
+  * keyed sink upserts per (user_id, purchase_id) — attribution
   * moves overwrite in place, and purchases never vanish, so no zero-row
   * retraction channel is needed — then recomputes the channel rollup with
   * the batch query's exact-cents arithmetic and publishes it by checked
@@ -114,41 +115,23 @@ object AttributionStream {
     * the published channel rollup (batch-exact arithmetic) swapped into
     * `stateDir` after every micro-batch. */
   def attributionMonitor(spark: SparkSession, srcDir: String, stateDir: String,
-      checkpointDir: String, maxFilesPerTrigger: Int = 1,
+      checkpointDir: String,
       schema: Option[org.apache.spark.sql.types.StructType] = None,
       touchCap: Option[Int] = DefaultTouchCap): StreamingQuery = {
     import spark.implicits._
-    val raw = UpsertSink.fileStream(spark, srcDir, maxFilesPerTrigger, schema)
-    // mirror sources.Tables.events: nanos-as-long parquet truncates to
-    // micros; NTZ (micros, no tz — inferred-schema files) casts to the
-    // session-tz type first so unix_micros accepts it (value-identity
-    // under the UTC sessions); session-tz timestamps pass through
-    val tsUs = raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => expr("ts div 1000")
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        unix_micros(col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => unix_micros(col("ts"))
-    }
-    val evs = raw
-      .select(col("user_id").cast("long").as("user_id"), tsUs.as("ts_us"),
+    val evs = Tables.normalizeTs(UpsertSink.fileStream(spark, srcDir, schema))
+      .select(col("user_id").cast("long").as("user_id"),
+        unix_micros(col("ts")).as("ts_us"),
         col("event_id").cast("long").as("event_id"), col("event_type"),
         floor(col("value") * 100 + 0.5).cast("long").as("cents"))
       .as[Ev]
-    attributedPurchases(spark, evs, touchCap).toDF().writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        UpsertSink.upsertBatch(batch, Seq("user_id", "purchase_id"), stateDir + "_rows")
-        val sess = batch.sparkSession
-        val rollup = sess.read.parquet(stateDir + "_rows")
-          .groupBy(col("channel"))
-          .agg(count(lit(1)).as("n_purchases"),
-            (sum(col("cents")) / 100.0).as("revenue"))
-        // channels can vanish when a purchase re-attributes — checked swap
-        val tmp = stateDir + ".tmp"
-        rollup.write.mode("overwrite").parquet(tmp)
-        UpsertSink.swapInto(tmp, stateDir)
-      }
-      .start()
+    // channels can vanish when a purchase re-attributes, so the rollup is
+    // a view (swapped whole), not an upsert
+    UpsertSink.keyedParquetUpsert(attributedPurchases(spark, evs, touchCap).toDF(),
+      Seq("user_id", "purchase_id"), stateDir + "_rows", checkpointDir,
+      Seq(stateDir -> (rows => rows
+        .groupBy(col("channel"))
+        .agg(count(lit(1)).as("n_purchases"),
+          (sum(col("cents")) / 100.0).as("revenue")))))
   }
 }

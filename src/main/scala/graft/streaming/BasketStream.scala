@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.functions.Rounding.roundN
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
@@ -114,33 +114,21 @@ object BasketStream {
       }
   }
 
-  /** File-source stream over lineitem parquet files; pass `schema` to
-    * start the monitor before the first file lands. */
-  def lineitemStream(spark: SparkSession, srcDir: String,
-      maxFilesPerTrigger: Int = 1,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame =
-    UpsertSink.fileStream(spark, srcDir, maxFilesPerTrigger, schema)
-
   /** Start the monitor: presence/pair rows replace-upserted into
     * `stateDir`_pairs, the published lift table (batch-exact arithmetic,
     * MinSupport filter) atomically swapped into `stateDir` per batch. */
   def liftMonitor(spark: SparkSession, srcDir: String, stateDir: String,
-      checkpointDir: String, maxFilesPerTrigger: Int = 1,
+      checkpointDir: String,
       schema: Option[org.apache.spark.sql.types.StructType] = None,
       basketCap: Option[Int] = DefaultBasketCap): StreamingQuery = {
     import spark.implicits._
-    val items = lineitemStream(spark, srcDir, maxFilesPerTrigger, schema)
+    val items = UpsertSink.fileStream(spark, srcDir, schema)
       .select(col("l_orderkey").cast("long").as("okey"),
         col("l_partkey").cast("long").as("part"))
       .as[Item]
-    orderPairs(spark, items, basketCap).toDF().writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        UpsertSink.upsertBatch(batch,
-          Seq("okey", "part_a", "part_b"), stateDir + "_pairs")
-        val sess = batch.sparkSession
-        val store = sess.read.parquet(stateDir + "_pairs")
+    UpsertSink.keyedParquetUpsert(orderPairs(spark, items, basketCap).toDF(),
+      Seq("okey", "part_a", "part_b"), stateDir + "_pairs", checkpointDir,
+      Seq(stateDir -> { store =>
         val presence = store.filter(col("part_b") === PairSentinel)
         val nOrders = presence.select(col("okey")).distinct()
           .agg(count(lit(1)).as("n_orders"))
@@ -151,17 +139,13 @@ object BasketStream {
           .groupBy(col("part_a"), col("part_b"))
           .agg(count(lit(1)).as("n_pair"))
           .filter(col("n_pair") >= graft.operators.Analytics.MinSupport)
-        val lift = pairs
+        pairs
           .join(itemCounts.select(col("part").as("part_a"), col("n_item").as("n_a")), "part_a")
           .join(itemCounts.select(col("part").as("part_b"), col("n_item").as("n_b")), "part_b")
           .crossJoin(broadcast(nOrders))
           .select(col("part_a"), col("part_b"), col("n_pair"),
             roundN(col("n_pair").cast("double") * col("n_orders") /
               (col("n_a") * col("n_b")), 6).as("lift"))
-        val tmp = stateDir + ".tmp"
-        lift.write.mode("overwrite").parquet(tmp)
-        UpsertSink.swapInto(tmp, stateDir)
-      }
-      .start()
+      }))
   }
 }

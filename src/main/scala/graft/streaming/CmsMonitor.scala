@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.{Sketches, TextAnalysis}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -16,12 +16,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * the sketch's never grows at all).
   *
   * Each micro-batch upserts the touched cells into the keyed state dir
-  * ([[UpsertSink.upsertBatch]]), then re-estimates a fixed PROBE
+  * ([[UpsertSink.keyedParquetUpsert]]), then re-estimates a fixed PROBE
   * watchlist from full cell state with the IDENTICAL batch estimator
   * (Sketches.cmsEstimateOf) — which is what makes replay ≡ batch exact
   * (CmsMonitorSpec, incl. checkpoint restart). The published artifacts
   * are both sketch-sized: the cells table and the per-probe-word
-  * estimate table.
+  * estimate table, a view of the cells swapped whole each batch (the
+  * probe list is fixed and cells only accumulate, so no word ever leaves
+  * it).
   *
   * Why cells equal the batch sketch: the batch side sums pre-aggregated
   * per-word counts into cells; the stream side counts word occurrences
@@ -36,31 +38,24 @@ object CmsMonitor {
   val DefaultProbes: Seq[String] = Seq("data", "vector", "merge", "scan")
 
   def cmsMonitor(spark: SparkSession, srcDir: String, stateDir: String,
-      checkpointDir: String, maxFilesPerTrigger: Int = 1,
+      checkpointDir: String,
       schema: Option[org.apache.spark.sql.types.StructType] = None,
       probeWords: Seq[String] = DefaultProbes): StreamingQuery = {
-    val cells = UpsertSink.fileStream(spark, srcDir, maxFilesPerTrigger, schema)
+    val cells = UpsertSink.fileStream(spark, srcDir, schema)
       .select(explode(split(TextAnalysis.normText(col("text")), " ")).as("word"))
       .select(explode(sequence(lit(0), lit(Sketches.CmsDepth - 1))).as("d"),
         col("word"))
       .select(col("d"), Sketches.cmsBucket(col("d"), col("word")).as("bucket"))
       .groupBy(col("d"), col("bucket")).agg(count(lit(1)).as("cnt"))
 
-    cells.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // update-mode rows carry the refreshed CUMULATIVE count for every
-        // cell touched this micro-batch; merge, then re-estimate the
-        // watchlist from full sketch state
-        UpsertSink.upsertBatch(batch, Seq("d", "bucket"), stateDir + "_cells")
-        val sess = batch.sparkSession
+    // update-mode rows carry the refreshed CUMULATIVE count for every cell
+    // touched this micro-batch; merge, then re-estimate the watchlist from
+    // full sketch state
+    UpsertSink.keyedParquetUpsert(cells, Seq("d", "bucket"), stateDir + "_cells",
+      checkpointDir, Seq(stateDir -> { store =>
+        val sess = store.sparkSession
         import sess.implicits._
-        val est = Sketches.cmsEstimateOf(
-          sess.read.parquet(stateDir + "_cells"),
-          probeWords.toDF("word"))
-        UpsertSink.upsertBatch(est, Seq("word"), stateDir)
-      }
-      .start()
+        Sketches.cmsEstimateOf(store, probeWords.toDF("word"))
+      }))
   }
 }

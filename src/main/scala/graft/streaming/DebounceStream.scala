@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.Tables
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
@@ -102,36 +103,19 @@ object DebounceStream {
     * (zeros overwrite bridged-away starts), the live burst table published
     * into `stateDir` by checked swap after every micro-batch. */
   def burstMonitor(spark: SparkSession, srcDir: String, stateDir: String,
-      checkpointDir: String, maxFilesPerTrigger: Int = 1,
+      checkpointDir: String,
       schema: Option[org.apache.spark.sql.types.StructType] = None,
       timesCap: Option[Int] = DefaultTimesCap): StreamingQuery = {
     import spark.implicits._
-    val raw = UpsertSink.fileStream(spark, srcDir, maxFilesPerTrigger, schema)
-    val tsUs = raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => expr("ts div 1000")
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        unix_micros(col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => unix_micros(col("ts"))
-    }
-    val evs = raw
+    val evs = Tables.normalizeTs(UpsertSink.fileStream(spark, srcDir, schema))
       .select(col("user_id").cast("long").as("user_id"), col("event_type"),
-        tsUs.as("ts_us"), col("event_id").cast("long").as("event_id"))
+        unix_micros(col("ts")).as("ts_us"), col("event_id").cast("long").as("event_id"))
       .as[Ev]
-    bursts(spark, evs, timesCap).toDF().writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        UpsertSink.upsertBatch(batch,
-          Seq("user_id", "event_type", "burst_start_us"), stateDir + "_bursts")
-        val live = batch.sparkSession.read.parquet(stateDir + "_bursts")
-          .filter(col("n_events") > 0)
-          .select(col("user_id"), col("event_type"),
-            timestamp_micros(col("burst_start_us")).as("burst_start"),
-            col("n_events"), col("span_us"))
-        val tmp = stateDir + ".tmp"
-        live.write.mode("overwrite").parquet(tmp)
-        UpsertSink.swapInto(tmp, stateDir)
-      }
-      .start()
+    UpsertSink.keyedParquetUpsert(bursts(spark, evs, timesCap).toDF(),
+      Seq("user_id", "event_type", "burst_start_us"), stateDir + "_bursts", checkpointDir,
+      Seq(stateDir -> (_.filter(col("n_events") > 0)
+        .select(col("user_id"), col("event_type"),
+          timestamp_micros(col("burst_start_us")).as("burst_start"),
+          col("n_events"), col("span_us")))))
   }
 }

@@ -30,16 +30,13 @@ object DocIngest {
     StructField("n_chars", LongType)))
 
   /** File-source stream over a directory of documents parquet files. */
-  def docsStream(spark: SparkSession, srcDir: String, maxFilesPerTrigger: Int = 1): DataFrame =
-    spark.readStream
-      .schema(documentsSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
+  def docsStream(spark: SparkSession, srcDir: String): DataFrame =
+    UpsertSink.fileStream(spark, srcDir, Some(documentsSchema))
 
   /** The continuous ingest query (append mode): shared pipeline body,
     * unbounded stream in, chunk rows out. */
-  def ingest(spark: SparkSession, srcDir: String, maxFilesPerTrigger: Int = 1): DataFrame =
-    TextAnalysis.ingestChunksOf(docsStream(spark, srcDir, maxFilesPerTrigger))
+  def ingest(spark: SparkSession, srcDir: String): DataFrame =
+    TextAnalysis.ingestChunksOf(docsStream(spark, srcDir))
 
   /** Bounded-state ingest: dedup state holds only fingerprints seen within
     * `horizon` of the watermark (`dropDuplicatesWithinWatermark`), the
@@ -48,10 +45,9 @@ object DocIngest {
     * the horizon is a wall-clock contract, exactly like a crawl batch's.
     * A duplicate arriving past the horizon is re-admitted (spec-pinned);
     * [[ingest]] keeps the corpus-forever semantics. */
-  def ingestBounded(spark: SparkSession, srcDir: String, horizon: String,
-      maxFilesPerTrigger: Int = 1): DataFrame =
+  def ingestBounded(spark: SparkSession, srcDir: String, horizon: String): DataFrame =
     TextAnalysis.ingestChunksBoundedOf(
-      docsStream(spark, srcDir, maxFilesPerTrigger)
+      docsStream(spark, srcDir)
         .withColumn("ingest_time", org.apache.spark.sql.functions.current_timestamp()),
       horizon)
 }

@@ -20,6 +20,14 @@ import org.apache.spark.sql.types._
   * results provably equal to the batch results (tested by the replay
   * specs).
   *
+  * Admission is fixed at one file per micro-batch
+  * ([[UpsertSink.FilesPerTrigger]], through [[UpsertSink.fileStream]] and
+  * the category stream's CSV reader): one landed object is one trigger,
+  * the reference's S3-arrival model. It is not a parameter because nothing
+  * needs another value — the replay specs count one batch per file, and
+  * the benchmark maps a progress event's file offset to the file it
+  * landed.
+  *
   * Watermark policy: the reference never defines late-data semantics (its
   * "streaming" re-runs batch over complete files), so 48h is OUR documented
   * choice, not reference parity: with event-time windows of 1h, state for a
@@ -35,11 +43,8 @@ object EventStreams {
     StructField("value", DoubleType), StructField("props", StringType)))
 
   /** File-source stream over a directory of event parquet files. */
-  def eventsStream(spark: SparkSession, srcDir: String, maxFilesPerTrigger: Int = 1): DataFrame =
-    spark.readStream
-      .schema(eventsSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
+  def eventsStream(spark: SparkSession, srcDir: String): DataFrame =
+    UpsertSink.fileStream(spark, srcDir, Some(eventsSchema))
 
   /** Streaming tumbling-window aggregation with watermark; `update`/`append`
     * sinks both work (append emits a window once the watermark passes it).
@@ -75,8 +80,8 @@ object EventStreams {
     * no watermark needed. Shared body with the batch query, so replay ≡
     * batch exactly (StreamingSpec). */
   def anomalyStream(spark: SparkSession, srcDir: String,
-      stats: DataFrame, maxFilesPerTrigger: Int = 1): DataFrame =
-    Events.anomaliesOf(eventsStream(spark, srcDir, maxFilesPerTrigger), stats)
+      stats: DataFrame): DataFrame =
+    Events.anomaliesOf(eventsStream(spark, srcDir), stats)
 
   /** Stream-stream interval join with watermarks on BOTH sides: each click
     * pairs with the same user's views from the preceding hour. The time
@@ -113,14 +118,8 @@ object EventStreams {
     * reference's per-run DynamoDB overwrite, closed end-to-end in
     * streaming mode. */
   def kpiOrderApproxStream(spark: SparkSession, liSrcDir: String,
-      orders: DataFrame, maxFilesPerTrigger: Int = 1): DataFrame = {
-    val schema = spark.read.parquet(liSrcDir).schema
-    val li = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(liSrcDir)
-    graft.operators.Kpis.orderKpiApproxAgg(orders, li)
-  }
+      orders: DataFrame): DataFrame =
+    graft.operators.Kpis.orderKpiApproxAgg(orders, UpsertSink.fileStream(spark, liSrcDir))
 
   /** Streaming re-expression of the reference's category-KPI job
     * (transform.py:94-121) over the reference CSV layout: order_items is
@@ -130,12 +129,11 @@ object EventStreams {
     * `complete`/`update` output mode. The body is the batch pipeline's
     * ([[graft.pipeline.EcommercePipeline.categoryKpiAgg]]) without its
     * orderBy: sorting is the sink's concern in a continuous query. */
-  def kpiCategoryStream(spark: SparkSession, dataDir: String,
-      maxFilesPerTrigger: Int = 1): DataFrame = {
+  def kpiCategoryStream(spark: SparkSession, dataDir: String): DataFrame = {
     val items = spark.readStream
       .schema(Schemas.orderItems)
       .option("header", "true")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .option("maxFilesPerTrigger", UpsertSink.FilesPerTrigger)
       .csv(s"$dataDir/order_items")
     val orders = spark.read.schema(Schemas.orders)
       .option("header", "true").csv(s"$dataDir/orders")

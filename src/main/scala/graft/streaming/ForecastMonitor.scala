@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.operators.Seasonal
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.Tables
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -27,35 +28,16 @@ object ForecastMonitor {
     * fit+forecast table published at `stateDir`_holt and the
     * Holt-Winters one at `stateDir`_hw. */
   def monitor(spark: SparkSession, srcDir: String, stateDir: String,
-      checkpointDir: String, maxFilesPerTrigger: Int = 1,
+      checkpointDir: String,
       schema: Option[org.apache.spark.sql.types.StructType] = None): StreamingQuery = {
-    val raw = UpsertSink.fileStream(spark, srcDir, maxFilesPerTrigger, schema)
-    val ts = raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        timestamp_micros(expr("ts div 1000"))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        col("ts").cast(org.apache.spark.sql.types.TimestampType)
-      case _ => col("ts")
-    }
-    val daily = raw
+    val daily = Tables.normalizeTs(UpsertSink.fileStream(spark, srcDir, schema))
       .filter(col("event_type") === "purchase")
-      .select(to_date(ts).as("day"),
+      .select(to_date(col("ts")).as("day"),
         floor(col("value") * 100 + 0.5).cast("long").as("cents"))
       .groupBy(col("day"))
       .agg(sum(col("cents")).as("c"))
-    daily.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        UpsertSink.upsertBatch(batch, Seq("day"), stateDir + "_days")
-        val days = batch.sparkSession.read.parquet(stateDir + "_days")
-        val tmp = stateDir + "_holt.tmp"
-        Seasonal.holtFromDaily(days).write.mode("overwrite").parquet(tmp)
-        UpsertSink.swapInto(tmp, stateDir + "_holt")
-        val tmpHw = stateDir + "_hw.tmp"
-        Seasonal.holtWintersFromDaily(days).write.mode("overwrite").parquet(tmpHw)
-        UpsertSink.swapInto(tmpHw, stateDir + "_hw")
-      }
-      .start()
+    UpsertSink.keyedParquetUpsert(daily, Seq("day"), stateDir + "_days", checkpointDir,
+      Seq(stateDir + "_holt" -> Seasonal.holtFromDaily,
+        stateDir + "_hw" -> Seasonal.holtWintersFromDaily))
   }
 }

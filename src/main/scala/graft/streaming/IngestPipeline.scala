@@ -70,7 +70,6 @@ object IngestPipeline {
     * accumulate cached blocks. */
   def run(spark: SparkSession, srcDir: String, corpusDocs: DataFrame,
       stateDir: String, checkpointDir: String,
-      maxFilesPerTrigger: Int = 1,
       minDocs: Long = NearDup.DfPruneMinDocs): StreamingQuery = {
     val corpusShingles = NearDup.shingleTableOf(corpusDocs)
     // same size gate as NearDupStream / the batch auto family: at or above
@@ -87,7 +86,7 @@ object IngestPipeline {
       .select(col("doc_id").as("id_b"), col("band")).persist()
     val corpusSh = corpusShingles
       .select(col("doc_id").as("id_b"), col("sh").as("sh_b")).persist()
-    val query = DocIngest.docsStream(spark, srcDir, maxFilesPerTrigger)
+    val query = DocIngest.docsStream(spark, srcDir)
       .writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.functions.KmvSketch
 import graft.operators.Sketches
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -30,24 +30,17 @@ import org.apache.spark.sql.streaming.StreamingQuery
 object KmvMonitor {
 
   def kmvMonitor(spark: SparkSession, srcDir: String, stateDir: String,
-      checkpointDir: String, maxFilesPerTrigger: Int = 1,
+      checkpointDir: String,
       schema: Option[org.apache.spark.sql.types.StructType] = None): StreamingQuery = {
     val kmv = udaf(KmvSketch.aggregator)
-    val weekly = UpsertSink.fileStream(spark, srcDir, maxFilesPerTrigger, schema)
+    val weekly = UpsertSink.fileStream(spark, srcDir, schema)
       .select(Sketches.weekKey.as("wk"), col("event_type"),
         md5(col("user_id").cast("string")).as("h"))
       .groupBy(col("wk"), col("event_type"))
       .agg(kmv(col("h")).as("kmv"))
-
-    weekly.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val out = batch.select(col("wk"), col("event_type"),
-          concat_ws(",", col("kmv")).as("kmv_csv"),
-          Sketches.kmvEstimate(col("kmv")).as("est_users"))
-        UpsertSink.upsertBatch(out, Seq("wk", "event_type"), stateDir)
-      }
-      .start()
+      .select(col("wk"), col("event_type"),
+        concat_ws(",", col("kmv")).as("kmv_csv"),
+        Sketches.kmvEstimate(col("kmv")).as("est_users"))
+    UpsertSink.keyedParquetUpsert(weekly, Seq("wk", "event_type"), stateDir, checkpointDir)
   }
 }

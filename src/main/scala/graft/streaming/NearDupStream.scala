@@ -49,7 +49,6 @@ object NearDupStream {
     * with `NearDup.incrementalNearPairsAuto` on BOTH sides of a
     * test-sized gate. */
   def pairsStream(spark: SparkSession, srcDir: String, corpusDocs: DataFrame,
-      maxFilesPerTrigger: Int = 1,
       minDocs: Long = NearDup.DfPruneMinDocs): DataFrame = {
     val corpusShingles = NearDup.shingleTableOf(corpusDocs)
     val bandSh: Option[org.apache.spark.sql.Column] = {
@@ -63,7 +62,7 @@ object NearDupStream {
     val corpusSh = corpusShingles.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
 
     val probe = NearDup.bandedOf(
-      NearDup.shingleTableOf(DocIngest.docsStream(spark, srcDir, maxFilesPerTrigger)),
+      NearDup.shingleTableOf(DocIngest.docsStream(spark, srcDir)),
       carrySh = true, bandSh = bandSh)
       .select(col("doc_id").as("id_a"), col("sh").as("sh_a"), col("band"))
 

@@ -1,9 +1,10 @@
 package graft.streaming
 
 import graft.operators.Trend
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.Tables
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Live revenue smoothing + change-point monitor — the streaming twin of
   * the batch `q_stats_ewma` and `q_stats_cusum`: after every micro-batch
@@ -24,35 +25,16 @@ object RevenueMonitor {
   /** Start the monitor: day totals in `stateDir`_days, EWMA published at
     * `stateDir`_ewma, CUSUM at `stateDir`_cusum. */
   def monitor(spark: SparkSession, srcDir: String, stateDir: String,
-      checkpointDir: String, maxFilesPerTrigger: Int = 1,
+      checkpointDir: String,
       schema: Option[org.apache.spark.sql.types.StructType] = None): StreamingQuery = {
-    val raw = UpsertSink.fileStream(spark, srcDir, maxFilesPerTrigger, schema)
-    val ts = raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        timestamp_micros(expr("ts div 1000"))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        col("ts").cast(org.apache.spark.sql.types.TimestampType)
-      case _ => col("ts")
-    }
-    val daily = raw
+    val daily = Tables.normalizeTs(UpsertSink.fileStream(spark, srcDir, schema))
       .filter(col("event_type") === "purchase")
-      .select(to_date(ts).as("day"),
+      .select(to_date(col("ts")).as("day"),
         floor(col("value") * 100 + 0.5).cast("long").as("cents"))
       .groupBy(col("day"))
       .agg(sum(col("cents")).as("c"))
-    daily.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        UpsertSink.upsertBatch(batch, Seq("day"), stateDir + "_days")
-        val days = batch.sparkSession.read.parquet(stateDir + "_days")
-        val tmpE = stateDir + "_ewma.tmp"
-        Trend.ewmaFromDaily(days).write.mode("overwrite").parquet(tmpE)
-        UpsertSink.swapInto(tmpE, stateDir + "_ewma")
-        val tmpC = stateDir + "_cusum.tmp"
-        Trend.cusumFromDaily(days).write.mode("overwrite").parquet(tmpC)
-        UpsertSink.swapInto(tmpC, stateDir + "_cusum")
-      }
-      .start()
+    UpsertSink.keyedParquetUpsert(daily, Seq("day"), stateDir + "_days", checkpointDir,
+      Seq(stateDir + "_ewma" -> Trend.ewmaFromDaily,
+        stateDir + "_cusum" -> Trend.cusumFromDaily))
   }
 }

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.functions.Rounding.roundN
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.Tables
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
@@ -15,7 +16,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * information the batch per-user window sort consumes); each batch
   * re-derives the user's full transition multiset and emits it ALONG WITH
   * explicit zero rows for pairs the user previously had that vanished
-  * (the retraction channel). The foreachBatch sink upserts per
+  * (the retraction channel). The keyed sink upserts per
   * (user, from, to) — zeros overwrite stale counts — then recomputes the
   * global matrix (groups² rows, tiny) with the batch query's exact
   * arithmetic and publishes it atomically.
@@ -108,57 +109,32 @@ object TransitionStream {
       }
   }
 
-  /** File-source stream with the events schema; pass `schema` to start the
-    * monitor before the first file lands (inference needs existing files). */
-  def eventsStream(spark: SparkSession, srcDir: String,
-      maxFilesPerTrigger: Int = 1,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame =
-    UpsertSink.fileStream(spark, srcDir, maxFilesPerTrigger, schema)
-
   /** Start the monitor: per-user counts upserted into `stateDir`_counts,
     * the published global matrix (batch-exact arithmetic) rewritten into
     * `stateDir` after every micro-batch. */
   def matrixMonitor(spark: SparkSession, srcDir: String, stateDir: String,
-      checkpointDir: String, maxFilesPerTrigger: Int = 1,
+      checkpointDir: String,
       schema: Option[org.apache.spark.sql.types.StructType] = None,
       journeyCap: Option[Int] = DefaultJourneyCap): StreamingQuery = {
     import spark.implicits._
-    val raw = eventsStream(spark, srcDir, maxFilesPerTrigger, schema)
-    // mirror sources.Tables.events: nanos-as-long parquet truncates to
-    // micros; NTZ (micros, no tz — inferred-schema files) casts to the
-    // session-tz type first so unix_micros accepts it (value-identity
-    // under the UTC sessions); session-tz timestamps pass through
-    val tsUs = raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => expr("ts div 1000")
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        unix_micros(col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => unix_micros(col("ts"))
-    }
-    val evs = raw
-      .select(col("user_id").cast("long").as("user_id"), tsUs.as("ts_us"),
+    val evs = Tables.normalizeTs(UpsertSink.fileStream(spark, srcDir, schema))
+      .select(col("user_id").cast("long").as("user_id"),
+        unix_micros(col("ts")).as("ts_us"),
         col("event_id").cast("long").as("event_id"), col("event_type"))
       .as[Ev]
-    userTransitions(spark, evs, journeyCap).toDF().writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        UpsertSink.upsertBatch(batch,
-          Seq("user_id", "from_type", "to_type"), stateDir + "_counts")
-        val sess = batch.sparkSession
-        val pairs = sess.read.parquet(stateDir + "_counts")
+    // the global matrix is groups²-sized and rows can vanish on
+    // retraction — a view (swapped whole), not an upsert
+    UpsertSink.keyedParquetUpsert(userTransitions(spark, evs, journeyCap).toDF(),
+      Seq("user_id", "from_type", "to_type"), stateDir + "_counts", checkpointDir,
+      Seq(stateDir -> { counts =>
+        val pairs = counts
           .filter(col("n") > 0)
           .groupBy(col("from_type"), col("to_type"))
           .agg(sum(col("n")).as("n"))
         val totals = pairs.groupBy(col("from_type")).agg(sum(col("n")).as("n_from"))
-        val matrix = pairs.join(totals, "from_type")
+        pairs.join(totals, "from_type")
           .select(col("from_type"), col("to_type"), col("n"),
             roundN(col("n").cast("double") / col("n_from"), 6).as("p"))
-        // the global matrix is groups²-sized and rows can vanish on
-        // retraction — publish by checked swap, not upsert
-        val tmp = stateDir + ".tmp"
-        matrix.write.mode("overwrite").parquet(tmp)
-        UpsertSink.swapInto(tmp, stateDir)
-      }
-      .start()
+      }))
   }
 }

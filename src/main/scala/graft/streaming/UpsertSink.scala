@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** Streaming keyed-upsert sink via `foreachBatch` — the Spark-native form of
   * the reference's per-run DynamoDB overwrite (transform.py:149-202 put_items
@@ -15,17 +16,40 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * [[graft.pipeline.KeyedSink.foreachPartitionUpsert]] — without touching
   * the streaming plan). Merge = anti-join current state against the batch
   * keys + union, executed distributed.
+  *
+  * This is the one sink every stream monitor ends in. A monitor whose
+  * published table is DERIVED from the keyed store (a rollup, a matrix, a
+  * statistic) passes it as a `view`: after each micro-batch's upsert the
+  * store is read once and every view is recomputed from it and published
+  * whole by [[publish]]. A view is swapped, never upserted, because its
+  * rows can vanish (a re-attributed purchase empties a channel, a
+  * retraction removes a matrix cell). [[publish]] — write `dir.tmp`, then
+  * the checked two-rename [[swapInto]] — is the only publish path for the
+  * store and its views; `IngestPipeline`'s partitioned exactly-once merge
+  * is the one other caller of [[swapInto]].
   */
 object UpsertSink {
 
-  /** Start an update-mode stream writing keyed upserts into `stateDir`. */
+  /** Files admitted per micro-batch by every file source here: one landed
+    * object, one trigger (why it is not a parameter: [[EventStreams]]). */
+  private[graft] val FilesPerTrigger = 1
+
+  /** Start an update-mode stream writing keyed upserts into `stateDir`.
+    * Each `views` entry `(dir, f)` publishes `f(store)` at `dir` after
+    * every micro-batch, `store` being the keyed store just written. With
+    * no views the store is never read back. */
   def keyedParquetUpsert(df: DataFrame, keys: Seq[String], stateDir: String,
-      checkpointDir: String): StreamingQuery =
+      checkpointDir: String,
+      views: Seq[(String, DataFrame => DataFrame)] = Nil): StreamingQuery =
     df.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch { (batch: DataFrame, _: Long) =>
         upsertBatch(batch, keys, stateDir)
+        if (views.nonEmpty) {
+          val store = batch.sparkSession.read.parquet(stateDir)
+          views.foreach { case (dir, view) => publish(view(store), dir) }
+        }
       }
       .start()
 
@@ -48,10 +72,16 @@ object UpsertSink {
         .join(batch.select(keys.map(org.apache.spark.sql.functions.col): _*),
           keys, "left_anti")
         .unionByName(batch)
-    // materialize BEFORE touching stateDir (can't overwrite what we read)
-    val tmp = stateDir + ".tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    swapInto(tmp, stateDir)
+    publish(merged, stateDir)
+  }
+
+  /** Replace `dir` with the rows of `df`: materialize into `dir.tmp` first
+    * (so `df` may read `dir` itself — nothing is overwritten while it is
+    * read; a stale tmp from a crash is overwritten), then [[swapInto]]. */
+  private[graft] def publish(df: DataFrame, dir: String): Unit = {
+    val tmp = dir + ".tmp"
+    df.write.mode("overwrite").parquet(tmp)
+    swapInto(tmp, dir)
   }
 
   /** Crash recovery for the two-rename swap: if `destDir` is missing but
@@ -100,16 +130,17 @@ object UpsertSink {
     Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete()
   }
 
-  /** File-source stream over a directory of parquet files (the S3-arrival
-    * model shared by the drift/transition/basket monitors). Callers that
-    * know their column set pass `schema` so the monitor can start BEFORE
-    * the first file lands; without it the schema is inferred from files
-    * already present (which throws on an empty or absent source dir). */
-  private[graft] def fileStream(spark: org.apache.spark.sql.SparkSession,
-      srcDir: String, maxFilesPerTrigger: Int,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame =
+  /** File-source stream over a directory of parquet files, admitting
+    * [[FilesPerTrigger]] file per micro-batch — every parquet stream here
+    * reads through this except CdcStream's, which admits every landed
+    * change file at once. Callers that know their column set pass `schema`
+    * so the monitor can start BEFORE the first file lands; without it the
+    * schema is inferred from files already present (which throws on an
+    * empty or absent source dir). */
+  private[graft] def fileStream(spark: SparkSession, srcDir: String,
+      schema: Option[StructType] = None): DataFrame =
     spark.readStream
       .schema(schema.getOrElse(spark.read.parquet(srcDir).schema))
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .option("maxFilesPerTrigger", FilesPerTrigger)
       .parquet(srcDir)
 }

@@ -25,6 +25,10 @@ object SparkSpec {
   }
   val sf0001 = "/root/testdata/sf0.001"
   val referenceData = "/root/reference/Data"
+  /** The reference CSV layout at test size, committed under
+    * src/test/resources/reference_layout (see its README for the expected
+    * category-KPI row count). */
+  val referenceFixture: String = getClass.getResource("/reference_layout").getPath
 }
 
 abstract class SparkSuite extends AnyFunSuite {

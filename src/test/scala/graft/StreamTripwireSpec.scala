@@ -109,7 +109,7 @@ class StreamTripwireSpec extends SparkSuite {
   }
 
   test("stream-static join keeps the per-row dimension broadcast-hinted") {
-    val df = EventStreams.kpiCategoryStream(spark, SparkSpec.referenceData)
+    val df = EventStreams.kpiCategoryStream(spark, SparkSpec.referenceFixture)
     val hints = df.queryExecution.analyzed
       .collect { case h: ResolvedHint if h.hints.strategy.isDefined => h }
     assert(hints.nonEmpty,

@@ -3,6 +3,7 @@ package graft
 import graft.operators.Events
 import graft.sources.Tables
 import graft.streaming.{EventStreams, Stateful, UpsertSink}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** foreachBatch keyed-upsert sink and mapGroupsWithState stateful operator:
@@ -53,6 +54,49 @@ class StreamingSinkSpec extends SparkSuite {
     assert(got.count() > 0)
   }
 
+  test("keyed upsert views equal batch across a restart and a crashed view swap") {
+    def assertSame(got: DataFrame, want: DataFrame): Unit = {
+      val cols = want.columns.sorted.map(col)
+      assert(got.count() === want.count())
+      assert(got.select(cols: _*).exceptAll(want.select(cols: _*)).isEmpty)
+    }
+    def byTypeOf(kpi: DataFrame): DataFrame =
+      kpi.groupBy(col("event_type")).agg(sum(col("n_events")).as("n_events"))
+    def latestOf(kpi: DataFrame): DataFrame =
+      kpi.groupBy(col("event_type")).agg(max(col("window_start")).as("last_window"))
+    val events = Tables.events(spark, SparkSpec.sf0001)
+    val src = java.nio.file.Files.createTempDirectory("views_src").toString + "/ev"
+    val root = java.nio.file.Files.createTempDirectory("views_state").toString
+    val (stateDir, byType, latest) = (s"$root/kpi", s"$root/by_type", s"$root/latest")
+    val ck = java.nio.file.Files.createTempDirectory("views_ck").toString
+    def run(): Unit = {
+      val q = UpsertSink.keyedParquetUpsert(
+        EventStreams.windowed(spark, src, delay = "3650 days"),
+        Seq("window_start", "event_type"), stateDir, ck,
+        Seq(byType -> byTypeOf, latest -> latestOf))
+      q.processAllAvailable()
+      q.stop()
+    }
+
+    events.filter(col("event_id") % 2 === 0).repartition(2).write.parquet(src)
+    run()
+    // a crash between a by_type publish's two renames: the live copy sits
+    // in .old, and a stale tmp holds rows that must never be published
+    assert(new java.io.File(byType).renameTo(new java.io.File(byType + ".old")))
+    spark.range(3).select(lit("junk").as("event_type"), col("id").as("n_events"))
+      .write.parquet(byType + ".tmp")
+    events.filter(col("event_id") % 2 === 1).repartition(2)
+      .write.mode("append").parquet(src)
+    run()
+
+    val want = Events.windowAgg(spark.read.parquet(src))
+    assertSame(spark.read.parquet(stateDir), want)
+    assertSame(spark.read.parquet(byType), byTypeOf(want))
+    assertSame(spark.read.parquet(latest), latestOf(want))
+    assert(!new java.io.File(byType + ".old").exists())
+    assert(!new java.io.File(byType + ".tmp").exists())
+  }
+
   test("upsert replaces rows for re-emitted keys, keeps others") {
     import spark.implicits._
     val stateDir = java.nio.file.Files.createTempDirectory("ups2").toString + "/s"
@@ -98,9 +142,9 @@ class StreamingSinkSpec extends SparkSuite {
     val schema = Tables.events(spark, SparkSpec.sf0001).schema
     // without a schema the monitor cannot start ahead of the first file
     intercept[Exception](
-      UpsertSink.fileStream(spark, src, maxFilesPerTrigger = 1))
+      UpsertSink.fileStream(spark, src))
     // with the explicit schema it starts, then picks up the late file
-    val df = UpsertSink.fileStream(spark, src, 1, Some(schema))
+    val df = UpsertSink.fileStream(spark, src, Some(schema))
     val q = df.writeStream.format("memory").queryName("empty_start")
       .outputMode("append")
       .option("checkpointLocation",

@@ -86,16 +86,16 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("streaming category KPIs over the reference CSV layout equal batch") {
-    // order_items part files arrive one per micro-batch (19 batches),
+    // order_items part files arrive one per micro-batch (6 batches),
     // joined against static orders/products — the reference's event-driven
     // arrival model end to end.
     runComplete(
-      EventStreams.kpiCategoryStream(spark, SparkSpec.referenceData),
+      EventStreams.kpiCategoryStream(spark, SparkSpec.referenceFixture),
       "kpi_stream")
     val streamed = spark.table("kpi_stream")
-    val batch = new graft.pipeline.EcommercePipeline(spark, SparkSpec.referenceData)
+    val batch = new graft.pipeline.EcommercePipeline(spark, SparkSpec.referenceFixture)
       .categoryKpis
     assert(canon(streamed) === canon(batch.drop())) // drop() is a no-op; same cols
-    assert(streamed.count() === 217L)
+    assert(streamed.count() === 142L)
   }
 }
