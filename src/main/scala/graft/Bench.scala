@@ -1,69 +1,103 @@
 package graft
 
-/** Benchmark main: times the headline queries (Registry entries with
-  * bench=true, falling back to all) on SPARK_GRAFT_SF_DIR and prints one
-  * JSON line the driver consumes (BENCH_r{N}.json). */
+import org.apache.spark.sql.SparkSession
+
+/** The query timer, in two modes:
+  *
+  *   runMain graft.Bench
+  *     — the headline run on SPARK_GRAFT_SF_DIR (default sf0.1): the
+  *       bench=true registry queries, best-of-3, timed twice with the
+  *       scale evidence in between. Prints a `scale_evidence` line, then the
+  *       `{"metric":"total",…}` line LAST, and writes both to
+  *       BENCH_LOCAL.json.
+  *   runMain graft.Bench <sfDir> <q1,q2,…|headline|all> [runs=2]
+  *     — one best-of-`runs` pass over the named queries, the headliners
+  *       or the whole registry. Prints one JSON line: the calib stamp, then
+  *       per query its best seconds and that run's shuffle-write MB, with
+  *       failures (timed -1) listed under `errors`.
+  *
+  * Every timing comes from [[BenchCore.timeQs]]. The synthetic scale
+  * decades are [[BenchDeep]]'s, one fresh JVM per family. */
 object Bench {
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit =
+    if (args.isEmpty) headline()
+    else {
+      require(args.length >= 2, "usage: Bench [<sfDir> <q1,q2,…|headline|all> [runs]]")
+      queries(args(0), args(1), args.lift(2).map(_.toInt).getOrElse(2))
+    }
+
+  private def querySet(spec: String): Seq[Q] = spec match {
+    case "headline" => Registry.all.filter(_.bench)
+    case "all" => Registry.all
+    case _ =>
+      val names = spec.split(",").toSeq
+      val unknown = names.filterNot(Registry.byName.contains)
+      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+      names.map(Registry.byName)
+  }
+
+  private def queries(sfDir: String, spec: String, runs: Int): Unit = {
+    val qs = querySet(spec)
+    val spark = BenchCore.session("graft-bench")
+    val calib = BenchCore.calibSpin()
+    BenchCore.warmUp(spark, qs)
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val timed = BenchCore.timeQs(spark, qs, sfDir, runs,
+      (q, e) => errors.getOrElseUpdate(q.name, e.toString.take(200)))
+    val perQuery = timed.map { t =>
+      s"""${BenchCore.jsonStr(t.name)}:{"sec":${t.sec},"shuffle_mb":${t.shuffleBytes / 1e6}}"""
+    }.mkString("{", ",", "}")
+    val errorsJson = errors.map { case (n, m) =>
+      s"""{"query":${BenchCore.jsonStr(n)},"error":${BenchCore.jsonStr(m)}}"""
+    }.mkString("[", ",", "]")
+    val total = timed.collect { case t if t.sec > 0 => t.sec }.sum
+    println(s"""{"metric":"queries","sf":${BenchCore.jsonStr(sfDir)},"runs":$runs,""" +
+      s""""calib_spin_sec":$calib,"total_sec":$total,"queries":$perQuery,"errors":$errorsJson}""")
+    spark.stop()
+  }
+
+  private def fmt(rs: Seq[(String, Double)]): String =
+    rs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+
+  /** An evidence pass is additive: a failure logs and yields "", so it never
+    * costs the run its total line. */
+  private def evidence(name: String)(body: => String): String =
+    try body catch { case e: Throwable =>
+      System.err.println(s"[bench] $name pass failed: ${e.getMessage}")
+      ""
+    }
+
+  private def headline(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = BenchCore.session("graft-bench")
-
-    val headline = {
-      val b = Registry.all.filter(_.bench)
-      if (b.nonEmpty) b else Registry.all
-    }
+    val headline = Registry.all.filter(_.bench)
     BenchCore.warmUp(spark, headline)
-    // Best-of-N per query (BenchCore.timeQs): single-shot timings on a
-    // shared VM include CPU-steal/GC noise (observed same-plan swings of
-    // 6-10×). Every headline run and every decade point carries its own
-    // calibration stamp (BenchCore.calibSpin; round-10 verdict #3), and α
-    // fits are REFUSED when calib drifts > 25% across a decade's points.
     def time(dir: String, runs: Int): Seq[(String, Double)] =
-      BenchCore.timeQs(spark, headline, dir, runs)
-    // SPARK_GRAFT_BENCH_FAST=1 skips the scale-evidence passes — a local
-    // iteration shortcut (the driver never sets it, so BENCH_r{N}.json
-    // always carries the full evidence)
-    val fast = sys.env.get("SPARK_GRAFT_BENCH_FAST").contains("1")
-    // best-of-N for the scale decades (round-9 verdict task #5: endpoint α
-    // fits are noise-sensitive; N defaults to the historical 2, raise via
-    // env for evidence runs)
-    val benchRuns = BenchCore.benchRuns(2)
+      BenchCore.secs(spark, headline, dir, runs)
 
-    // ---- Headline pass 1 of 2 (round-11 verdict task #4: the repo shipped
-    // two contradictory totals with no noise statement — the headline is
-    // now best-of-N over TWO runs SPACED by the evidence passes, each with
-    // its own calib stamp, and the artifact carries both raw runs plus the
-    // measured noise band).
+    // Headline pass 1 of 2. The published headline is the per-query best
+    // of two passes SPACED by minutes of evidence work, each with its own
+    // calib stamp: a back-to-back re-run hides the ~1.5× multi-core noise
+    // band that the spacing exposes.
     val calibRun1 = BenchCore.calibSpin()
     val results = time(sfDir, 3)
-    def fmt(rs: Seq[(String, Double)]) =
-      rs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
 
-    // ---- Multi-scale evidence (round-3 verdict ask #1): re-time the same
-    // headline set one decade of scale DOWN and report the per-query
-    // scaling exponent  alpha = ln(t_hi/t_lo) / ln(rows_hi/rows_lo)
-    // where rows_* is the query's PRIMARY input table (tables grow at
-    // different rates across SFs — embeddings is 4x where lineitem is 10x
-    // — so a blanket SF ratio would misstate every exponent). alpha ~ 1
-    // is linear; sustained alpha >> 1 is the super-linear curve the 100 TB
-    // story cannot contain. Small absolute times carry fixed job-setup
-    // overhead, which biases alpha DOWN at the low end — so a high alpha
-    // here is a real signal, not noise.
+    // Scaling exponent one harness SF down:
+    //   alpha = ln(t_hi/t_lo) / ln(rows_hi/rows_lo)
+    // with rows_* the query's PRIMARY input table (tables grow at different
+    // rates across SFs — embeddings 4× where lineitem is 10× — so a blanket
+    // SF ratio would misstate every exponent). Fixed job-setup overhead
+    // biases alpha DOWN at the low end, so a high alpha is a real signal.
     val sfLo = "sf([0-9.]+)$".r.findFirstMatchIn(sfDir).flatMap { m =>
       val lo = BigDecimal(m.group(1)) / 10
       val cand = sfDir.substring(0, m.start) + "sf" +
         lo.bigDecimal.stripTrailingZeros.toPlainString
       if (new java.io.File(cand).exists) Some(cand) else None
     }
-    // The multi-scale pass is additive evidence — it must never cost the
-    // round its primary bench line, so any failure degrades to
-    // single-scale output instead of crashing the main.
-    val multiScale = if (fast) "" else try sfLo.map { lo =>
-      // primary input table per headline query, for the exponent
-      // denominator. Name-prefix heuristic with explicit overrides for the
-      // queries whose prefix lies about their scan (verified against each
-      // operator's Tables.* read).
+    val multiScale = evidence("multi-scale")(sfLo.map { lo =>
+      // name-prefix heuristic, with overrides for the queries whose prefix
+      // lies about their scan (checked against each operator's Tables.* read)
       val primaryOverride = Map(
         "q_cdc_apply" -> "orders", // Cdc.scala reads Tables.orders
         "q_join_asof" -> "events", // AsOf.scala reads Tables.events
@@ -81,10 +115,9 @@ object Bench {
       val hi = results.toMap
       val alphas = resLo.map { case (name, tLo) =>
         val r = ratio(primaryTable(name))
-        // undefined when the primary table doesn't grow between the two
-        // SFs (documents/embeddings are fixed-size below sf0.01), the
-        // low-SF table is empty (ratio Infinity would print a fake 0.0),
-        // or a timing is degenerate — emit null rather than a fake number
+        // undefined when the primary table does not grow between the SFs
+        // (documents/embeddings are fixed-size below sf0.01), the low-SF
+        // table is empty, or a timing is degenerate: null, not a fake number
         val a = if (r.isNaN || r.isInfinite || r <= 1.05 || tLo <= 0 || hi(name) <= 0) None
           else Some(math.log(hi(name) / tLo) / math.log(r))
         name -> a.filter(x => !x.isNaN && !x.isInfinite)
@@ -93,202 +126,25 @@ object Bench {
       }
       val alphaJson = alphas.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
       s""","sf_lo":"$lo","queries_lo":${fmt(resLo)},"scaling_exponent":$alphaJson"""
-    }.getOrElse("") catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] multi-scale pass failed: ${e.getMessage}")
-        ""
-    }
-    // 5k -> 16k -> 50k synthetic-corpus points, shared by the lsh and text
-    // passes (each dir is generated once, by whichever pass runs first)
-    def docDecade(tag: String,
-        gen: (org.apache.spark.sql.SparkSession, Long) => org.apache.spark.sql.DataFrame) =
-      BenchCore.docPoints(spark, tag, Seq(5000L, 16000L, 50000L), gen)
+    }.getOrElse(""))
 
-    // ---- LSH dedup scale evidence (round-4 verdict ask #1): the band-
-    // bucket candidate volume is the LSH family's only data-dependent
-    // growing term, and harness testdata stops at sf0.1 (5k docs) — so
-    // time the two LSH headline queries over a full synthetic decade
-    // (5k -> 16k -> 50k docs, harness-shaped corpus with a fixed ~5%
-    // near-dup rate; sources/SyntheticDocs.corpus) and report the
-    // measured candidate-pair count at EVERY point, harness SFs included.
-    // Same degrade-don't-crash policy as the multi-scale pass.
-    val lshScale = if (fast) "" else try {
-      val lshNames = BenchSets.lshDecade
-      val lshQs = Registry.all.filter(q => lshNames.contains(q.name))
-      val synthPoints = docDecade("v2", graft.sources.SyntheticDocs.corpus(_, _))
-      // open-vocabulary (web-like) decade: candidate volume should track
-      // dup density here, isolating the fixed-vocab df-cohort artifact
-      val zipfPoints = docDecade("zipf", graft.sources.SyntheticDocs.zipfCorpus(_, _))
-      def docRows(dir: String): Long =
-        spark.read.parquet(s"$dir/documents.parquet").count()
-      def candCounts(dir: String): (Long, Long) = {
-        val c = operators.NearDup.lshCandidateCount(spark, dir)
-        spark.catalog.clearCache()
-        val p = operators.NearDup.lshPrunedCandidateCount(spark, dir)
-        spark.catalog.clearCache()
-        (c, p)
+    // MinHash-LSH band-bucket candidate pairs at the harness SFs: the LSH
+    // family's only data-dependent growing term (its synthetic decades are
+    // BenchDeep's lsh-v2 and lsh-zipf families).
+    val lshHarness = evidence("lsh harness")({
+      val pts = (sfLo.toSeq :+ sfDir).map { d =>
+        val docs = spark.read.parquet(s"$d/documents.parquet").count()
+        s"""{"dir":"$d","rows":$docs${BenchCore.lshCandidates(spark, d)}}"""
       }
-      // harness points (candidates only — their times are in queries/
-      // queries_lo above) + synthetic points (candidates AND times)
-      val harness = (sfLo.toSeq :+ sfDir).map { d =>
-        val (c, p) = candCounts(d)
-        s"""{"dir":"$d","rows":${docRows(d)},"candidates":$c,"candidates_pruned":$p}"""
-      }
-      def decade(pts: Seq[(Long, String)]): (String, String, String, String) = {
-        val raw = pts.map { case (n, d) =>
-          val cp = candCounts(d)
-          val cal = BenchCore.calibSpin()
-          (n, d, cp, cal, BenchCore.timeQs(spark, lshQs, d, benchRuns))
-        }
-        val data = raw.zip(BenchCore.retimeSuspects(spark, lshQs, pts, raw.map(_._5)))
-          .map { case ((n, d, cp, cal, _), ts) => (n, d, cp, cal, ts) }
-        val rowsJson = data.map { case (n, d, cp, cal, ts) =>
-          s"""{"dir":"$d","rows":$n,"candidates":${cp._1},"candidates_pruned":${cp._2},"calib":$cal,${
-            ts.map { case (k, v) => "\"" + k + "\":" + v }.mkString(",")}}"""
-        }.mkString(",")
-        // per-query exponent over the decade (same generator at both
-        // ends, so the points sit on one curve by construction)
-        val (alphas, mono, calibJson) = BenchCore.alphaMonoJson(lshQs.map(_.name),
-          data.map { case (n, _, _, _, ts) => (n, ts.toMap) },
-          data.map(_._4))
-        (rowsJson, alphas, mono, calibJson)
-      }
-      val (synth, alphaSynth, monoSynth, calSynth) = decade(synthPoints)
-      val (zipf, alphaZipf, monoZipf, calZipf) = decade(zipfPoints)
-      s""","lsh_scale":{"harness":[${harness.mkString(",")}],"synthetic":[$synth],""" +
-        s""""alpha_synth_decade":{$alphaSynth},"monotone_synth_decade":{$monoSynth},""" +
-        s""""calib_synth":{$calSynth},"synthetic_zipf":[$zipf],"alpha_zipf_decade":{$alphaZipf},""" +
-        s""""monotone_zipf_decade":{$monoZipf},"calib_zipf":{$calZipf}}"""
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] lsh scale pass failed: ${e.getMessage}")
-        ""
-    }
+      s""","lsh_scale":{"harness":[${pts.mkString(",")}]}"""
+    })
 
-    // ---- Events/sales-family scale evidence (round-5 verdict ask #3):
-    // the reference-derived surface (KPI star join, session windows, range
-    // join, attribution, RFM, MAU) stops at harness sf0.1, where its
-    // scaling exponents are fixed-overhead-dominated. Time those headline
-    // queries over a synthetic decade (600k -> 6M events, lineitem at the
-    // harness 6x ratio, generators statistically matched to the testdata —
-    // sources/SyntheticEvents) and report alpha per query. Same
-    // degrade-don't-crash policy as the other evidence passes.
-    val eventsScale = if (fast) "" else try {
-      val names = BenchSets.eventsDecade
-      val qs2 = Registry.all.filter(q => names.contains(q.name))
-      val pts = Seq(600000L, 6000000L).map { n =>
-        val d = s"/tmp/graft_synth_events_$n"
-        graft.sources.SyntheticEvents.writePoint(spark, d, n)
-        n -> d
-      }
-      val raw = pts.map { case (n, d) =>
-        (n, d, BenchCore.calibSpin(), BenchCore.timeQs(spark, qs2, d, benchRuns))
-      }
-      val data = raw.zip(BenchCore.retimeSuspects(spark, qs2, pts, raw.map(_._4)))
-        .map { case ((n, d, cal, _), ts) => (n, d, cal, ts) }
-      val ptsJson = data.map { case (n, d, cal, ts) =>
-        s"""{"dir":"$d","events":$n,"calib":$cal,${
-          ts.map { case (k, v) => "\"" + k + "\":" + v }.mkString(",")}}"""
-      }.mkString(",")
-      val (alphas, mono, calibJson) = BenchCore.alphaMonoJson(qs2.map(_.name),
-        data.map { case (n, _, _, ts) => (n, ts.toMap) }, data.map(_._3))
-      s""","events_scale":{"points":[$ptsJson],"alpha_decade":{$alphas},""" +
-        s""""monotone_decade":{$mono},$calibJson}"""
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] events scale pass failed: ${e.getMessage}")
-        ""
-    }
-
-    // ---- ANN/embeddings-family scale evidence (round 6): the harness
-    // embeddings table stops at 2k vectors, where fixed-64-bucket LSH and
-    // all-pairs are indistinguishable. Time the LSH kNN (fixed planes),
-    // its corpus-adaptive variant (planesFor holds bucket population
-    // constant), embedding near-dup, and contrastive hard-negative mining
-    // over a synthetic decade (5k -> 16k -> 50k unit vectors, harness
-    // statistics; sources/SyntheticEmbeddings), reporting the measured
-    // candidate-pair count under BOTH plane counts at every point — the
-    // fixed-plane quadratic vs adaptive linear split is the family's
-    // 100 TB story stated with data. Degrade-don't-crash like the others.
-    val embedScale = if (fast) "" else try {
-      val names = BenchSets.embedDecade
-      val qs3 = Registry.all.filter(q => names.contains(q.name))
-      val pts = Seq(5000L, 16000L, 50000L).map { n =>
-        val d = s"/tmp/graft_synth_embed_$n"
-        graft.sources.SyntheticEmbeddings.writePoint(spark, d, n)
-        n -> d
-      }
-      val raw = pts.map { case (n, d) =>
-        val cf = operators.Similarity.embedCandidateCount(spark, d, adaptive = false)
-        val ca = operators.Similarity.embedCandidateCount(spark, d, adaptive = true)
-        spark.catalog.clearCache()
-        val cal = BenchCore.calibSpin()
-        (n, d, cf, ca, cal, BenchCore.timeQs(spark, qs3, d, benchRuns))
-      }
-      val data = raw.zip(BenchCore.retimeSuspects(spark, qs3, pts, raw.map(_._6)))
-        .map { case ((n, d, cf, ca, cal, _), ts) => (n, d, cf, ca, cal, ts) }
-      val ptsJson = data.map { case (n, d, cf, ca, cal, ts) =>
-        s"""{"dir":"$d","rows":$n,"cand_fixed":$cf,"cand_adaptive":$ca,"calib":$cal,${
-          ts.map { case (k, v) => "\"" + k + "\":" + v }.mkString(",")}}"""
-      }.mkString(",")
-      val (alphas, mono, calibJson) = BenchCore.alphaMonoJson(qs3.map(_.name),
-        data.map { case (n, _, _, _, _, ts) => (n, ts.toMap) }, data.map(_._5))
-      s""","embed_scale":{"points":[$ptsJson],"alpha_decade":{$alphas},""" +
-        s""""monotone_decade":{$mono},$calibJson}"""
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] embed scale pass failed: ${e.getMessage}")
-        ""
-    }
-
-    // ---- Text-family scale evidence (round 6): PMI association, batch
-    // assembly, and the Zipf fit ride the same open-vocabulary synthetic
-    // decade the LSH family uses (dirs are created idempotently by the
-    // lsh pass above or here, whichever runs first). These operators'
-    // only growing terms are the token count and the vocabulary-sized
-    // aggregates — α near the low end is the expected signature.
-    val textScale = if (fast) "" else try {
-      // zipf (open-vocabulary) decade: pmi/batching/zipf-fit + the
-      // lossless prefix set-similarity join (realistic sparse-prefix
-      // regime). keyphrase needs stopword delimiters, which only the
-      // harness-statistics v2 vocabulary contains — it gets the v2 decade.
-      val zipfNames = BenchSets.textZipfDecade
-      val v2Names = BenchSets.textV2Decade
-      def decade(names: Seq[String], pts: Seq[(Long, String)]): (String, String, String, String) = {
-        val qs4 = Registry.all.filter(q => names.contains(q.name))
-        val raw = pts.map { case (n, d) =>
-          (n, d, BenchCore.calibSpin(), BenchCore.timeQs(spark, qs4, d, benchRuns))
-        }
-        val data = raw.zip(BenchCore.retimeSuspects(spark, qs4, pts, raw.map(_._4)))
-          .map { case ((n, d, cal, _), ts) => (n, d, cal, ts) }
-        val ptsJson = data.map { case (n, d, cal, ts) =>
-          s"""{"dir":"$d","rows":$n,"calib":$cal,${
-            ts.map { case (k, v) => "\"" + k + "\":" + v }.mkString(",")}}"""
-        }.mkString(",")
-        val (alphas, mono, calibJson) = BenchCore.alphaMonoJson(qs4.map(_.name),
-          data.map { case (n, _, _, ts) => (n, ts.toMap) }, data.map(_._3))
-        (ptsJson, alphas, mono, calibJson)
-      }
-      val (zipfJson, zipfAlpha, zipfMono, zipfCal) =
-        decade(zipfNames, docDecade("zipf", graft.sources.SyntheticDocs.zipfCorpus(_, _)))
-      val (v2Json, v2Alpha, v2Mono, v2Cal) =
-        decade(v2Names, docDecade("v2", graft.sources.SyntheticDocs.corpus(_, _)))
-      s""","text_scale":{"points":[$zipfJson],"alpha_decade":{$zipfAlpha},""" +
-        s""""monotone_decade":{$zipfMono},"calib":{$zipfCal},"points_v2":[$v2Json],""" +
-        s""""alpha_v2_decade":{$v2Alpha},"monotone_v2_decade":{$v2Mono},"calib_v2":{$v2Cal}}"""
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] text scale pass failed: ${e.getMessage}")
-        ""
-    }
-
-    // ---- Z-order file-skipping evidence (round-6 verdict #7): write the
-    // bench SF's lineitem once as a z-clustered layout and once
-    // range-sorted on orderkey only, then run the same 1%-selectivity
-    // (orderkey, partkey) box count against both and report the rows that
-    // SURVIVED parquet footer pruning plus wall time — the measured form
-    // of ZOrderSpec's assertion. Degrade-don't-crash like the others.
-    val layoutScale = if (fast) "" else try {
+    // Z-order file skipping: the bench SF's lineitem written once
+    // z-clustered and once range-sorted on orderkey only, then the same
+    // 1%-selectivity (orderkey, partkey) box count against both; reports the
+    // rows that SURVIVED parquet footer pruning plus wall time (the measured
+    // form of ZOrderSpec's assertion).
+    val layoutScale = evidence("layout scale")({
       import org.apache.spark.sql.functions.{col, min, max}
       val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
         .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
@@ -325,70 +181,51 @@ object Bench {
       s""","layout_scale":{"rows":$total,"box_pred_selectivity":0.01,""" +
         s""""z_rows_scanned":$zRows,"z_sec":$zT,""" +
         s""""xsort_rows_scanned":$xRows,"xsort_sec":$xT}"""
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] layout scale pass failed: ${e.getMessage}")
-        ""
-    }
+    })
 
-    // ---- Headline pass 2 of 2, SPACED from pass 1 by the evidence passes
-    // above (minutes of unrelated work — the spacing that exposes the
-    // documented ~1.5× multi-core noise band a back-to-back re-run hides).
-    // The published headline is the per-query BEST of the two runs; the
-    // artifact carries both raw runs and the measured band.
+    // Headline pass 2 of 2, spaced from pass 1 by the evidence passes.
     val calibRun2 = BenchCore.calibSpin()
     val results2 = time(sfDir, 3)
-    val r1 = results.toMap
     val r2 = results2.toMap
-    val best = results.map { case (k, _) =>
-      k -> ((r1(k), r2.getOrElse(k, -1.0)) match {
-        case (a, b) if a > 0 && b > 0 => math.min(a, b)
-        case (a, b) => math.max(a, b) // at most one positive; keep it (or -1)
+    val best = results.map { case (k, a) =>
+      k -> (r2.getOrElse(k, -1.0) match {
+        case b if a > 0 && b > 0 => math.min(a, b)
+        case b => math.max(a, b) // at most one positive; keep it (or -1)
       })
     }
     def posSum(rs: Seq[(String, Double)]) = rs.collect { case (_, v) if v > 0 => v }.sum
     val runTotals = Seq(posSum(results), posSum(results2))
-    // noise band: ratio of the two spaced run totals (>= 1). PLANS.md
-    // "Bench calibration note" explains the band once; per-query swings
-    // inside it are host noise, not regressions.
+    // noise band: ratio of the two spaced run totals (>= 1); per-query
+    // swings inside it are host noise, not regressions
     val noiseBand =
       if (runTotals.min > 0)
         BigDecimal(runTotals.max / runTotals.min)
           .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
       else "null"
-    val qs = fmt(best)
     val total = best.map(_._2).sum
     val runsJson = Seq((calibRun1, results), (calibRun2, results2)).map { case (c, rs) =>
       s"""{"calib":$c,"total":${posSum(rs)},"queries":${fmt(rs)}}"""
     }.mkString("[", ",", "]")
-
-    // Fixed-work CPU calibration: a deterministic single-thread xorshift
-    // spin whose wall-time scales with this VM's CPU-steal level. Readers
-    // comparing BENCH_r{N}.json across rounds can divide query times by
-    // (calib_spin_sec / a reference value) to normalize host noise.
+    // Fixed-work single-thread spin whose wall time tracks this VM's CPU
+    // steal: divide query times by (calib / a reference value) to compare
+    // runs on the same host.
     val calib = math.min(calibRun1, calibRun2)
 
-    // Round-5 verdict ask #2: the driver's tail capture truncated the
-    // FRONT of the old one-giant-line output (scale evidence grew past the
-    // capture window), losing the primary metric. The scale-evidence blob
-    // now prints as its own EARLIER line and the compact primary metric
-    // line prints LAST, so a tail capture always keeps it.
+    // The evidence prints as its own EARLIER line and the compact total line
+    // LAST, so a capture that keeps only the output's tail keeps the total.
+    val evidenceJson = multiScale + lshHarness + layoutScale
     val scaleLine =
-      if (multiScale.nonEmpty || lshScale.nonEmpty || eventsScale.nonEmpty ||
-          embedScale.nonEmpty || textScale.nonEmpty || layoutScale.nonEmpty)
-        Some(s"""{"metric":"scale_evidence","sf":"$sfDir"$multiScale$lshScale$eventsScale$embedScale$textScale$layoutScale}""")
+      if (evidenceJson.nonEmpty)
+        Some(s"""{"metric":"scale_evidence","sf":"$sfDir"$evidenceJson}""")
       else None
     val totalLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${fmt(best)},""" +
         s""""calib_spin_sec":$calib,"noise_band":$noiseBand,"sf":"$sfDir"}"""
     scaleLine.foreach(println)
     println(totalLine)
-    // Round-6 verdict ask #2: the driver keeps only a 2000-char stdout
-    // tail (prefixed with [info]), which has twice swallowed the scale
-    // decades. Persist the FULL bench evidence to a repo-root file the
-    // judge can read directly, independent of any capture window. Best
-    // effort — a read-only cwd must not fail the bench. One JSON object
-    // (round-9 advice: two concatenated objects broke json.load).
+    // The full evidence as ONE JSON object in the working directory, for a
+    // reader whose stdout capture is truncated. Best effort: a read-only
+    // working directory must not fail the bench.
     try {
       val out = new java.io.PrintWriter("BENCH_LOCAL.json", "UTF-8")
       try {

@@ -1,16 +1,17 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, GraftListenerDrain, SparkSession}
 
 /** The one SparkSession factory every main uses, plus the measurement
-  * machinery shared by the bench mains ([[Bench]], [[BenchWide]],
-  * [[BenchDeep]], [[TimeQueries]]): warm-up, best-of-N settings,
-  * calibration spin, best-of-N query timing, the endpoint-suspect
-  * re-timer, and the calib-gated α/monotonicity fits.
-  * Extracted (round-12) so each deep decade family can run in its OWN
-  * fresh JVM — the round-11 measured phantom (29.2 s vs 3.2 s on identical
-  * work, flat calib) is within-JVM state that per-point calibration cannot
-  * see and the endpoint re-timer only patches. */
+  * machinery of the two timing mains, [[Bench]] and [[BenchDeep]]: warm-up,
+  * best-of-N settings, calibration spin, best-of-N query timing with
+  * shuffle-write bytes, the endpoint-suspect re-timer, the calib-gated
+  * α/monotonicity fits, and the decade-family runner they feed.
+  * Each decade family runs in its own fresh JVM ([[BenchDeep]]): a measured
+  * within-JVM phantom (29.2 s vs 3.2 s on identical work, flat calib) is
+  * JVM state that per-point calibration cannot see and the endpoint
+  * re-timer only patches. */
 private[graft] object BenchCore {
 
   /** Fixed-work single-thread xorshift spin (~0.2 s idle): wall time tracks
@@ -24,19 +25,34 @@ private[graft] object BenchCore {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** Warm + best-of-2 spin — the calibration stamp (see Bench's scaladoc
-    * history: per-point stamps + >25% drift refusal were the round-10/11
-    * hygiene layers). */
+  /** Warm + best-of-2 spin — the calibration stamp. Every headline run and
+    * every decade point carries one; a decade's α fits are refused when
+    * its calib drifts > 25% across the points ([[alphaMonoJson]]). */
   def calibSpin(): Double = { spinOnce(); (1 to 2).map(_ => spinOnce()).min }
+
+  /** One query's best-of-N: seconds (-1 when every run failed) and the
+    * shuffle-write bytes of the best run. */
+  final case class Timing(name: String, sec: Double, shuffleBytes: Long)
 
   /** Best-of-N per query; min over SUCCESSFUL runs, -1 when every run
     * failed (never a timed failure). Cache cleared between runs so each
-    * timing pays its own materialization. A failed run is logged to
-    * stderr and passed to `onFail`. */
+    * timing pays its own materialization. A stage listener sums each run's
+    * shuffle-write bytes; the listener bus is drained before the count is
+    * reset and before it is read. A failed run is logged to stderr and
+    * passed to `onFail`. */
   def timeQs(spark: SparkSession, qs: Seq[Q], dir: String, runs: Int,
-      onFail: (Q, Throwable) => Unit = (_, _) => ()): Seq[(String, Double)] =
-    qs.map { q =>
+      onFail: (Q, Throwable) => Unit = (_, _) => ()): Seq[Timing] = {
+    val sc = spark.sparkContext
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        shuffleBytes.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    sc.addSparkListener(listener)
+    try qs.map { q =>
       val ts = (1 to runs).flatMap { _ =>
+        GraftListenerDrain.drain(sc)
+        shuffleBytes.set(0L)
         val t0 = System.nanoTime()
         val ok = try { q.run(spark, dir).count(); true }
           catch { case e: Throwable =>
@@ -45,12 +61,20 @@ private[graft] object BenchCore {
             false
           }
         spark.catalog.clearCache()
-        if (ok) Some((System.nanoTime() - t0) / 1e9) else None
+        val sec = (System.nanoTime() - t0) / 1e9
+        GraftListenerDrain.drain(sc)
+        if (ok) Some((sec, shuffleBytes.get())) else None
       }
-      q.name -> (if (ts.nonEmpty) ts.min else -1.0)
-    }
+      if (ts.isEmpty) Timing(q.name, -1.0, 0L)
+      else { val (sec, bytes) = ts.minBy(_._1); Timing(q.name, sec, bytes) }
+    } finally sc.removeSparkListener(listener)
+  }
 
-  /** Endpoint-suspect re-timing (round-11): within-JVM state — GC pressure
+  /** `timeQs` as (name, seconds) pairs, the form the decade fits read. */
+  def secs(spark: SparkSession, qs: Seq[Q], dir: String, runs: Int): Seq[(String, Double)] =
+    timeQs(spark, qs, dir, runs).map(t => t.name -> t.sec)
+
+  /** Endpoint-suspect re-timing: within-JVM state — GC pressure
     * and page-cache eviction by earlier passes' allocations — can inflate
     * ONE decade point ~10× while the single-thread calib stays flat. Any
     * query whose endpoint fit implies α > 1.15 gets ONE more timing at the
@@ -70,7 +94,7 @@ private[graft] object BenchCore {
     if (suspects.isEmpty) series
     else {
       System.gc()
-      val re = timeQs(spark, suspects, pts.last._2, 1).toMap
+      val re = secs(spark, suspects, pts.last._2, 1).toMap
       suspects.foreach { q =>
         System.err.println(f"[bench] retimed suspect ${q.name} at ${pts.last._2}: " +
           f"${hi(q.name)}%.2f -> ${re.getOrElse(q.name, -1.0)}%.2f s")
@@ -109,10 +133,11 @@ private[graft] object BenchCore {
     (alphas, mono, calibJson)
   }
 
-  /** One deep decade family: per-point (extras, calib, best-of-N times),
-    * endpoint-suspect re-timing, α/monotonicity with calib gating. Returns
-    * the family's JSON fragment (`"tag":{...}`); degrades to `"tag":null`
-    * on failure. */
+  /** One decade family: per-point (extras, calib, best-of-N times),
+    * endpoint-suspect re-timing, α/monotonicity with calib gating. `extras`
+    * returns a point's extra JSON fields, each led by a comma. Returns the
+    * family's JSON fragment (`"tag":{...}`); degrades to `"tag":null` on
+    * failure. */
   def deepFamily(spark: SparkSession, tag: String, names: Seq[String],
       pts: Seq[(Long, String)], benchRuns: Int,
       extras: String => String = _ => ""): String = try {
@@ -120,7 +145,7 @@ private[graft] object BenchCore {
     val raw = pts.map { case (n, d) =>
       val ex = extras(d)
       val cal = calibSpin()
-      (n, d, ex, cal, timeQs(spark, qs, d, benchRuns))
+      (n, d, ex, cal, secs(spark, qs, d, benchRuns))
     }
     val data = raw.zip(retimeSuspects(spark, qs, pts, raw.map(_._5)))
       .map { case ((n, d, ex, cal, _), ts) => (n, d, ex, cal, ts) }
@@ -135,6 +160,29 @@ private[graft] object BenchCore {
     System.err.println(s"[bench] deep $tag family failed: ${e.getMessage}")
     s""""$tag":null"""
   }
+
+  /** MinHash-LSH band-bucket candidate pairs at `dir`, unpruned and
+    * DF-pruned, as the extra JSON fields of a bench point. */
+  def lshCandidates(spark: SparkSession, dir: String): String = {
+    val c = operators.NearDup.lshCandidateCount(spark, dir)
+    spark.catalog.clearCache()
+    val p = operators.NearDup.lshPrunedCandidateCount(spark, dir)
+    spark.catalog.clearCache()
+    s""","candidates":$c,"candidates_pruned":$p"""
+  }
+
+  /** A JSON string literal: backslash, quote and every control character
+    * (< 0x20) escaped, so a tab or CR in a query's SQL or an error message
+    * cannot break the reader's JSON parse. */
+  def jsonStr(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   /** The SparkSession of every main: `local[n]` with n shuffle partitions,
     * n = SPARK_GRAFT_CPUS, else the host's available processors. The graft

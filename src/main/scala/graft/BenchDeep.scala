@@ -1,111 +1,124 @@
 package graft
 
-/** Deep-decade bench (the 100× scale-evidence tier), ONE FAMILY PER JVM —
-  * the structural fix round 11's verdict asked for: the measured
+import org.apache.spark.sql.SparkSession
+
+/** The synthetic scale-decade timer, ONE FAMILY PER JVM: a measured
   * within-JVM phantom (29.2 s vs 3.2 s on identical work with a FLAT
   * single-thread calib) is JVM/page-cache state left by earlier families'
   * passes, which per-point calibration cannot see and the endpoint
-  * re-timer only patches. Running each family in a fresh JVM removes the
-  * contamination channel instead of detecting it.
+  * re-timer only patches. A fresh JVM per family removes the channel
+  * instead of detecting it.
   *
   * Usage:
-  *   runMain graft.BenchDeep embed|lsh|text|events [pointsCsv]
-  *     — times that family's decade (pre-generating its synthetic dirs,
-  *       then settling until the calib spin stabilizes) and writes
-  *       BENCH_DEEP_<family>.json. `pointsCsv` overrides the decade's
-  *       row counts (e.g. `5000,50000,500000,1500000` to extend the lsh
-  *       decade past the gate's fitted time crossover).
+  *   runMain graft.BenchDeep <family> [pointsCsv]
+  *     — generates the family's synthetic points (idempotent), settles
+  *       until the calib spin stabilizes, times the family's query set
+  *       through [[BenchCore.deepFamily]] and writes
+  *       BENCH_DEEP_<family>.json. `pointsCsv` overrides the row counts
+  *       (e.g. `5000,50000,500000,1500000` to extend the lsh decade past
+  *       the gate's fitted time crossover).
   *   runMain graft.BenchDeep merge
-  *     — assembles the per-family fragments into BENCH_DEEP.json.
+  *     — assembles the fragments present into BENCH_DEEP.json.
   *
-  * SPARK_GRAFT_BENCH_RUNS sets best-of-N (default 2). This main is the
-  * only deep-decade path: [[Bench]] times the 5k-50k decades in its own
-  * JVM and stops there. */
+  * The families are [[Families]]: the 100× decades of the scale-designed
+  * flagships (embed, lsh, text, events) and the 10× decades of every
+  * [[BenchSets]] decade set. SPARK_GRAFT_BENCH_RUNS sets best-of-N
+  * (default 2). */
 object BenchDeep {
 
+  /** One decade family: its query set, default row counts, the writer of
+    * its point directories and the extra JSON fields recorded per point. */
+  private final case class Family(tag: String, names: Seq[String], ns: Seq[Long],
+      points: (SparkSession, Seq[Long]) => Seq[(Long, String)],
+      extras: (SparkSession, String) => String = (_, _) => "")
+
+  private val DocNs = Seq(5000L, 16000L, 50000L)
   private val DeepNs = Seq(5000L, 50000L, 500000L)
-  private val EventNs = Seq(600000L, 6000000L, 60000000L)
-  private val Families = Seq("embed", "lsh", "text", "events")
+
+  private def docs(tag: String, gen: (SparkSession, Long) => org.apache.spark.sql.DataFrame) =
+    (spark: SparkSession, ns: Seq[Long]) => BenchCore.docPoints(spark, tag, ns, gen)
+  private val zipfDocs = docs("zipf", sources.SyntheticDocs.zipfCorpus(_, _))
+  private val v2Docs = docs("v2", sources.SyntheticDocs.corpus(_, _))
+
+  private def embedPoints(spark: SparkSession, ns: Seq[Long]) = ns.map { n =>
+    val d = s"/tmp/graft_synth_embed_$n"
+    sources.SyntheticEmbeddings.writePoint(spark, d, n); n -> d
+  }
+
+  private def eventPoints(spark: SparkSession, ns: Seq[Long]) = ns.map { n =>
+    val d = s"/tmp/graft_synth_events_$n"
+    sources.SyntheticEvents.writePoint(spark, d, n); n -> d
+  }
+
+  /** Sign-LSH candidate pairs under the adaptive plane count, and under
+    * the fixed one too when `fixed` (the quadratic the adaptive path
+    * avoids, so only the 10× decade records it). */
+  private def embedCandidates(fixed: Boolean)(spark: SparkSession, d: String): String = {
+    val cf = if (fixed)
+      s""","cand_fixed":${operators.Similarity.embedCandidateCount(spark, d, adaptive = false)}"""
+      else ""
+    val ca = operators.Similarity.embedCandidateCount(spark, d, adaptive = true)
+    spark.catalog.clearCache()
+    s"""$cf,"cand_adaptive":$ca"""
+  }
+
+  /** Set-similarity variance decomposition: the candidate surface alone vs
+    * the full verify, with the candidate and emitted-pair counts, so
+    * "output-bound" is a measured claim with a per-point volume attached. */
+  private def setSimSplit(spark: SparkSession, d: String): String = {
+    val t0 = System.nanoTime()
+    val cand = operators.SetSim.prefixCandidateCount(spark, d)
+    val tCand = (System.nanoTime() - t0) / 1e9
+    spark.catalog.clearCache()
+    val t1 = System.nanoTime()
+    val pairsN = operators.SetSim.prefixPairCount(spark, d)
+    val tFull = (System.nanoTime() - t1) / 1e9
+    spark.catalog.clearCache()
+    s""","setsim_candidates":$cand,"setsim_cand_sec":$tCand""" +
+      s""","setsim_pairs":$pairsN,"setsim_full_sec":$tFull"""
+  }
+
+  private val Families: Seq[Family] = Seq(
+    Family("embed", BenchSets.deepEmbed, DeepNs, embedPoints, embedCandidates(fixed = false)),
+    Family("lsh", BenchSets.deepLsh, DeepNs, zipfDocs, BenchCore.lshCandidates),
+    Family("text", BenchSets.deepText, DeepNs, zipfDocs, setSimSplit),
+    Family("events", BenchSets.deepEvents, Seq(600000L, 6000000L, 60000000L), eventPoints),
+    Family("lsh-v2", BenchSets.lshDecade, DocNs, v2Docs, BenchCore.lshCandidates),
+    // open vocabulary (web-like): candidate volume tracks dup density,
+    // isolating the fixed-vocabulary df-cohort artifact of lsh-v2
+    Family("lsh-zipf", BenchSets.lshDecade, DocNs, zipfDocs, BenchCore.lshCandidates),
+    Family("embed-10x", BenchSets.embedDecade, DocNs, embedPoints, embedCandidates(fixed = true)),
+    Family("events-10x", BenchSets.eventsDecade, Seq(600000L, 6000000L), eventPoints),
+    Family("text-zipf", BenchSets.textZipfDecade, DocNs, zipfDocs),
+    // keyphrase needs stopword delimiters, which only the v2 vocabulary has
+    Family("text-v2", BenchSets.textV2Decade, DocNs, v2Docs))
 
   def main(args: Array[String]): Unit = {
-    val family = args.headOption.getOrElse("merge")
-    if (family == "merge") { merge(); return }
-    require(Families.contains(family), s"unknown family '$family' (${Families.mkString("/")})")
+    val tag = args.headOption.getOrElse("merge")
+    if (tag == "merge") { merge(); return }
+    val family = Families.find(_.tag == tag).getOrElse(throw new IllegalArgumentException(
+      s"unknown family '$tag' (${Families.map(_.tag).mkString("/")}/merge)"))
     val benchRuns = BenchCore.benchRuns(2)
-    val ptsOverride = args.lift(1).map(_.split(",").toSeq.map(_.trim.toLong))
-    val spark = BenchCore.session(s"graft-bench-deep-$family")
+    val ns = args.lift(1).map(_.split(",").toSeq.map(_.trim.toLong)).getOrElse(family.ns)
+    val spark = BenchCore.session(s"graft-bench-deep-$tag")
+    BenchCore.warmUp(spark, Registry.all.filter(q => family.names.contains(q.name)))
 
-    val names = family match {
-      case "embed" => BenchSets.deepEmbed
-      case "lsh" => BenchSets.deepLsh
-      case "text" => BenchSets.deepText
-      case "events" => BenchSets.deepEvents
-    }
-    BenchCore.warmUp(spark, Registry.all.filter(q => names.contains(q.name)))
-
-    // generate every point FIRST (idempotent), then settle: the round-11
-    // events contamination was the 600k calib stamped while the JVM was
-    // still digesting 360M rows of generation
-    val json = family match {
-      case "embed" =>
-        val pts = ptsOverride.getOrElse(DeepNs).map { n =>
-          val d = s"/tmp/graft_synth_embed_$n"
-          sources.SyntheticEmbeddings.writePoint(spark, d, n); n -> d
-        }
-        settle(spark)
-        BenchCore.deepFamily(spark, "embed", names, pts, benchRuns, d => {
-          val ca = operators.Similarity.embedCandidateCount(spark, d, adaptive = true)
-          spark.catalog.clearCache(); s""","cand_adaptive":$ca"""
-        })
-      case "lsh" =>
-        val pts = BenchCore.docPoints(spark, "zipf", ptsOverride.getOrElse(DeepNs),
-          sources.SyntheticDocs.zipfCorpus(_, _))
-        settle(spark)
-        BenchCore.deepFamily(spark, "lsh", names, pts, benchRuns, d => {
-          val c = operators.NearDup.lshCandidateCount(spark, d)
-          spark.catalog.clearCache()
-          val p = operators.NearDup.lshPrunedCandidateCount(spark, d)
-          spark.catalog.clearCache()
-          s""","candidates":$c,"candidates_pruned":$p"""
-        })
-      case "text" =>
-        val pts = BenchCore.docPoints(spark, "zipf", ptsOverride.getOrElse(DeepNs),
-          sources.SyntheticDocs.zipfCorpus(_, _))
-        settle(spark)
-        // setsim variance decomposition (round-13 verdict task #4): time
-        // the candidate surface alone vs the full verify, and record the
-        // candidate/emitted-pair counts per point, so "output-bound" is a
-        // measured claim with a per-point volume attached.
-        BenchCore.deepFamily(spark, "text", names, pts, benchRuns, d => {
-          val t0 = System.nanoTime()
-          val cand = operators.SetSim.prefixCandidateCount(spark, d)
-          val tCand = (System.nanoTime() - t0) / 1e9
-          spark.catalog.clearCache()
-          val t1 = System.nanoTime()
-          val pairsN = operators.SetSim.prefixPairCount(spark, d)
-          val tFull = (System.nanoTime() - t1) / 1e9
-          spark.catalog.clearCache()
-          s""","setsim_candidates":$cand,"setsim_cand_sec":$tCand""" +
-            s""","setsim_pairs":$pairsN,"setsim_full_sec":$tFull"""
-        })
-      case "events" =>
-        val pts = ptsOverride.getOrElse(EventNs).map { n =>
-          val d = s"/tmp/graft_synth_events_$n"
-          sources.SyntheticEvents.writePoint(spark, d, n); n -> d
-        }
-        settle(spark)
-        BenchCore.deepFamily(spark, "events", names, pts, benchRuns)
-    }
-    write(s"BENCH_DEEP_$family.json",
+    // generate every point FIRST, then settle: a calib stamped while the
+    // JVM is still digesting generation work contaminates the first point
+    val pts = family.points(spark, ns)
+    settle(spark)
+    val json = BenchCore.deepFamily(spark, tag, family.names, pts, benchRuns,
+      d => family.extras(spark, d))
+    write(s"BENCH_DEEP_$tag.json",
       s"""{"runs":$benchRuns,"fresh_jvm":true,"calib_spin_sec":${BenchCore.calibSpin()},$json}""")
-    System.err.println(s"[bench-deep] wrote BENCH_DEEP_$family.json")
+    System.err.println(s"[bench-deep] wrote BENCH_DEEP_$tag.json")
     spark.stop()
   }
 
   /** Post-generation settle: force GC, then spin until two consecutive
     * calibration spins agree within 10% (bounded) — the first timed point
     * must not inherit generation backwash. */
-  private def settle(spark: org.apache.spark.sql.SparkSession): Unit = {
+  private def settle(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     System.gc()
     var prev = BenchCore.spinOnce()
@@ -125,7 +138,7 @@ object BenchDeep {
   private def merge(): Unit = {
     var runs = -1
     val calibs = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val frags = Families.map { f =>
+    val frags = Families.map(_.tag).map { f =>
       val path = s"BENCH_DEEP_$f.json"
       if (!new java.io.File(path).exists()) s""""$f":null"""
       else {

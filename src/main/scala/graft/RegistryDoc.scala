@@ -1,24 +1,26 @@
 package graft
 
-/** Bench membership sets, shared by Bench (which times them) and
-  * RegistryDoc (which documents them) so REGISTRY.md can't drift from
-  * what the bench actually measures. */
+/** Decade query sets, shared by [[BenchDeep]] (which times each as one
+  * family) and RegistryDoc (which documents them), so REGISTRY.md cannot
+  * drift from what the bench measures. The 10× sets are timed over
+  * synthetic 5k → 16k → 50k points (events: 600k → 6M); the 100× `deep*`
+  * subsets over 5k → 50k → 500k (events: 600k → 6M → 60M). */
 object BenchSets {
-  /** LSH dedup synthetic decade (5k → 50k docs). */
+  /** LSH dedup decade, timed over both the v2 and the Zipf corpus. */
   val lshDecade: Seq[String] =
     Seq("q_dedup_minhash_lsh", "q_dedup_minhash_lsh_pruned",
       "q_dedup_minhash_lsh_auto", "q_dedup_near_materialize")
-  /** Events/sales synthetic decade (600k → 6M events). */
+  /** Events/sales decade (lineitem at the harness 6× ratio). */
   val eventsDecade: Seq[String] =
     Seq("q_kpi_category", "q_events_session", "q_join_range_events",
       "q_events_attribution", "q_events_rfm", "q_events_mau",
       "q_events_debounce", "q_events_cohort_ltv")
-  /** Embeddings synthetic decade (5k → 50k vectors). */
+  /** Embeddings decade (unit vectors with harness statistics). */
   val embedDecade: Seq[String] =
     Seq("q_sim_knn_lsh", "q_sim_knn_lsh_adaptive",
       "q_dedup_embed_cos", "q_dedup_embed_cos_probe", "q_embed_hard_negatives",
       "q_split_semantic_leakage")
-  /** Open-vocabulary Zipf text decade (5k → 50k docs). */
+  /** Open-vocabulary Zipf text decade. */
   val textZipfDecade: Seq[String] =
     Seq("q_text_pmi", "q_text_batch_buckets", "q_text_zipf",
       "q_dedup_setsim_prefix", "q_text_textrank", "q_text_textrank_capped",
@@ -31,8 +33,7 @@ object BenchSets {
       embedDecade.map(_ -> "embed") ++ textZipfDecade.map(_ -> "text-zipf") ++
       textV2Decade.map(_ -> "text-v2")).toMap
 
-  /** 100× deep decade (5k → 50k → 500k, timed by [[BenchDeep]], one fresh
-    * JVM per family): the SCALE-DESIGNED flagships only — each family's
+  /** 100× deep decades: the SCALE-DESIGNED flagships only — each family's
     * fixed-parameter siblings (fixed-plane kNN, uncapped TextRank, unpruned
     * materialize) stop at the 50k decade BY DESIGN, because their cost
     * model is the quadratic the adaptive/pruned/capped paths exist to
@@ -45,9 +46,8 @@ object BenchSets {
   val deepText: Seq[String] =
     Seq("q_text_pmi", "q_dedup_setsim_prefix", "q_text_textrank_capped",
       "q_text_bpe_learn")
-  /** Events-family 100× points (600k → 6M → 60M events; round-10 verdict
-    * task #4 — the reference-derived flagship KPI and sessionization at
-    * two decades). */
+  /** Events-family 100× set: the reference-derived flagship KPI and
+    * sessionization. */
   val deepEvents: Seq[String] = Seq("q_kpi_category", "q_events_session")
   require(deepEmbed.forall(embedDecade.contains) && deepLsh.forall(lshDecade.contains)
     && deepText.forall(textZipfDecade.contains)
@@ -55,7 +55,7 @@ object BenchSets {
     "deep decade sets must be subsets of their 10x decade sets")
 }
 
-/** Generates REGISTRY.md from [[Registry.modules]] (round-6 verdict #8):
+/** Generates REGISTRY.md from [[Registry.modules]]:
   * one row per registered query — oracle status, bench/decade membership —
   * grouped under its API entry point with the module's plan-shape
   * one-liner. Run `runMain graft.RegistryDoc` to refresh;

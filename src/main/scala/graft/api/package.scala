@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 
 /** The library façade: `import graft.api._` gives Dataset-first syntax for
-  * every generic operator core, decoupled from the harness table loaders —
-  * what a user switching from the reference pipeline actually calls.
+  * generic operator cores, decoupled from the harness table loaders — what
+  * a user switching from the reference pipeline actually calls. Every
+  * other core is a public method of its operator object, called directly.
   *
   * Each method delegates to the documented implementation object (where
   * the plan-shape and scale notes live); nothing here adds semantics.
@@ -25,12 +26,6 @@ package object api {
       * under replay. See [[graft.operators.Cdc]]. */
     def cdcSnapshot(): DataFrame = operators.Cdc.applyLog(df)
 
-    /** SCD Type-2 merge of an update batch into this dimension history.
-      * See [[graft.operators.Scd.applyScd2]]. */
-    def scd2Apply(updates: DataFrame, key: String, attrs: Seq[String],
-        effective: Column): DataFrame =
-      operators.Scd.applyScd2(df, updates, key, attrs, effective)
-
     /** Connected components of this (src, dst) edge list — iterative
       * min-label propagation. See [[graft.operators.Graph]]. */
     def connectedComponents(maxIter: Int = 25): DataFrame =
@@ -48,39 +43,9 @@ package object api {
     /** Oriented triangle enumeration over this (lo, hi) edge list. */
     def triangles(): DataFrame = operators.Graph.triangles(df)
 
-    /** Tumbling 1-hour event windows (columns: ts, event_type, value). */
-    def eventWindows(): DataFrame = operators.Events.windowAgg(df)
-
-    /** 30-minute-gap sessions per user (columns: ts, user_id, value). */
-    def eventSessions(): DataFrame = operators.Events.sessionAgg(df)
-
-    /** RFM quintile segmentation per user (columns: user_id, ts,
-      * event_type, value). See [[graft.operators.Events.rfmOf]]. */
-    def rfmSegments(): DataFrame = operators.Events.rfmOf(df)
-
-    /** Exact two-sample Kolmogorov–Smirnov distance between the `value`
-      * distributions of two `event_type` populations.
-      * See [[graft.operators.Scans.ksOf]]. */
-    def ksDistance(sideA: String, sideB: String): DataFrame =
-      operators.Scans.ksOf(df, sideA, sideB)
-
-    /** Exact midrank Mann–Whitney U between two `event_type` populations.
-      * See [[graft.operators.Scans.mannWhitneyOf]]. */
-    def mannWhitneyU(sideA: String, sideB: String): DataFrame =
-      operators.Scans.mannWhitneyOf(df, sideA, sideB)
-
     /** Redact email/URL/IPv4 substrings of `text` into typed tokens
       * (columns: doc_id, text). See [[graft.operators.TextAnalysis.piiRedactOf]]. */
     def piiRedact(): DataFrame = operators.TextAnalysis.piiRedactOf(df)
-
-    /** Dim² integer-tick Gram (second-moment) matrix of the `embedding`
-      * column. See [[graft.operators.Pca.gramOf]]. */
-    def gramMatrix(): DataFrame = operators.Pca.gramOf(df)
-
-    /** Top principal direction (uncentered) of the `embedding` column by
-      * exact-integer power iteration. See [[graft.operators.Pca.pcaPowerOf]]. */
-    def pcaTopDirection(): DataFrame =
-      operators.Pca.pcaPowerOf(df.sparkSession, df)
 
     /** Merge-style as-of join: each left row gets the latest `right` row
       * of the same key at or before its timestamp.
@@ -111,10 +76,6 @@ package object api {
     def maxConcurrentSessions(): DataFrame =
       operators.Concurrency.maxConcurrentOf(df)
 
-    /** Gini coefficient of per-user purchase spend (columns: user_id,
-      * event_type, value). See [[graft.operators.Events.giniOf]]. */
-    def giniSpend(): DataFrame = operators.Events.giniOf(df)
-
     /** MMR-diversified top picks per query over a (vec_id, embedding)
       * frame. See [[graft.operators.Retrieval.mmrOf]]. */
     def mmrPicks(queryIds: Seq[Long]): DataFrame =
@@ -140,11 +101,5 @@ package object api {
       * retrieval chunking (columns: doc_id, text).
       * See [[graft.operators.TextAnalysis.ingestChunksOf]]. */
     def ingestChunks(): DataFrame = operators.TextAnalysis.ingestChunksOf(df)
-
-    /** [[ingestChunks]] with dedup state BOUNDED to `horizon` of the
-      * required `ingest_time` watermark column — the streaming form.
-      * See [[graft.operators.TextAnalysis.ingestChunksBoundedOf]]. */
-    def ingestChunksBounded(horizon: String): DataFrame =
-      operators.TextAnalysis.ingestChunksBoundedOf(df, horizon)
   }
 }

@@ -1,18 +1,16 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 
-/** Keyed sinks replacing the reference's DynamoDB writer
+/** The keyed batch sink replacing the reference's DynamoDB writer
   * (transform.py:149-202), minus its anti-pattern: the reference
   * `collect()`s the whole result to the driver and loops a Python
-  * batch-writer (25 items/request). Both paths here stay distributed.
+  * batch-writer (25 items/request). Here the write stays distributed.
   *
   * Scale notes (100 TB): `write` streams executor-side straight to
   * partitioned parquet — the keyed-lookup layout (key → directory) that a
-  * KV import can consume. `foreachPartitionUpsert` is the live-store path:
-  * one client per PARTITION (not per row), rows streamed through it, which
-  * is the `foreachPartition` idiom the reference's driver loop should have
-  * been.
+  * KV import can consume. The streaming form is
+  * [[graft.streaming.UpsertSink]].
   */
 object KeyedSink {
 
@@ -22,14 +20,4 @@ object KeyedSink {
     val w = df.write.mode("overwrite")
     (if (keys.nonEmpty) w.partitionBy(keys: _*) else w).parquet(path)
   }
-
-  /** Stream rows into a keyed store: `client` is built once per partition
-    * (connection amortization), fed every row, then closed. */
-  def foreachPartitionUpsert[C](df: DataFrame)(
-      client: () => C, put: (C, Row) => Unit, close: C => Unit): Unit =
-    df.foreachPartition { rows: Iterator[Row] =>
-      val c = client()
-      try rows.foreach(r => put(c, r))
-      finally close(c)
-    }
 }

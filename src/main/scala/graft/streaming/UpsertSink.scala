@@ -12,10 +12,9 @@ import org.apache.spark.sql.types.StructType
   *
   * State layout here is a plain parquet directory merged read-modify-write
   * per batch (local-filesystem demo; production swaps the merge body for a
-  * transactional table format's MERGE or a KV store's batch put — via
-  * [[graft.pipeline.KeyedSink.foreachPartitionUpsert]] — without touching
-  * the streaming plan). Merge = anti-join current state against the batch
-  * keys + union, executed distributed.
+  * transactional table format's MERGE or a KV store's batch put without
+  * touching the streaming plan). Merge = anti-join current state against
+  * the batch keys + union, executed distributed.
   *
   * This is the one sink every stream monitor ends in. A monitor whose
   * published table is DERIVED from the keyed store (a rollup, a matrix, a

@@ -13,7 +13,9 @@ import scala.jdk.CollectionConverters._
   *    `UpsertSink.keyedParquetUpsert` (only it and `IngestPipeline`'s
   *    exactly-once merge run `foreachBatch` or call `swapInto`), admission
   *    is fixed at one file per trigger (no `maxFilesPerTrigger` parameter),
-  *    and the events `ts` normalization exists once, in `Tables`. */
+  *    and the events `ts` normalization exists once, in `Tables`;
+  *  - tooling: five mains, three `SPARK_GRAFT_*` switches, and the decade
+  *    re-timer and fits called only from `BenchCore.deepFamily`. */
 class SessionTripwireSpec extends AnyFunSuite {
 
   /** Scala files under `root` that contain `needle`, as repo-relative paths. */
@@ -55,5 +57,26 @@ class SessionTripwireSpec extends AnyFunSuite {
   test("only Tables matches on TimestampNTZType under src/main/scala") {
     assert(filesContaining("src/main/scala", "TimestampNTZType =>") ===
       Set("src/main/scala/graft/sources/Tables.scala"))
+  }
+
+  private def graftFiles(names: String*): Set[String] =
+    names.map(n => s"src/main/scala/graft/$n.scala").toSet
+
+  test("the mains under src/main/scala are Bench, BenchDeep, Explain, Verify and RegistryDoc") {
+    assert(filesContaining("src/main/scala", "def main(") ===
+      graftFiles("Bench", "BenchDeep", "Explain", "Verify", "RegistryDoc"))
+  }
+
+  test("the SPARK_GRAFT_* variables read under src/main/scala are CPUS, SF_DIR and BENCH_RUNS") {
+    val read = "\"SPARK_GRAFT_([A-Z_]+)\"".r
+    val names = filesContaining("src/main/scala", "\"SPARK_GRAFT_").flatMap { f =>
+      read.findAllMatchIn(Files.readString(Paths.get(f))).map(_.group(1))
+    }
+    assert(names === Set("CPUS", "SF_DIR", "BENCH_RUNS"))
+  }
+
+  test("only BenchCore calls retimeSuspects and alphaMonoJson under src/main/scala") {
+    for (call <- Seq("retimeSuspects(", "alphaMonoJson("))
+      assert(filesContaining("src/main/scala", call) === graftFiles("BenchCore"), call)
   }
 }
