@@ -290,11 +290,10 @@ object Mining {
     //    legs. The EXECUTED plan refutes that: through the toks persist
     //    every unigram leg becomes its own TableCacheQueryStage and the
     //    three word-hash exchanges never canonicalize equal — 0
-    //    ReusedExchange (plans/r13/q_text_pmi_derived_totals_executed.txt),
-    //    so Σ uc just swapped an 8-row map-side grand count for a
-    //    vocab-histogram shuffle (+70 MB at 500k, wall-clock a tie inside
-    //    noise). Reuse-dependent rewrites need the executed plan checked
-    //    BEFORE being kept (the lm_bigram lesson, round 12 → 13).
+    //    ReusedExchange, so Σ uc just swapped an 8-row map-side grand
+    //    count for a vocab-histogram shuffle (+70 MB at 500k, wall-clock a
+    //    tie inside noise). Reuse-dependent rewrites need the executed
+    //    plan checked BEFORE being kept (the lm_bigram lesson).
     val np = pairs.agg(count(lit(1)).as("np"))
     val u = toks.select(explode(col("w")).as("word")).filter(col("word") =!= "")
     val uc = u.groupBy(col("word")).agg(count(lit(1)).as("n_w"))

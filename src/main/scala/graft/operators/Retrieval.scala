@@ -792,9 +792,8 @@ object Retrieval {
     // discipline, r12 change 8):
     // (a) Feeding pass 2 `tf1 ∪ tfOf(words, E \ T1)` so pass-1's tf
     //     exchange is reused (the r12 verdict's candidate #1): the reuse
-    //     DID appear in the executed plan (ReusedExchange on tf1,
-    //     plans/r13/q_retrieval_prf_executed_after.txt), but tf is
-    //     term-filter-bounded — O(Σ df(query terms)) rows — so the saved
+    //     DID appear in the executed plan (ReusedExchange on tf1), but tf
+    //     is term-filter-bounded — O(Σ df(query terms)) rows — so the saved
     //     re-aggregation is tiny relative to the unavoidable corpus
     //     scans, while the extra union/stage boundaries cost ~10% at
     //     bench scale (isolated paired A/B, best-of-5: 4.05 → 4.50 s at

@@ -62,9 +62,6 @@ final case class StreamDefaults(
       events: Dataset[TransitionStream.Ev]): Dataset[TransitionStream.UserTrans] =
     TransitionStream.userTransitions(spark, events, journeyCap, idleTtl)
 
-  def cdcLatestWins(spark: SparkSession, srcDir: String): Dataset[CdcStream.KeyState] =
-    CdcStream.latestWins(spark, srcDir, idleTtlProcMs)
-
   def funnel(spark: SparkSession,
       events: Dataset[Stateful.FunnelEvent]): Dataset[Stateful.FunnelResult] =
     Stateful.funnelState(spark, events, idleTtl)
@@ -76,8 +73,10 @@ object StreamDefaults {
     * accepted arrival skew — the usual log-shipping contract. */
   val ProductionIdleTtl: Ttl = Ttl(ttlMs = 7L * 24 * 3600 * 1000, lateness = "1 hour")
 
-  /** Production processing-time idle horizon for the two twins whose
-    * sources carry no event time (basket assembly, CDC latest-wins). */
+  /** Production processing-time idle horizon for the twins whose sources
+    * carry no event time: basket assembly (`orderPairs`), and CDC
+    * latest-wins, whose TTL stays an explicit opt-in argument of
+    * `CdcStream.latestWins`. */
   val ProductionProcTtlMs: Long = 24L * 3600 * 1000
 
   val replay: StreamDefaults = StreamDefaults(

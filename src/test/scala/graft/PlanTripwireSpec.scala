@@ -1,17 +1,17 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 
-/** Registry-wide scale-killer tripwire (round-3 verdict ask #8): every
-  * registered query's physical plan is scanned for the two join shapes
-  * that are O(n·m) at scale — CartesianProduct and
-  * BroadcastNestedLoopJoin — so a future regression fails CI the day it
-  * lands, not at judge time.
+/** Registry-wide scale-killer tripwire: every registered query's
+  * physical plan is scanned for the two join shapes that are O(n·m) at
+  * scale — CartesianProduct and BroadcastNestedLoopJoin — and for
+  * unpartitioned windows, so a regression fails the day it lands. Each
+  * query is planned once (not executed) and both registry-wide tests read
+  * that one plan.
   *
   * Allowed exceptions, each individually justified:
   *  - a BNLJ whose broadcast side is a grand aggregate (grouping-free
@@ -27,6 +27,10 @@ import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, Cartes
 class PlanTripwireSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   private val dir = SparkSpec.sf0001
+
+  /** Every registered query's physical plan, planned once for both tests. */
+  private lazy val plans: Seq[(String, SparkPlan)] =
+    Registry.all.map(q => q.name -> q.run(spark, dir).queryExecution.executedPlan)
 
   /** Queries whose BNLJ against a small constant-size broadcast side is
     * the documented algorithm (see Similarity/EmbedClassify scaladoc). */
@@ -69,8 +73,7 @@ class PlanTripwireSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     agg.exists(_.groupingExpressions.isEmpty)
   }
 
-  private def offenders(name: String, df: DataFrame): Seq[String] = {
-    val plan = df.queryExecution.executedPlan
+  private def offenders(name: String, plan: SparkPlan): Seq[String] = {
     val cartesian = collect(plan) { case c: CartesianProductExec => c }
       .map(_ => s"$name: CartesianProduct")
     val bnlj = collect(plan) { case j: BroadcastNestedLoopJoinExec => j }
@@ -86,10 +89,10 @@ class PlanTripwireSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   }
 
   test("no registered query plans a cartesian or multi-row BNLJ (exact whitelist)") {
-    val hits = Registry.all.flatMap { q =>
-      val bad = offenders(q.name, q.run(spark, dir))
-      if (bnljWhitelist.contains(q.name)) {
-        assert(bad.nonEmpty, s"${q.name} is whitelisted but no longer plans a BNLJ — remove it")
+    val hits = plans.flatMap { case (name, plan) =>
+      val bad = offenders(name, plan)
+      if (bnljWhitelist.contains(name)) {
+        assert(bad.nonEmpty, s"$name is whitelisted but no longer plans a BNLJ — remove it")
         Nil
       } else bad
     }
@@ -97,7 +100,7 @@ class PlanTripwireSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   }
 
   /** Queries whose unpartitioned window runs over a provably BOUNDED
-    * input — never the raw row count (round-5 verdict ask #1's guard):
+    * input — never the raw row count:
     *  - q_stats_ks / q_stats_mannwhitney: cumulative over the
     *    DISTINCT-cent-value histogram (money-bounded domain);
     *  - q_events_cum_users: running sum over the per-DAY series
@@ -107,7 +110,7 @@ class PlanTripwireSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     *    partition reach the final unpartitioned sort.
     * Exact in both directions, like the BNLJ whitelist. Notably ABSENT:
     * q_events_rfm, whose three global ntile windows were rewritten onto
-    * broadcast histogram cutpoints in round 6. */
+    * broadcast histogram cutpoints. */
   private val globalWindowWhitelist: Set[String] = Set(
     "q_stats_ks", "q_stats_mannwhitney", "q_events_cum_users",
     "q_text_top_words", "q_text_top_bigrams",
@@ -199,22 +202,20 @@ class PlanTripwireSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     // user-sized work is the keyed design aggregate upstream
     "q_train_conformal")
 
-  private def globalWindows(name: String, df: DataFrame): Seq[String] = {
-    val plan = df.queryExecution.executedPlan
+  private def globalWindows(name: String, plan: SparkPlan): Seq[String] =
     collect(plan) {
       case w: org.apache.spark.sql.execution.window.WindowExec
         if w.partitionSpec.isEmpty => s"$name: unpartitioned WindowExec"
       case w: org.apache.spark.sql.execution.window.WindowGroupLimitExec
         if w.partitionSpec.isEmpty => s"$name: unpartitioned WindowGroupLimitExec"
     }
-  }
 
   test("no registered query plans an unpartitioned window outside the bounded-input whitelist") {
-    val hits = Registry.all.flatMap { q =>
-      val bad = globalWindows(q.name, q.run(spark, dir))
-      if (globalWindowWhitelist.contains(q.name)) {
+    val hits = plans.flatMap { case (name, plan) =>
+      val bad = globalWindows(name, plan)
+      if (globalWindowWhitelist.contains(name)) {
         assert(bad.nonEmpty,
-          s"${q.name} is whitelisted but no longer plans a global window — remove it")
+          s"$name is whitelisted but no longer plans a global window — remove it")
         Nil
       } else bad
     }

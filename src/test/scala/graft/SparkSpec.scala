@@ -24,6 +24,8 @@ object SparkSpec {
     s
   }
   val sf0001 = "/root/testdata/sf0.001"
+  /** The oracle's correctness scale, a sibling of [[sf0001]]. */
+  val sf001: String = java.nio.file.Paths.get(sf0001).resolveSibling("sf0.01").toString
   val referenceData = "/root/reference/Data"
   /** The reference CSV layout at test size, committed under
     * src/test/resources/reference_layout (see its README for the expected
