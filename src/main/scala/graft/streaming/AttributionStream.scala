@@ -3,7 +3,7 @@ package graft.streaming
 import graft.sources.Tables
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming last-touch attribution — the stateful twin of the batch
   * `q_events_attribution` (operators/Events.attribution), exact under
@@ -33,9 +33,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * binding-cap eviction behavior. */
 object AttributionStream {
 
-  /** Default per-user touch bound (round-5 verdict ask #4): caps are ON by
-    * default — state keeps each user's latest DefaultTouchCap touches by
-    * (ts, event_id). Users at or under the cap are exact; the documented
+  /** Default per-user touch bound: caps are ON by default — state keeps
+    * each user's latest DefaultTouchCap touches by (ts, event_id). Users at or under the cap are exact; the documented
     * approximation beyond it is a purchase older than every kept touch.
     * Unbounded touch state is the explicit [[Unbounded]] opt-out. (The
     * purchase list is NOT capped: a late touch can re-attribute any old
@@ -76,39 +75,26 @@ object AttributionStream {
       touchCap: Option[Int] = DefaultTouchCap,
       idleTtl: Option[Ttl] = None): org.apache.spark.sql.Dataset[AttRow] = {
     import spark.implicits._
-    val src = idleTtl.fold(events)(t => Ttl.watermarked(events, t.lateness))
-    val conf = if (idleTtl.isDefined) GroupStateTimeout.EventTimeTimeout
-               else GroupStateTimeout.NoTimeout
-    src
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[AttState, AttRow](OutputMode.Update, conf) {
-        (uid: Long, batch: Iterator[Ev], state: GroupState[AttState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val prev = state.getOption.getOrElse(AttState(Nil, Nil))
-            var touches = prev.touches
-            var purchases = prev.purchases
-            var maxTsUs = Long.MinValue
-            batch.foreach { e =>
-              if (e.ts_us > maxTsUs) maxTsUs = e.ts_us
-              e.event_type match {
-                case "purchase" => purchases = (e.ts_us, e.event_id, e.cents) :: purchases
-                case "click" | "view" => touches = (e.ts_us, e.event_id, e.event_type) :: touches
-                case _ =>
-              }
-            }
-            // last-k by (ts, event_id) is associative: capping the KEPT state
-            // converges under any arrival order while bounding it at O(cap)
-            val kept = touchCap.fold(touches)(c =>
-              touches.sortBy(t => (-t._1, -t._2)).take(c))
-            state.update(AttState(kept, purchases))
-            idleTtl.foreach(t =>
-              state.setTimeoutTimestamp(Ttl.deadline(state, maxTsUs / 1000, t.ttlMs)))
-            purchases.iterator.map { case (ts, id, cents) =>
-              AttRow(uid, id, channelOf(ts, kept), cents)
-            }
+    Ttl.keyed(events, Ttl.eventTime(idleTtl)((e: Ev) => e.ts_us))(_.user_id) {
+      (uid: Long, prev: Option[AttState], batch: Iterator[Ev]) =>
+        val p = prev.getOrElse(AttState(Nil, Nil))
+        var touches = p.touches
+        var purchases = p.purchases
+        batch.foreach { e =>
+          e.event_type match {
+            case "purchase" => purchases = (e.ts_us, e.event_id, e.cents) :: purchases
+            case "click" | "view" => touches = (e.ts_us, e.event_id, e.event_type) :: touches
+            case _ =>
           }
-      }
+        }
+        // last-k by (ts, event_id) is associative: capping the KEPT state
+        // converges under any arrival order while bounding it at O(cap)
+        val kept = touchCap.fold(touches)(c =>
+          touches.sortBy(t => (-t._1, -t._2)).take(c))
+        (AttState(kept, purchases), purchases.iterator.map { case (ts, id, cents) =>
+          AttRow(uid, id, channelOf(ts, kept), cents)
+        })
+    }
   }
 
   /** Start the monitor: attributed purchases upserted into `stateDir`_rows,

@@ -3,12 +3,12 @@ package graft.streaming
 import graft.functions.Rounding.roundN
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming market-basket lift — the stateful twin of the batch
-  * `q_basket_affinity` (operators/Analytics.basketAffinity), the third
-  * of the round-3 analytics to get a streaming consumer (PSI drift and
-  * the transition matrix being the others).
+  * `q_basket_affinity` (operators/Analytics.basketAffinity), one of three
+  * batch analytics with a streaming consumer (PSI drift and the
+  * transition matrix being the others).
   *
   * Unlike the transition matrix, basket pair state is MONOTONE: a
   * late-arriving item only ADDS pairs to its order, it can never
@@ -36,12 +36,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object BasketStream {
 
-  /** Default per-order state bound (round-5 verdict ask #4): caps are ON
-    * by default — state keeps the DefaultBasketCap best items per order by
-    * the deterministic md5 rank (the batch `q_basket_affinity_capped`
-    * semantics), bounding pair fan-out at C(cap, 2) per order. Baskets at
-    * or under the cap match the uncapped lift exactly; unbounded state is
-    * the explicit [[Unbounded]] opt-out. */
+  /** Default per-order state bound: caps are ON by default — state keeps
+    * the DefaultBasketCap best items per order by the deterministic md5
+    * rank (the batch `q_basket_affinity_capped` semantics), bounding pair
+    * fan-out at C(cap, 2) per order. Baskets at or under the cap match the
+    * uncapped lift exactly; unbounded state is the explicit [[Unbounded]]
+    * opt-out. */
   val DefaultBasketCap: Option[Int] = Some(100)
   /** Explicit opt-out: unbounded per-order state (exact uncapped twin). */
   val Unbounded: Option[Int] = None
@@ -64,8 +64,9 @@ object BasketStream {
   /** Per-order state: emit the order's current presence + pair rows on
     * every touch. Replace-upsert downstream makes re-emission idempotent.
     * With `basketCap` set, kept state is the cap best items by md5 rank;
-    * displaced pairs are retracted with n=0 rows. */
-  /** With `idleTtlProcMs` set: the order's item set is evicted after that
+    * displaced pairs are retracted with n=0 rows.
+    *
+    * With `idleTtlProcMs` set: the order's item set is evicted after that
     * many milliseconds of PROCESSING time with no new items — the item
     * changelog carries no event time (an `Item` is (okey, part)), so the
     * idle clock here is wall-clock between triggers, not a watermark
@@ -80,38 +81,29 @@ object BasketStream {
       basketCap: Option[Int] = DefaultBasketCap,
       idleTtlProcMs: Option[Long] = None): org.apache.spark.sql.Dataset[BasketRow] = {
     import spark.implicits._
-    val conf = if (idleTtlProcMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-               else GroupStateTimeout.NoTimeout
-    items
-      .groupByKey(_.okey)
-      .flatMapGroupsWithState[Set[Long], BasketRow](OutputMode.Update, conf) {
-        (okey: Long, batch: Iterator[Item], state: GroupState[Set[Long]]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-          val old = state.getOption.getOrElse(Set.empty[Long])
-          val merged = batch.foldLeft(old)((acc, it) => acc + it.part)
-          val kept = basketCap.fold(merged)(c =>
-            merged.toIndexedSeq.sortBy(p => (md5Hex(p.toString), p)).take(c).toSet)
-          state.update(kept)
-          idleTtlProcMs.foreach(state.setTimeoutDuration)
-          def pairsOf(s: Set[Long]): IndexedSeq[(Long, Long)] = {
-            val sorted = s.toIndexedSeq.sorted
-            for { i <- sorted.indices; j <- (i + 1) until sorted.size }
-              yield (sorted(i), sorted(j))
-          }
-          val cur = pairsOf(kept)
-          // only a cap displacement can dissolve a pair; old is the KEPT
-          // set of the previous touch, so its pairs are what the store has
-          val vanished = pairsOf(old).toSet -- cur
-          // presence stays uncapped: every item seen this touch (items
-          // displaced in EARLIER touches already have their store row)
-          merged.toIndexedSeq.sorted.iterator
-            .map(p => BasketRow(okey, p, PairSentinel, 1L)) ++
-            cur.iterator.map { case (a, b) => BasketRow(okey, a, b, 1L) } ++
-            vanished.toIndexedSeq.sorted.iterator
-              .map { case (a, b) => BasketRow(okey, a, b, 0L) }
-          }
-      }
+    def pairsOf(s: Set[Long]): IndexedSeq[(Long, Long)] = {
+      val sorted = s.toIndexedSeq.sorted
+      for { i <- sorted.indices; j <- (i + 1) until sorted.size }
+        yield (sorted(i), sorted(j))
+    }
+    Ttl.keyed(items, Ttl.processingTime(idleTtlProcMs))(_.okey) {
+      (okey: Long, prev: Option[Set[Long]], batch: Iterator[Item]) =>
+        val old = prev.getOrElse(Set.empty[Long])
+        val merged = batch.foldLeft(old)((acc, it) => acc + it.part)
+        val kept = basketCap.fold(merged)(c =>
+          merged.toIndexedSeq.sortBy(p => (md5Hex(p.toString), p)).take(c).toSet)
+        val cur = pairsOf(kept)
+        // only a cap displacement can dissolve a pair; old is the KEPT
+        // set of the previous touch, so its pairs are what the store has
+        val vanished = pairsOf(old).toSet -- cur
+        // presence stays uncapped: every item seen this touch (items
+        // displaced in EARLIER touches already have their store row)
+        (kept, merged.toIndexedSeq.sorted.iterator
+          .map(p => BasketRow(okey, p, PairSentinel, 1L)) ++
+          cur.iterator.map { case (a, b) => BasketRow(okey, a, b, 1L) } ++
+          vanished.toIndexedSeq.sorted.iterator
+            .map { case (a, b) => BasketRow(okey, a, b, 0L) })
+    }
   }
 
   /** Start the monitor: presence/pair rows replace-upserted into

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.operators.Cdc
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Streaming CDC apply — the incremental twin of the batch
@@ -61,25 +61,13 @@ object CdcStream {
   def latestWins(spark: SparkSession, srcDir: String,
       idleTtlProcMs: Option[Long] = None): Dataset[KeyState] = {
     import spark.implicits._
-    val conf = if (idleTtlProcMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-               else GroupStateTimeout.NoTimeout
-    spark.readStream.schema(changeSchema).parquet(srcDir).as[Change]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[Long, KeyState](
-        org.apache.spark.sql.streaming.OutputMode.Update, conf) {
-        (key: Long, batch: Iterator[Change], state: GroupState[Long]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var best = state.getOption.getOrElse(Long.MinValue)
-            batch.foreach { c =>
-              val p = Cdc.pack(c.seq, c.op, c.cents)
-              if (p > best) best = p
-            }
-            state.update(best)
-            idleTtlProcMs.foreach(state.setTimeoutDuration)
-            Iterator.single(decode(key, best))
-          }
-      }
+    val changes = spark.readStream.schema(changeSchema).parquet(srcDir).as[Change]
+    Ttl.keyed(changes, Ttl.processingTime(idleTtlProcMs))(_.key) {
+      (key: Long, prev: Option[Long], batch: Iterator[Change]) =>
+        val best = batch.foldLeft(prev.getOrElse(Long.MinValue))((b, c) =>
+          math.max(b, Cdc.pack(c.seq, c.op, c.cents)))
+        (best, Iterator.single(decode(key, best)))
+    }
   }
 
   /** End-to-end: stream the changelog into a keyed parquet snapshot. */

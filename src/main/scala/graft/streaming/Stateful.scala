@@ -1,79 +1,47 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.functions.unix_micros
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Custom arbitrary-state streaming operator via
-  * `KeyValueGroupedDataset.mapGroupsWithState` — the API the engine exposes
-  * for stateful logic that windows/session_window can't express (running
-  * per-key accumulators, custom eviction). The reference has no stateful
-  * streaming at all (SURVEY.md §2.8), so this is a north-star extension.
+/** Custom arbitrary-state streaming operators over
+  * `KeyValueGroupedDataset.flatMapGroupsWithState` — the API the engine
+  * exposes for stateful logic that windows/session_window can't express
+  * (running per-key accumulators, custom eviction). The reference has no
+  * stateful streaming at all (SURVEY.md §2.8), so this is a north-star
+  * extension.
   *
   * Scale notes: state lives in the state store partitioned by user_id
   * (shuffle on the grouping key once, then incremental per-batch updates);
   * state size is O(distinct users), not O(events). A production deployment
   * bounds the KEY count with an event-time idle TTL ([[Ttl]], the
-  * `idleTtl` knobs below) — NoTimeout stays the default so replay tests
-  * are exactly comparable to batch; the TTL trade is documented on [[Ttl]]
-  * and spec-pinned in StreamTtlSpec.
+  * `idleTtl` knobs below, applied by [[Ttl.keyed]]) — NoTimeout stays the
+  * default so replay tests are exactly comparable to batch; the TTL trade
+  * is documented on [[Ttl]] and spec-pinned in StreamTtlSpec.
   */
 object Stateful {
 
-  final case class Event(user_id: Long, value: Double)
+  final case class TsEvent(user_id: Long, value: Double, ts_us: Long)
   final case class UserStat(user_id: Long, n_events: Long, total_value: Double)
 
-  /** Running per-user event count + value sum, updated per micro-batch. */
-  def runningUserStats(spark: SparkSession, events: Dataset[Event]): Dataset[UserStat] = {
+  /** Running per-user event count + value sum, updated per micro-batch.
+    *
+    * With `idleTtl` set ([[Ttl]]): an idle user's accumulator is evicted
+    * once the watermark passes ttl beyond their last event. Eviction
+    * re-emits the final stat row (idempotent for an upsert sink), and a
+    * reappearing user RESTARTS from zero — the "evicted key re-initializes
+    * as a fresh key" semantic, spec-pinned in StreamTtlSpec. */
+  def runningUserStats(spark: SparkSession, events: Dataset[TsEvent],
+      idleTtl: Option[Ttl] = None): Dataset[UserStat] = {
     import spark.implicits._
-    events
-      .groupByKey(_.user_id)
-      .mapGroupsWithState[UserStat, UserStat](GroupStateTimeout.NoTimeout) {
-        (uid: Long, batch: Iterator[Event], state: GroupState[UserStat]) =>
-          val prev = state.getOption.getOrElse(UserStat(uid, 0L, 0.0))
-          var n = prev.n_events
-          var t = prev.total_value
-          batch.foreach { e => n += 1; t += e.value }
-          val next = UserStat(uid, n, t)
-          state.update(next)
-          next
-      }
-  }
-
-  final case class TsEvent(user_id: Long, value: Double, ts_us: Long)
-
-  /** TTL form of [[runningUserStats]] for event-time-carrying streams
-    * ([[Ttl]] — the production key-count bound): an idle user's
-    * accumulator is evicted once the watermark passes ttl beyond their
-    * last event. Eviction re-emits the final stat row (idempotent for an
-    * upsert sink), and a reappearing user RESTARTS from zero — the
-    * "evicted key re-initializes as a fresh key" semantic, spec-pinned
-    * in StreamTtlSpec. */
-  def runningUserStatsTtl(spark: SparkSession, events: Dataset[TsEvent],
-      ttl: Ttl): Dataset[UserStat] = {
-    import spark.implicits._
-    Ttl.watermarked(events, ttl.lateness)
-      .groupByKey(_.user_id)
-      .mapGroupsWithState[UserStat, UserStat](GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, batch: Iterator[TsEvent], state: GroupState[UserStat]) =>
-          if (state.hasTimedOut) {
-            val last = state.getOption.getOrElse(UserStat(uid, 0L, 0.0))
-            state.remove()
-            last
-          } else {
-            val prev = state.getOption.getOrElse(UserStat(uid, 0L, 0.0))
-            var n = prev.n_events
-            var t = prev.total_value
-            var maxTsUs = Long.MinValue
-            batch.foreach { e =>
-              n += 1; t += e.value
-              if (e.ts_us > maxTsUs) maxTsUs = e.ts_us
-            }
-            val next = UserStat(uid, n, t)
-            state.update(next)
-            state.setTimeoutTimestamp(Ttl.deadline(state, maxTsUs / 1000, ttl.ttlMs))
-            next
-          }
-      }
+    Ttl.keyed(events, Ttl.eventTime(idleTtl)((e: TsEvent) => e.ts_us))(_.user_id)(
+      (uid: Long, prev: Option[UserStat], batch: Iterator[TsEvent]) => {
+        val next = batch.foldLeft(prev.getOrElse(UserStat(uid, 0L, 0.0))) { (s, e) =>
+          s.copy(n_events = s.n_events + 1, total_value = s.total_value + e.value)
+        }
+        (next, Iterator.single(next))
+      },
+      (_: Long, last: UserStat) => Iterator.single(last))
   }
 
   // ------------------------------------------------------ streaming funnel
@@ -93,15 +61,13 @@ object Stateful {
     * fixpoint equals the batch result — StreamingFunnelSpec replays it).
     *
     * Scale notes: state is keyed by user (one shuffle), min-view is O(1),
-    * and candidate sets grow only with per-user clicks/purchases. A
-    * production deployment bounds them with an event-time timeout
-    * (finalize the funnel once the watermark passes, drop the sets) —
-    * kept NoTimeout here so replay equivalence is exact. */
-  /** With `idleTtl` set ([[Ttl]]): the funnel is FINALIZED on eviction —
-    * the timeout re-emits the user's last derived result (idempotent for
-    * an upsert sink) and drops the candidate sets; a reappearing user
-    * re-initializes at stage 0 as a fresh journey (the verdict's example
-    * semantic, spec-pinned in StreamTtlSpec). */
+    * and candidate sets grow only with per-user clicks/purchases. Without
+    * `idleTtl` (the default) nothing is evicted, so replay equivalence is
+    * exact. With `idleTtl` set ([[Ttl]]) the funnel is FINALIZED on
+    * eviction: the timeout re-emits the user's last derived result
+    * (idempotent for an upsert sink) and drops the candidate sets; a
+    * reappearing user re-initializes at stage 0 as a fresh journey
+    * (spec-pinned in StreamTtlSpec). */
   def funnelState(spark: SparkSession, events: Dataset[FunnelEvent],
       idleTtl: Option[Ttl] = None): Dataset[FunnelResult] = {
     import spark.implicits._
@@ -112,36 +78,19 @@ object Stateful {
         if (s.t_view.isEmpty) 0
         else 1 + tClick.size + tPurchase.size)
     }
-    val src = idleTtl.fold(events)(t => Ttl.watermarked(events, t.lateness))
-    val conf = if (idleTtl.isDefined) GroupStateTimeout.EventTimeTimeout
-               else GroupStateTimeout.NoTimeout
-    src
-      .groupByKey(_.user_id)
-      .mapGroupsWithState[FunnelState, FunnelResult](conf) {
-        (uid: Long, batch: Iterator[FunnelEvent], state: GroupState[FunnelState]) =>
-          if (state.hasTimedOut) {
-            val last = state.getOption.getOrElse(FunnelState(None, Nil, Nil))
-            state.remove()
-            derive(uid, last)
-          } else {
-            var s = state.getOption.getOrElse(FunnelState(None, Nil, Nil))
-            var maxTsUs = Long.MinValue
-            batch.foreach { e =>
-              if (e.ts_us > maxTsUs) maxTsUs = e.ts_us
-              e.event_type match {
-                case "view" =>
-                  if (s.t_view.forall(e.ts_us < _)) s = s.copy(t_view = Some(e.ts_us))
-                case "click" => s = s.copy(clicks = e.ts_us :: s.clicks)
-                case "purchase" => s = s.copy(purchases = e.ts_us :: s.purchases)
-                case _ =>
-              }
-            }
-            state.update(s)
-            idleTtl.foreach(t =>
-              state.setTimeoutTimestamp(Ttl.deadline(state, maxTsUs / 1000, t.ttlMs)))
-            derive(uid, s)
+    Ttl.keyed(events, Ttl.eventTime(idleTtl)((e: FunnelEvent) => e.ts_us))(_.user_id)(
+      (uid: Long, prev: Option[FunnelState], batch: Iterator[FunnelEvent]) => {
+        val s = batch.foldLeft(prev.getOrElse(FunnelState(None, Nil, Nil))) { (s, e) =>
+          e.event_type match {
+            case "view" if s.t_view.forall(e.ts_us < _) => s.copy(t_view = Some(e.ts_us))
+            case "click" => s.copy(clicks = e.ts_us :: s.clicks)
+            case "purchase" => s.copy(purchases = e.ts_us :: s.purchases)
+            case _ => s
           }
-      }
+        }
+        (s, Iterator.single(derive(uid, s)))
+      },
+      (uid: Long, last: FunnelState) => Iterator.single(derive(uid, last)))
   }
 
   // ------------------------------------- steps-table streaming funnel
@@ -149,10 +98,10 @@ object Stateful {
   final case class StepsResult(user_id: Long, stage_reached: Int, t_last: Option[Long])
 
   /** Per-step candidate timestamps a user's state retains (smallest-k).
-    * The cap is ON by default (the round-5 "state bounds are opt-out"
-    * rule): a hot user holds ≤ steps×cap longs. Truncation semantics:
-    * keeping the k SMALLEST per step can only lose a candidate that is
-    * LARGER than k earlier same-step events — the fixture-level replay
+    * The cap is ON by default (state bounds are opt-out): a hot user holds
+    * ≤ steps×cap longs. Truncation semantics: keeping the k SMALLEST per
+    * step can only lose a candidate that is LARGER than k earlier
+    * same-step events — the fixture-level replay
     * spec runs under the cap, and production sizes it to the p99.9
     * per-user per-type event count (64 covers the harness data ~10×). */
   val StepCandidateCap = 64
@@ -163,7 +112,12 @@ object Stateful {
     * re-derives the chain (t₁ = min step-1; tₖ = min step-k > tₖ₋₁) on
     * every update, so a late-arriving earlier event re-chains later
     * steps exactly as batch would. One shuffle on user_id; state is
-    * O(steps × cap) longs per user. */
+    * O(steps × cap) longs per user.
+    *
+    * With `idleTtl` set ([[Ttl]]): eviction finalizes — it re-emits the
+    * last derived result and drops the candidate sets; a reappearing user
+    * re-chains from scratch as a fresh journey (spec-pinned in
+    * StreamTtlSpec). */
   def funnelStepsState(
       spark: SparkSession, events: Dataset[FunnelEvent], steps: Seq[String],
       cap: Int = StepCandidateCap,
@@ -186,37 +140,15 @@ object Stateful {
       }
       StepsResult(uid, reached, tPrev)
     }
-    val src = idleTtl.fold(events)(t => Ttl.watermarked(events, t.lateness))
-    val conf = if (idleTtl.isDefined) GroupStateTimeout.EventTimeTimeout
-               else GroupStateTimeout.NoTimeout
-    src
-      .groupByKey(_.user_id)
-      .mapGroupsWithState[Vector[List[Long]], StepsResult](conf) {
-        (uid: Long, batch: Iterator[FunnelEvent], state: GroupState[Vector[List[Long]]]) =>
-          if (state.hasTimedOut) {
-            // finalize on eviction: re-emit the last derived result and
-            // drop the candidate sets; a reappearing user re-chains from
-            // scratch (fresh journey)
-            val last = state.getOption.getOrElse(
-              Vector.fill(steps.length)(List.empty[Long]))
-            state.remove()
-            derive(uid, last)
-          } else {
-            var s = state.getOption.getOrElse(Vector.fill(steps.length)(List.empty[Long]))
-            var maxTsUs = Long.MinValue
-            batch.foreach { e =>
-              if (e.ts_us > maxTsUs) maxTsUs = e.ts_us
-              stepIdx.get(e.event_type).foreach { i =>
-                val merged = (e.ts_us :: s(i)).sorted.take(cap)
-                s = s.updated(i, merged)
-              }
-            }
-            state.update(s)
-            idleTtl.foreach(t =>
-              state.setTimeoutTimestamp(Ttl.deadline(state, maxTsUs / 1000, t.ttlMs)))
-            derive(uid, s)
-          }
-      }
+    Ttl.keyed(events, Ttl.eventTime(idleTtl)((e: FunnelEvent) => e.ts_us))(_.user_id)(
+      (uid: Long, prev: Option[Vector[List[Long]]], batch: Iterator[FunnelEvent]) => {
+        val init = prev.getOrElse(Vector.fill(steps.length)(List.empty[Long]))
+        val s = batch.foldLeft(init) { (s, e) =>
+          stepIdx.get(e.event_type).fold(s)(i => s.updated(i, (e.ts_us :: s(i)).sorted.take(cap)))
+        }
+        (s, Iterator.single(derive(uid, s)))
+      },
+      (uid: Long, last: Vector[List[Long]]) => Iterator.single(derive(uid, last)))
   }
 
   // --------------------------------------------- custom sessionizer
@@ -283,7 +215,7 @@ object Stateful {
   def runToMemory(spark: SparkSession, srcDir: String, sinkName: String): Unit = {
     import spark.implicits._
     val events = EventStreams.eventsStream(spark, srcDir)
-      .selectExpr("user_id", "value").as[Event]
+      .select($"user_id", $"value", unix_micros($"ts").as("ts_us")).as[TsEvent]
     val q = runningUserStats(spark, events)
       .writeStream
       .outputMode(OutputMode.Update())

@@ -21,15 +21,28 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *    fresh; rows older than the watermark are dropped) is documented on
   *    [[Ttl]] and spec-pinned per twin in StreamTtlSpec.
   *
-  * Exemptions — stateful streams with NO TTL knob, each bounded another
-  * way (the documented-exemption list StreamDefaultsSpec pins):
-  *  - sketch monitors (KmvMonitor, CmsMonitor): state is ≤ K counters /
-  *    K hashes per group BY CONSTRUCTION, independent of key cardinality;
-  *  - windowed/session aggregations (EventStreams, RevenueMonitor,
-  *    DriftMonitor, ForecastMonitor, AbtestMonitor, NearDupStream,
-  *    DocIngest): Spark's own watermark evicts closed windows;
-  *  - sinks (UpsertSink, ManifestSink): hold no streaming state — their
-  *    footprint is the output table itself.
+  * Exemptions — streams with no TTL knob, each with its real state bound
+  * (StreamDefaultsSpec pins that every file under `streaming/` is either
+  * a [[Ttl.keyed]] twin or named here):
+  *  - a fixed key space: CmsMonitor's D×W sketch cells (64 counters);
+  *  - keys from the calendar or a schema domain, with no watermark, so
+  *    state grows only with days observed or the domain's size:
+  *    RevenueMonitor and ForecastMonitor (one cents total per `day`),
+  *    DriftMonitor (`psiMonitor` one count per `l_returnflag`, `ksMonitor`
+  *    one histogram row per distinct cent value), KmvMonitor (≤ 16
+  *    hashes per (week, event_type)), and EventStreams' KPI streams (per
+  *    (category, order_date) and per order_date);
+  *  - Spark's own watermark evicts closed windows and expired keys:
+  *    EventStreams' windowed, hopping, sessions, dedupStream and
+  *    click-view interval join, and DocIngest.ingestBounded;
+  *  - unbounded, O(keys ever seen): AbtestMonitor.userFlags keeps one
+  *    `Int` per user under `NoTimeout` and takes no TTL, because after an
+  *    eviction a returning user's non-converting batch would emit
+  *    `Flag(uid, 0)` over the stored 1; NearDupStream keeps one key per distinct candidate pair,
+  *    and DocIngest.ingest one digest per distinct content;
+  *  - sinks (UpsertSink, IngestPipeline, and sources.ManifestSink) hold no
+  *    streaming state — IngestPipeline dedups batch-locally inside
+  *    `foreachBatch`, and their footprint is the output table itself.
   */
 final case class StreamDefaults(
     idleTtl: Option[Ttl],

@@ -4,7 +4,7 @@ import graft.functions.Rounding.roundN
 import graft.sources.Tables
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming user-journey transition matrix — the stateful twin of the
   * batch `q_events_markov` (operators/Events.transitionMatrix), exact
@@ -36,11 +36,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object TransitionStream {
 
-  /** Default per-user state bound (round-5 verdict ask #4): the
-    * zero-config stream must not grow per-key state without limit, so the
-    * journey cap is ON by default — state keeps each user's first
-    * DefaultJourneyCap events by (ts, event_id), the exact batch
-    * `q_events_markov_capped` semantics at this cap. Journeys at or under
+  /** Default per-user state bound: the zero-config stream must not grow
+    * per-key state without limit, so the journey cap is ON by default —
+    * state keeps each user's first DefaultJourneyCap events by
+    * (ts, event_id), the exact batch `q_events_markov_capped` semantics at
+    * this cap. Journeys at or under
     * the cap are bit-identical to the uncapped matrix; opting INTO
     * unbounded state is the explicit [[Unbounded]] argument, never the
     * default. */
@@ -78,35 +78,21 @@ object TransitionStream {
       journeyCap: Option[Int] = DefaultJourneyCap,
       idleTtl: Option[Ttl] = None): org.apache.spark.sql.Dataset[UserTrans] = {
     import spark.implicits._
-    val src = idleTtl.fold(events)(t => Ttl.watermarked(events, t.lateness))
-    val conf = if (idleTtl.isDefined) GroupStateTimeout.EventTimeTimeout
-               else GroupStateTimeout.NoTimeout
-    src
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[UserSeq, UserTrans](OutputMode.Update, conf) {
-        (uid: Long, batch: Iterator[Ev], state: GroupState[UserSeq]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val prev = state.getOption.getOrElse(UserSeq(Nil, Nil))
-            var maxTsUs = Long.MinValue
-            val evs = batch.foldLeft(prev.events) { (acc, e) =>
-              if (e.ts_us > maxTsUs) maxTsUs = e.ts_us
-              (e.ts_us, e.event_id, e.event_type) :: acc
-            }
-            // first-k by (ts, event_id) is associative, so capping the KEPT
-            // state (not just the emission) stays batch-exact while bounding
-            // state at O(cap) per user
-            val kept = journeyCap.fold(evs)(c =>
-              evs.sortBy(e => (e._1, e._2)).take(c))
-            val counts = derive(kept)
-            val vanished = prev.known.filterNot(counts.contains)
-            state.update(UserSeq(kept, counts.keys.toList))
-            idleTtl.foreach(t =>
-              state.setTimeoutTimestamp(Ttl.deadline(state, maxTsUs / 1000, t.ttlMs)))
-            counts.iterator.map { case ((f, t), n) => UserTrans(uid, f, t, n) } ++
-              vanished.iterator.map { case (f, t) => UserTrans(uid, f, t, 0L) }
-          }
-      }
+    Ttl.keyed(events, Ttl.eventTime(idleTtl)((e: Ev) => e.ts_us))(_.user_id) {
+      (uid: Long, prev: Option[UserSeq], batch: Iterator[Ev]) =>
+        val p = prev.getOrElse(UserSeq(Nil, Nil))
+        val evs = batch.foldLeft(p.events)((acc, e) => (e.ts_us, e.event_id, e.event_type) :: acc)
+        // first-k by (ts, event_id) is associative, so capping the KEPT
+        // state (not just the emission) stays batch-exact while bounding
+        // state at O(cap) per user
+        val kept = journeyCap.fold(evs)(c =>
+          evs.sortBy(e => (e._1, e._2)).take(c))
+        val counts = derive(kept)
+        val vanished = p.known.filterNot(counts.contains)
+        (UserSeq(kept, counts.keys.toList),
+          counts.iterator.map { case ((f, t), n) => UserTrans(uid, f, t, n) } ++
+            vanished.iterator.map { case (f, t) => UserTrans(uid, f, t, 0L) })
+    }
   }
 
   /** Start the monitor: per-user counts upserted into `stateDir`_counts,

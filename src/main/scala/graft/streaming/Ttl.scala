@@ -2,10 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.GroupState
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Opt-in event-time TTL for keyed streaming state — closing the engine's
-  * last unbounded resource (round-6 verdict #1): the per-KEY caps
+/** Opt-in event-time TTL for keyed streaming state. The per-KEY caps
   * (`DefaultJourneyCap`/`DefaultBasketCap`/`DefaultTouchCap`/
   * `DefaultTimesCap`) bound what one key holds, but the KEY COUNT grows
   * with every user/order/key ever seen. With a [[Ttl]] passed, a stateful
@@ -36,11 +35,70 @@ final case class Ttl(ttlMs: Long, lateness: String = "0 seconds") {
 
 object Ttl {
 
+  /** When a keyed step's idle keys are evicted: never, once the watermark
+    * passes a [[Ttl]] beyond the key's last event time (`tsUs` reads the
+    * row's `ts_us`, the column the watermark is built on), or after `ms`
+    * of processing time without input (for sources that carry no event
+    * time). */
+  sealed trait Idle[-V]
+  case object Never extends Idle[Any]
+  final case class EventTime[V](ttl: Ttl, tsUs: V => Long) extends Idle[V]
+  final case class ProcessingTime(ms: Long) extends Idle[Any]
+
+  /** A twin's `idleTtl` argument as its [[Idle]] policy. */
+  def eventTime[V](idleTtl: Option[Ttl])(tsUs: V => Long): Idle[V] =
+    idleTtl.fold[Idle[V]](Never)(EventTime(_, tsUs))
+
+  /** A twin's `idleTtlProcMs` argument as its [[Idle]] policy. */
+  def processingTime(idleTtlProcMs: Option[Long]): Idle[Any] =
+    idleTtlProcMs.fold[Idle[Any]](Never)(ProcessingTime)
+
+  /** The one keyed-state operator every idle-bounded twin runs on:
+    * `flatMapGroupsWithState` in update mode, with the eviction policy
+    * owned here. A twin supplies only its `step` — fold the batch into the
+    * prior state (None for a fresh or re-initialized key), returning the
+    * next state and the rows to emit — and, optionally, what an evicted
+    * key emits from its last state. `step` must consume the batch: the
+    * event-time deadline comes from the batch's max `tsUs`. */
+  def keyed[K: Encoder, V: Encoder, S: Encoder, U: Encoder](
+      events: Dataset[V], idle: Idle[V])(key: V => K)(
+      step: (K, Option[S], Iterator[V]) => (S, Iterator[U]),
+      evicted: (K, S) => Iterator[U] = (_: K, _: S) => Iterator.empty): Dataset[U] = {
+    val (src, timeout) = idle match {
+      case EventTime(ttl, _) => (watermarked(events, ttl.lateness), GroupStateTimeout.EventTimeTimeout)
+      case ProcessingTime(_) => (events, GroupStateTimeout.ProcessingTimeTimeout)
+      case Never => (events, GroupStateTimeout.NoTimeout)
+    }
+    src.groupByKey(key).flatMapGroupsWithState[S, U](OutputMode.Update, timeout) {
+      (k: K, batch: Iterator[V], state: GroupState[S]) =>
+        if (state.hasTimedOut) {
+          val last = state.get
+          state.remove()
+          evicted(k, last)
+        } else {
+          var maxTsUs = Long.MinValue
+          val in = idle match {
+            case EventTime(_, tsUs) => batch.map { v => maxTsUs = math.max(maxTsUs, tsUs(v)); v }
+            case _ => batch
+          }
+          val (next, out) = step(k, state.getOption, in)
+          state.update(next)
+          idle match {
+            case EventTime(ttl, _) =>
+              state.setTimeoutTimestamp(deadline(state, maxTsUs / 1000, ttl.ttlMs))
+            case ProcessingTime(ms) => state.setTimeoutDuration(ms)
+            case Never =>
+          }
+          out
+        }
+    }
+  }
+
   /** Attach an event-time watermark derived from the dataset's `ts_us`
     * microsecond column (every event-time twin carries one) so
     * `EventTimeTimeout` can fire. The added `event_time` column rides
     * along unreferenced by the typed encoder. */
-  def watermarked[T: Encoder](ds: Dataset[T], lateness: String): Dataset[T] =
+  private def watermarked[T: Encoder](ds: Dataset[T], lateness: String): Dataset[T] =
     ds.withColumn("event_time", timestamp_micros(col("ts_us")))
       .withWatermark("event_time", lateness)
       .as[T]
@@ -50,6 +108,6 @@ object Ttl {
     * current watermark keeps the deadline strictly ahead of it (Spark
     * rejects timeouts at/behind the watermark) even when the batch's
     * events are all older than the watermark's position. */
-  def deadline(state: GroupState[_], batchMaxTsMs: Long, ttlMs: Long): Long =
-    math.max(state.getCurrentWatermarkMs, batchMaxTsMs) + ttlMs
+  private def deadline(state: GroupState[_], batchMaxTsMs: Long, ttlMs: Long): Long =
+    math.max(state.getCurrentWatermarkMs(), batchMaxTsMs) + ttlMs
 }

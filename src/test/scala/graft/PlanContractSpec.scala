@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, ArrayAggregate, ArrayEx
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Sum}
 import org.apache.spark.sql.catalyst.plans.LeftAnti
 import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan, UnionExec}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
@@ -19,12 +18,11 @@ import org.apache.spark.sql.types.LongType
   * runs once, to completion, as `Explain <sfDir> <q> exec` does, and the
   * assertions match operators and expressions, never plan text.
   *
-  * The walk covers every operator of the final plan (through AQE stages)
-  * plus the build plan of each cached relation ONCE, so a count is what
-  * one run physically does. The formatted text repeats a cache's build
-  * plan under every consumer and cannot be counted. A `ReusedExchange` is
-  * a leaf: the exchange it re-reads is not walked again. */
-class PlanContractSpec extends SparkSuite with AdaptiveSparkPlanHelper {
+  * The walk ([[PlanWalk]]) covers every operator of the final plan plus
+  * the build plan of each cached relation ONCE, so a count is what one run
+  * physically does. The formatted text repeats a cache's build plan under
+  * every consumer and cannot be counted. */
+class PlanContractSpec extends SparkSuite {
 
   private val runs = mutable.Map.empty[String, Seq[SparkPlan]]
 
@@ -32,23 +30,10 @@ class PlanContractSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   private def plan(name: String): Seq[SparkPlan] = runs.getOrElseUpdate(name, {
     val df = Registry.byName(name).run(spark, SparkSpec.sf001)
     df.queryExecution.toRdd.count()
-    val ops = operators(df.queryExecution.executedPlan)
+    val ops = PlanWalk.operators(df.queryExecution.executedPlan)
     spark.catalog.clearCache()
     ops
   })
-
-  private def operators(root: SparkPlan): Seq[SparkPlan] = {
-    val built = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean])
-    def walk(p: SparkPlan): Seq[SparkPlan] = {
-      val ops = collect(p) { case op => op }
-      ops ++ ops.collect {
-        case s: InMemoryTableScanExec if built.add(s.relation.cacheBuilder) =>
-          s.relation.cachedPlan
-      }.flatMap(walk)
-    }
-    walk(root)
-  }
 
   private def table(s: FileSourceScanExec): String =
     s.relation.location.rootPaths.head.getName.stripSuffix(".parquet")

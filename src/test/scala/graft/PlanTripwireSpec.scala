@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 
@@ -11,7 +10,8 @@ import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, Cartes
   * scale — CartesianProduct and BroadcastNestedLoopJoin — and for
   * unpartitioned windows, so a regression fails the day it lands. Each
   * query is planned once (not executed) and both registry-wide tests read
-  * that one plan.
+  * that one plan, walked by [[PlanWalk]] so the build plan of every
+  * persisted relation is searched too.
   *
   * Allowed exceptions, each individually justified:
   *  - a BNLJ whose broadcast side is a grand aggregate (grouping-free
@@ -24,7 +24,7 @@ import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, Cartes
   * fails, and a whitelisted query that stops needing its exemption fails
   * too (so the list can't rot).
   */
-class PlanTripwireSpec extends SparkSuite with AdaptiveSparkPlanHelper {
+class PlanTripwireSpec extends SparkSuite {
 
   private val dir = SparkSpec.sf0001
 
@@ -69,14 +69,15 @@ class PlanTripwireSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   /** Build side is a grand aggregate — guaranteed single row. */
   private def singleRowSubtree(p: SparkPlan): Boolean = {
-    val agg = collectFirst(p) { case a: BaseAggregateExec => a }
+    val agg = PlanWalk.operators(p).collectFirst { case a: BaseAggregateExec => a }
     agg.exists(_.groupingExpressions.isEmpty)
   }
 
   private def offenders(name: String, plan: SparkPlan): Seq[String] = {
-    val cartesian = collect(plan) { case c: CartesianProductExec => c }
+    val ops = PlanWalk.operators(plan)
+    val cartesian = ops.collect { case c: CartesianProductExec => c }
       .map(_ => s"$name: CartesianProduct")
-    val bnlj = collect(plan) { case j: BroadcastNestedLoopJoinExec => j }
+    val bnlj = ops.collect { case j: BroadcastNestedLoopJoinExec => j }
       .filterNot { j =>
         val build = j.buildSide match {
           case org.apache.spark.sql.catalyst.optimizer.BuildLeft => j.left
@@ -203,7 +204,7 @@ class PlanTripwireSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     "q_train_conformal")
 
   private def globalWindows(name: String, plan: SparkPlan): Seq[String] =
-    collect(plan) {
+    PlanWalk.operators(plan).collect {
       case w: org.apache.spark.sql.execution.window.WindowExec
         if w.partitionSpec.isEmpty => s"$name: unpartitioned WindowExec"
       case w: org.apache.spark.sql.execution.window.WindowGroupLimitExec
@@ -220,6 +221,12 @@ class PlanTripwireSpec extends SparkSuite with AdaptiveSparkPlanHelper {
       } else bad
     }
     assert(hits.isEmpty, s"single-task global windows found:\n${hits.mkString("\n")}")
+  }
+
+  test("a multi-row BNLJ or cartesian inside a persisted build is still found") {
+    val built = spark.range(10).toDF("a").crossJoin(spark.range(10).toDF("b")).persist()
+    try assert(offenders("persisted", built.groupBy().count().queryExecution.executedPlan).nonEmpty)
+    finally built.unpersist()
   }
 
   test("tfidf: no static broadcast hint on the vocabulary-sized df side") {

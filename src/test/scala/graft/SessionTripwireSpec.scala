@@ -14,6 +14,10 @@ import scala.jdk.CollectionConverters._
   *    exactly-once merge run `foreachBatch` or call `swapInto`), admission
   *    is fixed at one file per trigger (no `maxFilesPerTrigger` parameter),
   *    and the events `ts` normalization exists once, in `Tables`;
+  *  - keyed state: idle eviction (watermark, timeout mode, remove on
+  *    timeout, deadline) is decided once, in `Ttl.keyed`; only
+  *    `Stateful.customSessions`, which finalizes on the watermark and has
+  *    no idle TTL, sets its own event-time timeout;
   *  - tooling: five mains, three `SPARK_GRAFT_*` switches, and the decade
   *    re-timer and fits called only from `BenchCore.deepFamily`. */
 class SessionTripwireSpec extends AnyFunSuite {
@@ -78,5 +82,20 @@ class SessionTripwireSpec extends AnyFunSuite {
   test("only BenchCore calls retimeSuspects and alphaMonoJson under src/main/scala") {
     for (call <- Seq("retimeSuspects(", "alphaMonoJson("))
       assert(filesContaining("src/main/scala", call) === graftFiles("BenchCore"), call)
+  }
+
+  test("only Ttl.scala and customSessions' two lines hold timeout tokens under streaming/") {
+    val tokens = Seq("GroupStateTimeout.EventTimeTimeout", "GroupStateTimeout.ProcessingTimeTimeout",
+      "hasTimedOut", "setTimeoutTimestamp", "setTimeoutDuration", "Ttl.watermarked")
+    val root = "src/main/scala/graft/streaming"
+    val ttl = s"$root/Ttl.scala"
+    val hits = tokens.flatMap(t => filesContaining(root, t) - ttl).distinct.flatMap { f =>
+      Files.readAllLines(Paths.get(f)).asScala.map(_.trim)
+        .filter(l => tokens.exists(l.contains)).map(f -> _)
+    }.sorted
+    val stateful = s"$root/Stateful.scala"
+    assert(hits === Seq(
+      stateful -> "OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {",
+      stateful -> "state.setTimeoutTimestamp(math.max(fireMs, state.getCurrentWatermarkMs() + 1))"))
   }
 }

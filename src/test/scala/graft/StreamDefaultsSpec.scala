@@ -7,7 +7,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   * leave no bounding knob disabled, `replay` must reproduce each twin's
   * parameter defaults exactly, and the appliers must actually wire the
   * preset's knobs into the twin (a short-TTL production copy evicts idle
-  * state the way a direct TTL call does). */
+  * state the way a direct TTL call does). Every stream file is either a
+  * `Ttl.keyed` twin or an exemption named in StreamDefaults' scaladoc. */
 class StreamDefaultsSpec extends SparkSuite {
   import spark.implicits._
 
@@ -78,5 +79,23 @@ class StreamDefaultsSpec extends SparkSuite {
     val viaPreset = run(ds => StreamDefaults.replay.bursts(spark, ds), "sd_preset")
     val direct = run(ds => DebounceStream.bursts(spark, ds), "sd_direct")
     assert(viaPreset === direct && viaPreset.nonEmpty)
+  }
+
+  test("every streaming file is a Ttl.keyed twin or an exemption StreamDefaults names") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val ls = Files.list(Paths.get("src/main/scala/graft/streaming"))
+    val files = try ls.iterator().asScala.toList
+      .map(p => p.getFileName.toString.stripSuffix(".scala") -> Files.readString(p)).toMap
+    finally ls.close()
+    val twins = Set("AttributionStream", "BasketStream", "CdcStream", "DebounceStream",
+      "Stateful", "TransitionStream")
+    val exempt = Set("AbtestMonitor", "CmsMonitor", "DocIngest", "DriftMonitor", "EventStreams",
+      "ForecastMonitor", "IngestPipeline", "KmvMonitor", "NearDupStream", "RevenueMonitor",
+      "UpsertSink")
+    assert(files.keySet === twins ++ exempt ++ Set("Ttl", "StreamDefaults"))
+    assert(files.collect { case (f, src) if src.contains("Ttl.keyed(") => f }.toSet === twins)
+    val doc = files("StreamDefaults").split("Exemptions")(1).split("\\*/")(0)
+    assert(exempt.filterNot(doc.contains) === Set.empty)
   }
 }

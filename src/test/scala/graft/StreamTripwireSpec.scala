@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{EventTimeWatermark, FlatMapG
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.GroupStateTimeout
 
-/** Streaming plan tripwire (round-6 verdict #6) — the streaming
+/** Streaming plan tripwire — the streaming
   * counterpart of PlanTripwireSpec's registry-wide guards: every stateful
   * twin's TTL form must PLAN a watermark plus an event-time timeout (or,
   * for the two no-event-time changelogs, a processing-time timeout), the
@@ -58,9 +58,9 @@ class StreamTripwireSpec extends SparkSuite {
         Seq("view", "click", "purchase"), idleTtl = ttl).toDF(),
       "Stateful.funnelStepsState")
     assertEventTimeTtl(
-      Stateful.runningUserStatsTtl(spark,
-        MemoryStream[Stateful.TsEvent].toDS(), Ttl(60000L)).toDF(),
-      "Stateful.runningUserStatsTtl")
+      Stateful.runningUserStats(spark,
+        MemoryStream[Stateful.TsEvent].toDS(), idleTtl = Some(Ttl(60000L))).toDF(),
+      "Stateful.runningUserStats")
   }
 
   test("custom sessionizer plans EventTimeTimeout under a caller watermark") {

@@ -4,7 +4,7 @@ import graft.streaming._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Event-time TTL eviction for keyed streaming state (round-6 verdict #1):
+/** Event-time TTL eviction for keyed streaming state:
   * per-key caps bound what one key holds, the [[graft.streaming.Ttl]] knob
   * bounds HOW MANY keys are held. Each test pins the documented per-twin
   * eviction semantic: the state-store row count DROPS once the watermark
@@ -133,7 +133,7 @@ class StreamTtlSpec extends SparkSuite {
     import Stateful.{TsEvent, UserStat}
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[TsEvent]
-    val out = Stateful.runningUserStatsTtl(spark, input.toDS(), ttl)
+    val out = Stateful.runningUserStats(spark, input.toDS(), idleTtl = Some(ttl))
     val q = memQuery(out.toDF(), "ttl_stats")
 
     input.addData(TsEvent(1L, 5.0, sec(1000)))
