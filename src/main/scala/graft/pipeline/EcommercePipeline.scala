@@ -68,7 +68,9 @@ object EcommercePipeline {
 final class EcommercePipeline(spark: SparkSession, dataDir: String) {
   import EcommercePipeline.{Audit, ValidationError}
 
-  /** The required columns of `schema`, parsed from `path` and cached. */
+  /** The required columns of `schema`, parsed from `path` and cached. The
+    * category-KPI stream (`EventStreams.kpiCategoryStream`) takes its static
+    * `orders`/`products` from here too, so it parses them once per query. */
   private def load(schema: StructType, path: String): DataFrame =
     spark.read.schema(schema).option("header", "true").csv(path)
       .select(Schemas.requiredFields(schema).map(col): _*).cache()

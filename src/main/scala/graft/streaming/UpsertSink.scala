@@ -1,6 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, lit, max}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
@@ -13,8 +15,11 @@ import org.apache.spark.sql.types.StructType
   * State layout here is a plain parquet directory merged read-modify-write
   * per batch (local-filesystem demo; production swaps the merge body for a
   * transactional table format's MERGE or a KV store's batch put without
-  * touching the streaming plan). Merge = anti-join current state against
-  * the batch keys + union, executed distributed.
+  * touching the streaming plan). Merge = the store's rows whose key is
+  * absent from the batch plus every batch row, executed distributed in one
+  * pass over the batch ([[upsertBatch]]). The store is read with the
+  * batch's schema, so no batch runs a parquet footer-reading job to infer
+  * it.
   *
   * This is the one sink every stream monitor ends in. A monitor whose
   * published table is DERIVED from the keyed store (a rollup, a matrix, a
@@ -46,14 +51,28 @@ object UpsertSink {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         upsertBatch(batch, keys, stateDir)
         if (views.nonEmpty) {
-          val store = batch.sparkSession.read.parquet(stateDir)
+          val store = readStore(batch, stateDir)
           views.foreach { case (dir, view) => publish(view(store), dir) }
         }
       }
       .start()
 
-  /** One merge step: rows in `state` whose key appears in `batch` are
-    * replaced; executed as anti-join + union, all distributed.
+  /** One merge step: the store's rows whose key is absent from `batch`,
+    * plus every row of `batch` — the result of a left-anti join of the
+    * store against the batch keys, unioned with the batch. Store and batch
+    * rows are tagged and unioned, and a store row is dropped only when a
+    * batch row has the same key and no key component is null (a null
+    * never equals a key, so such a store row is always kept).
+    *
+    * `batch` is referenced once on purpose. A foreachBatch `batch` is a
+    * plan over the micro-batch's incremental execution, and every
+    * reference to it executes that plan again: a merge that reads it twice
+    * (anti-join, then union) runs a stateful stream's state-store stage
+    * twice per trigger — twice the state-store instances, every updated
+    * row counted twice in the progress metrics, two commits. Caching does
+    * not prevent it: with `batch.persist()` the union's copy of the batch
+    * plan is not replaced by the cached one, and the stage still ran twice
+    * per trigger, as measured.
     *
     * Entry first recovers a swap that crashed between its two renames
     * ([[recoverState]]): update-mode batches carry only the groups they
@@ -62,17 +81,29 @@ object UpsertSink {
     * group from the published table. */
   private[graft] def upsertBatch(batch: DataFrame, keys: Seq[String],
       stateDir: String): Unit = {
-    val spark = batch.sparkSession
     recoverState(stateDir)
-    val dir = new java.io.File(stateDir)
     val merged =
-      if (!dir.exists()) batch
-      else spark.read.parquet(stateDir)
-        .join(batch.select(keys.map(org.apache.spark.sql.functions.col): _*),
-          keys, "left_anti")
-        .unionByName(batch)
+      if (!new java.io.File(stateDir).exists()) batch
+      else {
+        val keyCols = keys.map(col)
+        readStore(batch, stateDir).withColumn(FromBatch, lit(false))
+          .unionByName(batch.withColumn(FromBatch, lit(true)))
+          .withColumn(KeyInBatch, max(col(FromBatch)).over(Window.partitionBy(keyCols: _*)))
+          .where(col(FromBatch) || !col(KeyInBatch) || keyCols.map(_.isNull).reduce(_ || _))
+          .drop(FromBatch, KeyInBatch)
+      }
     publish(merged, stateDir)
   }
+
+  /** Merge-only tag columns: is the row from the batch, does the batch
+    * hold the row's key. */
+  private val FromBatch = "_upsert_from_batch"
+  private val KeyInBatch = "_upsert_key_in_batch"
+
+  /** The keyed store at `stateDir`, read with the schema of the batches
+    * that wrote it (no footer-reading inference job). */
+  private def readStore(batch: DataFrame, stateDir: String): DataFrame =
+    batch.sparkSession.read.schema(batch.schema).parquet(stateDir)
 
   /** Replace `dir` with the rows of `df`: materialize into `dir.tmp` first
     * (so `df` may read `dir` itself — nothing is overwritten while it is

@@ -29,6 +29,11 @@ class StreamTtlSpec extends SparkSuite {
   private def stateRows(q: StreamingQuery): Long =
     q.lastProgress.stateOperators.head.numRowsTotal
 
+  /** Id of the last reported batch (-1 before any), taken before input is
+    * added so a later check can wait for the batch that reads it. */
+  private def lastBatch(q: StreamingQuery): Long =
+    Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
+
   /** For the ProcessingTimeTimeout twins: `processAllAvailable` can never
     * return there (a proc-time timeout can always fire, so the stream
     * always schedules another batch and `noNewData` is never signaled) —
@@ -38,6 +43,13 @@ class StreamTtlSpec extends SparkSuite {
     while (!cond && System.currentTimeMillis < deadline) Thread.sleep(100)
     assert(cond, msg)
   }
+
+  /** Waits until a batch after `since` has read input, so the newest
+    * progress reflects it: a progress reported before the input was
+    * processed can no longer satisfy a row-count check. */
+  private def awaitInputAfter(q: StreamingQuery, since: Long): Unit =
+    eventually(q.recentProgress.exists(p => p.batchId > since && p.numInputRows > 0),
+      s"no batch after $since read the new input")
 
   private def procTimeQuery(df: org.apache.spark.sql.DataFrame, name: String): StreamingQuery =
     df.writeStream.format("memory").queryName(name)
@@ -219,7 +231,9 @@ class StreamTtlSpec extends SparkSuite {
     // 2 presence rows + the (10, 20) pair
     eventually(spark.table("ttl_basket").count() >= 3, "order 1 rows not emitted")
     Thread.sleep(1500) // wall-clock past the 500ms processing-time TTL
+    val since = lastBatch(q)
     input.addData(Item(2L, 30L))
+    awaitInputAfter(q, since)
     // a later trigger processes order 1's timeout: its state row is GONE
     eventually(stateRows(q) === 1L, s"expected eviction, state rows = ${stateRows(q)}")
     val before = spark.table("ttl_basket").count()
@@ -245,7 +259,9 @@ class StreamTtlSpec extends SparkSuite {
     val q = procTimeQuery(out.toDF(), "ttl_cdc")
     eventually(spark.table("ttl_cdc").count() >= 1, "key 1 snapshot not emitted")
     Thread.sleep(1500)
+    val since = lastBatch(q)
     file(Change(2L, 1, "I", 10L))
+    awaitInputAfter(q, since)
     // a later trigger processes key 1's timeout: its champion is GONE
     eventually(stateRows(q) === 1L, s"expected eviction, state rows = ${stateRows(q)}")
     val before = spark.table("ttl_cdc").count()
