@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming Count-Min frequency monitor — the sketch operator
   * (`q_sketch_cms`, operators/Sketches) run continuously over a document
-  * stream: per-word cell contributions accumulate as ONE update-mode
+  * stream: per-word cell contributions accumulate as ONE
   * streaming aggregate whose key space is the D×W sketch cells —
   * per-key state is bounded BY CONSTRUCTION (64 cells here) no matter
   * how many distinct words the stream carries, which is exactly why a
@@ -15,7 +15,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * vocabulary count (the exact count's state grows with the vocabulary;
   * the sketch's never grows at all).
   *
-  * Each micro-batch upserts the touched cells into the keyed state dir
+  * Each micro-batch publishes the whole cell table as the keyed state dir
   * ([[UpsertSink.keyedParquetUpsert]]), then re-estimates a fixed PROBE
   * watchlist from full cell state with the IDENTICAL batch estimator
   * (Sketches.cmsEstimateOf) — which is what makes replay ≡ batch exact
@@ -28,7 +28,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Why cells equal the batch sketch: the batch side sums pre-aggregated
   * per-word counts into cells; the stream side counts word occurrences
   * per cell directly — the same sum grouped differently, so the final
-  * cumulative cells are identical (and the update-mode aggregate is
+  * cumulative cells are identical (and the aggregate is
   * watermark-free: frequency monitoring is a cumulative window, not an
   * event-time window). */
 object CmsMonitor {
@@ -48,9 +48,8 @@ object CmsMonitor {
       .select(col("d"), Sketches.cmsBucket(col("d"), col("word")).as("bucket"))
       .groupBy(col("d"), col("bucket")).agg(count(lit(1)).as("cnt"))
 
-    // update-mode rows carry the refreshed CUMULATIVE count for every cell
-    // touched this micro-batch; merge, then re-estimate the watchlist from
-    // full sketch state
+    // every batch carries the CUMULATIVE count of every cell; publish it,
+    // then re-estimate the watchlist from full sketch state
     UpsertSink.keyedParquetUpsert(cells, Seq("d", "bucket"), stateDir + "_cells",
       checkpointDir, Seq(stateDir -> { store =>
         val sess = store.sparkSession

@@ -11,10 +11,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * query over all events seen so far (the RevenueMonitor contract).
   *
   * State design: identical to RevenueMonitor — the stream maintains only
-  * the (day, cents) totals, an update-mode built-in aggregate whose key
+  * the (day, cents) totals, a built-in aggregate whose key
   * space is the CALENDAR (bounded by days observed, no cap knob, no TTL
   * debate); daily sums are additive and order-free so arrival order is
-  * irrelevant. Each batch overwrite-upserts the day store, then the Holt
+  * irrelevant. Each batch replaces the day store, then the Holt
   * recursion reruns from the store with the BATCH arithmetic verbatim
   * (Seasonal.holtFromDaily) — day-count-sized work, never event-sized —
   * and swap-publishes. Replaying the recursion from the seed each batch

@@ -9,16 +9,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
 /** Streaming KMV distinct-users monitor — the cardinality sibling of the
   * Count-Min frequency monitor: the weekly rollup sketch
   * (`q_sketch_kmv_rollup`, operators/Sketches) maintained continuously
-  * over an event stream. The keyed update-mode aggregate runs the SAME
+  * over an event stream. The keyed aggregate runs the SAME
   * typed KMV Aggregator the batch query runs, so per-(week, event_type)
   * state is the aggregation buffer itself — at most K = 16 hashes per
   * key BY CONSTRUCTION, no matter how many distinct users the stream
   * carries (an exact streaming count-distinct would hold every user id
   * in state; the sketch never grows).
   *
-  * Each micro-batch's update rows carry the refreshed CUMULATIVE sketch
-  * for every key touched; the sink upserts (kmv_csv, est_users) into the
-  * keyed state dir using the shared batch estimator
+  * Each micro-batch carries the CUMULATIVE sketch of every key; the sink
+  * publishes (kmv_csv, est_users) as the keyed state dir, computed with the shared batch estimator
   * (Sketches.kmvEstimate), which is what makes replay ≡ batch exact
   * bit-for-bit (KmvMonitorSpec, incl. checkpoint restart) — the same
   * KMV mergeability that makes the batch weekly-from-daily rollup

@@ -12,11 +12,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * events seen so far.
   *
   * State design: the stream maintains only the (day, cents) totals — an
-  * update-mode built-in aggregate whose key space is the CALENDAR, so
+  * built-in aggregate whose key space is the CALENDAR, so
   * state is bounded by days-observed with no cap knob; daily sums are
   * additive and order-free, so arrival order is irrelevant by
-  * construction. Each emission carries the day's cumulative total and
-  * overwrite-upserts the store; the derived EWMA/CUSUM tables are then
+  * construction. Each batch carries every day's cumulative total and
+  * replaces the store; the derived EWMA/CUSUM tables are then
   * recomputed from the day store with the BATCH arithmetic verbatim
   * (Trend.ewmaFromDaily / cusumFromDaily) — day-count-sized work, never
   * event-sized — and swap-published. */

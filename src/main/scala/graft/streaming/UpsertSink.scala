@@ -1,36 +1,55 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnsupportedOperationChecker
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, lit, max}
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
 /** Streaming keyed-upsert sink via `foreachBatch` — the Spark-native form of
   * the reference's per-run DynamoDB overwrite (transform.py:149-202 put_items
-  * keyed (category, order_date) / (order_date); SURVEY.md §1.3): each
-  * micro-batch's updated groups replace the rows with the same key in the
-  * keyed store, other rows persist.
+  * keyed (category, order_date) / (order_date); SURVEY.md §1.3): after each
+  * micro-batch the keyed store holds one row per key, the latest one.
   *
-  * State layout here is a plain parquet directory merged read-modify-write
-  * per batch (local-filesystem demo; production swaps the merge body for a
+  * State layout here is a plain parquet directory replaced whole per batch
+  * (local-filesystem demo; production swaps the publish body for a
   * transactional table format's MERGE or a KV store's batch put without
-  * touching the streaming plan). Merge = the store's rows whose key is
-  * absent from the batch plus every batch row, executed distributed in one
-  * pass over the batch ([[upsertBatch]]). The store is read with the
-  * batch's schema, so no batch runs a parquet footer-reading job to infer
-  * it.
+  * touching the streaming plan). A batch reaches the store in one of two
+  * forms, chosen once per query from its analyzed plan ([[wholeTable]]):
+  *
+  *   - Whole table: a streaming aggregate with no event-time watermark
+  *     never evicts a group, so Spark's `complete` output mode emits every
+  *     group each trigger and that output IS the merged store. The batch is
+  *     published as it is ([[publish]]): no store read, no merge shuffle,
+  *     one stage fewer per trigger. A swap cut between its two renames
+  *     needs no separate recovery here, because the batch holds every
+  *     group ([[swapInto]] still restores a `.old`-only store before it
+  *     displaces it). This serves the KPI streams and the aggregation
+  *     monitors. A group with a null key is one state row, so it is one
+  *     store row too.
+  *   - Merge: every other stream (the flatMapGroupsWithState twins, whose
+  *     emissions are deltas and which complete mode does not admit, and
+  *     any watermarked aggregation, whose complete output would keep every
+  *     window's state forever) runs in `update` mode and emits only the
+  *     keys it touched. Those rows replace the rows with the same key in
+  *     the store and the other rows persist ([[upsertBatch]]).
+  *
+  * Both forms key the same store and views, so a query restarted from an
+  * update-mode checkpoint continues in complete mode: the aggregate's state
+  * store is the same in both modes.
   *
   * This is the one sink every stream monitor ends in. A monitor whose
   * published table is DERIVED from the keyed store (a rollup, a matrix, a
-  * statistic) passes it as a `view`: after each micro-batch's upsert the
-  * store is read once and every view is recomputed from it and published
-  * whole by [[publish]]. A view is swapped, never upserted, because its
-  * rows can vanish (a re-attributed purchase empties a channel, a
-  * retraction removes a matrix cell). [[publish]] — write `dir.tmp`, then
-  * the checked two-rename [[swapInto]] — is the only publish path for the
-  * store and its views; `IngestPipeline`'s partitioned exactly-once merge
-  * is the one other caller of [[swapInto]].
+  * statistic) passes it as a `view`: after each micro-batch the store is
+  * read once and every view is recomputed from it and published whole by
+  * [[publish]]. A view is swapped, never upserted, because its rows can
+  * vanish (a re-attributed purchase empties a channel, a retraction
+  * removes a matrix cell). [[publish]] — write `dir.tmp`, then the checked
+  * two-rename [[swapInto]] — is the only publish path for the store and
+  * its views; `IngestPipeline`'s partitioned exactly-once merge is the one
+  * other caller of [[swapInto]].
   */
 object UpsertSink {
 
@@ -38,24 +57,41 @@ object UpsertSink {
     * object, one trigger (why it is not a parameter: [[EventStreams]]). */
   private[graft] val FilesPerTrigger = 1
 
-  /** Start an update-mode stream writing keyed upserts into `stateDir`.
-    * Each `views` entry `(dir, f)` publishes `f(store)` at `dir` after
-    * every micro-batch, `store` being the keyed store just written. With
-    * no views the store is never read back. */
+  /** Start a stream writing keyed upserts into `stateDir`, in the output
+    * mode [[wholeTable]] picks for `df`. Each `views` entry `(dir, f)`
+    * publishes `f(store)` at `dir` after every micro-batch, `store` being
+    * the keyed store just written. With no views the store is never read
+    * back. */
   def keyedParquetUpsert(df: DataFrame, keys: Seq[String], stateDir: String,
       checkpointDir: String,
-      views: Seq[(String, DataFrame => DataFrame)] = Nil): StreamingQuery =
+      views: Seq[(String, DataFrame => DataFrame)] = Nil): StreamingQuery = {
+    val whole = wholeTable(df)
     df.writeStream
-      .outputMode("update")
+      .outputMode(if (whole) OutputMode.Complete() else OutputMode.Update())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertBatch(batch, keys, stateDir)
+        if (whole) publish(batch, stateDir) else upsertBatch(batch, keys, stateDir)
         if (views.nonEmpty) {
           val store = readStore(batch, stateDir)
           views.foreach { case (dir, view) => publish(view(store), dir) }
         }
       }
       .start()
+  }
+
+  /** Does `df`'s complete output equal its merged update output? True
+    * when Spark accepts `df` in complete mode, which it does only for a
+    * plan with a streaming aggregate, and the plan has no event-time
+    * watermark: such a query never evicts a group, so every trigger can
+    * emit all of them. A watermark makes it false even where complete
+    * mode is legal, because complete mode would then never drop a closed
+    * window's state. */
+  private def wholeTable(df: DataFrame): Boolean = {
+    val plan = df.queryExecution.analyzed
+    !plan.exists(_.isInstanceOf[EventTimeWatermark]) &&
+      (try { UnsupportedOperationChecker.checkForStreaming(plan, OutputMode.Complete()); true }
+       catch { case _: AnalysisException => false })
+  }
 
   /** One merge step: the store's rows whose key is absent from `batch`,
     * plus every row of `batch` — the result of a left-anti join of the

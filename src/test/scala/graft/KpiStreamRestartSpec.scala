@@ -20,9 +20,10 @@ class KpiStreamRestartSpec extends SparkSuite {
       .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
   }
 
-  test("category-KPI stream restarts from checkpoint and converges to batch") {
-    // temp copy of the reference CSV layout with order_items arriving in
-    // two waves separated by a stop/restart
+  /** A temp copy of the reference CSV layout whose order_items arrive in
+    * two waves (a stop/restart between them): the data dir and a function
+    * that lands wave 1 or 2. */
+  private def twoWaveLayout(): (String, Int => Unit) = {
     val dataDir = Files.createTempDirectory("kpic_data")
     Files.createDirectory(dataDir.resolve("order_items"))
     Files.createDirectory(dataDir.resolve("orders"))
@@ -39,31 +40,67 @@ class KpiStreamRestartSpec extends SparkSuite {
       } finally s.close()
     }
     val (wave1, wave2) = itemFiles.splitAt(itemFiles.size / 2)
-    def land(fs: Seq[java.nio.file.Path]): Unit = fs.foreach(f =>
+    def land(wave: Int): Unit = (if (wave == 1) wave1 else wave2).foreach(f =>
       Files.copy(f, dataDir.resolve("order_items").resolve(f.getFileName),
         StandardCopyOption.REPLACE_EXISTING))
+    (dataDir.toString, land)
+  }
 
+  private def categoryKpis: org.apache.spark.sql.DataFrame =
+    new graft.pipeline.EcommercePipeline(spark, SparkSpec.referenceFixture).categoryKpis
+
+  test("category-KPI stream restarts from checkpoint and converges to batch") {
+    val (dataDir, land) = twoWaveLayout()
     val stateDir = Files.createTempDirectory("kpic_state").toString + "/kpi"
     val ck = Files.createTempDirectory("kpic_ck").toString
-    land(wave1)
+    land(1)
     val q1 = UpsertSink.keyedParquetUpsert(
-      EventStreams.kpiCategoryStream(spark, dataDir.toString),
+      EventStreams.kpiCategoryStream(spark, dataDir),
       Seq("category", "order_date"), stateDir, ck)
     q1.processAllAvailable()
     q1.stop()
 
-    land(wave2)
+    land(2)
     val q2 = UpsertSink.keyedParquetUpsert(
-      EventStreams.kpiCategoryStream(spark, dataDir.toString),
+      EventStreams.kpiCategoryStream(spark, dataDir),
       Seq("category", "order_date"), stateDir, ck)
     q2.processAllAvailable()
     q2.stop()
 
     val got = spark.read.parquet(stateDir)
-    val want = new graft.pipeline.EcommercePipeline(spark, SparkSpec.referenceFixture)
-      .categoryKpis
     assert(got.count() === 142L)
-    assert(canon(got) === canon(want))
+    assert(canon(got) === canon(categoryKpis))
+  }
+
+  test("category-KPI stream restarts from an update-mode merge checkpoint into the whole-table publish") {
+    // wave 1 runs as the sink once ran every aggregation: update mode,
+    // each batch's touched groups merged into the store; wave 2 restarts
+    // from that checkpoint through keyedParquetUpsert, which publishes the
+    // aggregate's complete output from the same state store
+    val (dataDir, land) = twoWaveLayout()
+    val keys = Seq("category", "order_date")
+    val stateDir = Files.createTempDirectory("kpic_mode_state").toString + "/kpi"
+    val ck = Files.createTempDirectory("kpic_mode_ck").toString
+    land(1)
+    val q1 = EventStreams.kpiCategoryStream(spark, dataDir).writeStream
+      .outputMode("update")
+      .option("checkpointLocation", ck)
+      .foreachBatch((batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        UpsertSink.upsertBatch(batch, keys, stateDir))
+      .start()
+    q1.processAllAvailable()
+    q1.stop()
+
+    land(2)
+    val q2 = UpsertSink.keyedParquetUpsert(
+      EventStreams.kpiCategoryStream(spark, dataDir), keys, stateDir, ck)
+    q2.processAllAvailable()
+    q2.stop()
+    assert(q2.recentProgress.head.batchId > q1.lastProgress.batchId) // resumed, not replayed
+
+    val got = spark.read.parquet(stateDir)
+    assert(got.count() === 142L)
+    assert(canon(got) === canon(categoryKpis))
   }
 
   test("order-KPI stream restarts from checkpoint and converges to batch") {

@@ -16,12 +16,14 @@ import scala.jdk.CollectionConverters._
 
 /** What a category-KPI micro-batch costs through the keyed upsert sink,
   * pinned in deterministic counters rather than timings: the stateful
-  * stage runs once per trigger, the store is read without a schema-
-  * inference job, and the static CSVs are parsed in the first data batch
-  * only. Also pins the two behaviours the cost work rests on: the static
-  * side's file listing is fixed when the query is defined, and the merge
-  * is exactly "store rows whose key is absent from the batch, plus every
-  * batch row". */
+  * stage runs once per trigger, no batch reads the store back or runs a
+  * parquet schema-inference job, the store is written by a two-stage job
+  * (the batch's scan and the state-store stage, with no merge shuffle),
+  * and the static CSVs are parsed in the first data batch only. Also pins
+  * the two behaviours the cost work rests on: the static side's file
+  * listing is fixed when the query is defined, and the merge of an
+  * update-mode stream is exactly "store rows whose key is absent from the
+  * batch, plus every batch row". */
 class StreamCostSpec extends SparkSuite {
   import spark.implicits._
 
@@ -30,14 +32,29 @@ class StreamCostSpec extends SparkSuite {
   /** Work of every micro-batch, attributed through the streaming query id
     * and batch id Spark puts in each job's properties: jobs that run a
     * parallelized collection (the parquet footer-reading job of a schema
-    * inference), and tasks whose CSV scan of `orders/` or `products.csv`
-    * produced rows. A scan is recognised by the accumulator of its output
-    * row metric, taken from the plan of every SQL execution. */
-  private final class BatchCosts(dataDir: String) extends SparkListener {
+    * inference), tasks whose CSV scan of `orders/` or `products.csv`
+    * produced rows, parquet scans of the store at `stateDir`, and the
+    * stages of the jobs that write the store's staging copy. A CSV scan is
+    * recognised by the accumulator of its output row metric, a store scan
+    * or write by its node in the plan of every SQL execution. */
+  private final class BatchCosts(dataDir: String, stateDir: String) extends SparkListener {
     private val stageBatch = TrieMap.empty[Int, (String, Long)]
     private val staticScanRows = TrieMap.empty[Long, String]
+    private val execBatch = TrieMap.empty[Long, (String, Long)]
+    private val execStoreScans = TrieMap.empty[Long, Int]
+    private val storeWriteExecs = TrieMap.empty[Long, Unit]
+    private val writeStageIds = TrieMap.empty[Int, Unit]
     val inferenceJobs = new ConcurrentLinkedQueue[(String, Long)]
     val staticScans = new ConcurrentLinkedQueue[(String, Long, String)]
+
+    /** Parquet scans of the store per (query, batch). */
+    def storeScans: Map[(String, Long), Int] =
+      execStoreScans.toSeq.flatMap { case (x, n) => execBatch.get(x).map(_ -> n) }
+        .groupMapReduce(_._1)(_._2)(_ + _)
+
+    /** Stages of the store's writes per (query, batch). */
+    def writeStages: Map[(String, Long), Int] =
+      writeStageIds.keys.toSeq.groupMapReduce(stageBatch)(_ => 1)(_ + _)
 
     override def onJobStart(e: SparkListenerJobStart): Unit =
       for (p <- Option(e.properties); q <- Option(p.getProperty("sql.streaming.queryId"));
@@ -45,6 +62,10 @@ class StreamCostSpec extends SparkSuite {
         e.stageIds.foreach(stageBatch.put(_, (q, b.toLong)))
         if (e.stageInfos.exists(_.rddInfos.exists(_.name == "ParallelCollectionRDD")))
           inferenceJobs.add((q, b.toLong))
+        for (x <- Option(p.getProperty("spark.sql.execution.id")).map(_.toLong)) {
+          execBatch.put(x, (q, b.toLong))
+          if (storeWriteExecs.contains(x)) e.stageIds.foreach(writeStageIds.put(_, ()))
+        }
       }
 
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
@@ -53,17 +74,22 @@ class StreamCostSpec extends SparkSuite {
         staticScans.add((q, b, table))
 
     override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-      case s: SparkListenerSQLExecutionStart => register(s.sparkPlanInfo)
+      case s: SparkListenerSQLExecutionStart => register(s.executionId, s.sparkPlanInfo)
       case _ =>
     }
 
-    private def register(node: SparkPlanInfo): Unit = {
+    private def register(execution: Long, node: SparkPlanInfo): Unit = {
       val location = node.metadata.getOrElse("Location", "")
       val table = Seq("orders", "products.csv").find(t => location.contains(s"$dataDir/$t]"))
       for (t <- table if node.nodeName.startsWith("Scan csv");
            m <- node.metrics if m.name == "number of output rows")
         staticScanRows.put(m.accumulatorId, t)
-      node.children.foreach(register)
+      if (node.nodeName.startsWith("Scan parquet") && location.contains(s"$stateDir]"))
+        execStoreScans.put(execution, execStoreScans.getOrElse(execution, 0) + 1)
+      if (node.nodeName.contains("InsertIntoHadoopFsRelationCommand") &&
+          node.simpleString.contains(s"$stateDir.tmp"))
+        storeWriteExecs.put(execution, ())
+      node.children.foreach(register(execution, _))
     }
   }
 
@@ -102,9 +128,9 @@ class StreamCostSpec extends SparkSuite {
 
   test("kpi stream batch: one state-store run, no store schema inference, static CSVs parsed once") {
     val (dir, items) = layoutCopy("cost_kpi")
-    val stateDir = Files.createTempDirectory("cost_state").toString + "/kpi"
+    val stateDir = Files.createTempDirectory("cost_state").toRealPath().toString + "/kpi"
     val ck = Files.createTempDirectory("cost_ck").toString
-    val costs = new BatchCosts(dir)
+    val costs = new BatchCosts(dir, stateDir)
     spark.sparkContext.addSparkListener(costs)
     val q = try {
       val q = UpsertSink.keyedParquetUpsert(
@@ -132,6 +158,13 @@ class StreamCostSpec extends SparkSuite {
       "batches that ran a parquet schema-inference job")
     assert(costs.staticScans.asScala.filter(_._1 == queryId).map(s => (s._2, s._3)).toSet ===
       Set((0L, "orders"), (0L, "products.csv")), "(batch, static CSV) scans")
+    val dataBatches = batches.map(_.batchId)
+    def perBatch(counts: Map[(String, Long), Int]): Seq[(Long, Int)] =
+      dataBatches.map(b => b -> counts.getOrElse((queryId, b), 0))
+    assert(perBatch(costs.storeScans) === dataBatches.map(_ -> 0),
+      "(batch, parquet scans of the store)")
+    assert(perBatch(costs.writeStages) === dataBatches.map(_ -> 2),
+      "(batch, stages of the store write)")
     assert(spark.read.parquet(stateDir).count() === 142L)
     dropStatic(dir)
   }

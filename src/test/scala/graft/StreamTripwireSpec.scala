@@ -1,10 +1,13 @@
 package graft
 
+import graft.sources.Tables
 import graft.streaming._
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.analysis.UnsupportedOperationChecker
 import org.apache.spark.sql.catalyst.plans.logical.{EventTimeWatermark, FlatMapGroupsWithState, LogicalPlan, ResolvedHint}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.GroupStateTimeout
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Streaming plan tripwire — the streaming
   * counterpart of PlanTripwireSpec's registry-wide guards: every stateful
@@ -14,7 +17,10 @@ import org.apache.spark.sql.streaming.GroupStateTimeout
   * its per-row dimension broadcast — so the next twin added to
   * `streaming/` cannot silently regress to unbounded state or a shuffled
   * static join. Plans are inspected UNSTARTED (analysis is enough to see
-  * the watermark node, the timeout conf, and join hints). */
+  * the watermark node, the timeout conf, and join hints). It also pins
+  * which publish form of the keyed upsert sink each caller takes, read off
+  * the started query's output mode: complete (the whole table, published
+  * as it is) or update (merged into the store). */
 class StreamTripwireSpec extends SparkSuite {
   import spark.implicits._
 
@@ -114,5 +120,63 @@ class StreamTripwireSpec extends SparkSuite {
       .collect { case h: ResolvedHint if h.hints.strategy.isDefined => h }
     assert(hints.nonEmpty,
       "products (the per-row dimension) must carry an explicit broadcast hint")
+  }
+
+  /** The output mode of the stream `start` runs with a fresh state dir and
+    * checkpoint, read when it starts; the query is stopped at once. */
+  private def sinkMode(start: (String, String) => StreamingQuery): OutputMode = {
+    val root = Files.createTempDirectory("tripwire_sink")
+    val q = start(s"$root/state", s"$root/ck")
+    try q.asInstanceOf[StreamingQueryWrapper].streamingQuery.outputMode finally q.stop()
+  }
+
+  /** A stream source dir holding one copy of an sf0.001 table's file. */
+  private def srcOf(table: String): String = {
+    val dir = Files.createTempDirectory(s"tripwire_$table")
+    Files.copy(Paths.get(SparkSpec.sf0001, s"$table.parquet"), dir.resolve("part-0.parquet"))
+    dir.toString
+  }
+
+  test("aggregation streams without a watermark publish their whole table") {
+    val dir = SparkSpec.sf0001
+    val (events, lineitem) = (srcOf("events"), srcOf("lineitem"))
+    val whole = Seq[(String, (String, String) => StreamingQuery)](
+      "kpiCategoryStream" -> (UpsertSink.keyedParquetUpsert(
+        EventStreams.kpiCategoryStream(spark, SparkSpec.referenceFixture),
+        Seq("category", "order_date"), _, _)),
+      "kpiOrderApproxStream" -> (UpsertSink.keyedParquetUpsert(
+        EventStreams.kpiOrderApproxStream(spark, lineitem, Tables.orders(spark, dir)),
+        Seq("order_date"), _, _)),
+      "CmsMonitor" -> (CmsMonitor.cmsMonitor(spark, srcOf("documents"), _, _)),
+      "RevenueMonitor" -> (RevenueMonitor.monitor(spark, events, _, _)),
+      "ForecastMonitor" -> (ForecastMonitor.monitor(spark, events, _, _)),
+      "KmvMonitor" -> (KmvMonitor.kmvMonitor(spark, events, _, _)),
+      "DriftMonitor.psiMonitor" -> (DriftMonitor.psiMonitor(spark, lineitem, dir, _, _)),
+      "DriftMonitor.ksMonitor" -> (DriftMonitor.ksMonitor(spark, events, _, _)))
+    whole.foreach { case (what, start) =>
+      assert(sinkMode(start) === OutputMode.Complete(), what)
+    }
+  }
+
+  test("keyed-state twins and watermarked aggregations merge their updates") {
+    val (events, empty) = (srcOf("events"), Files.createTempDirectory("tripwire_empty").toString)
+    val merge = Seq[(String, (String, String) => StreamingQuery)](
+      "BasketStream.liftMonitor" -> (BasketStream.liftMonitor(spark, srcOf("lineitem"), _, _)),
+      "TransitionStream.matrixMonitor" -> (TransitionStream.matrixMonitor(spark, events, _, _)),
+      "AttributionStream.attributionMonitor" ->
+        (AttributionStream.attributionMonitor(spark, events, _, _)),
+      "DebounceStream.burstMonitor" -> (DebounceStream.burstMonitor(spark, events, _, _)),
+      "AbtestMonitor" -> (AbtestMonitor.monitor(spark, events, _, _)),
+      "CdcStream" -> (CdcStream.run(spark, empty, _, _)),
+      "EventStreams.windowed" -> (UpsertSink.keyedParquetUpsert(
+        EventStreams.windowed(spark, empty), Seq("window_start", "event_type"), _, _)))
+    merge.foreach { case (what, start) =>
+      assert(sinkMode(start) === OutputMode.Update(), what)
+    }
+    // Spark would run the watermarked window aggregation in complete mode;
+    // it merges because complete output would keep every closed window's
+    // state for ever
+    UnsupportedOperationChecker.checkForStreaming(
+      EventStreams.windowed(spark, empty).queryExecution.analyzed, OutputMode.Complete())
   }
 }

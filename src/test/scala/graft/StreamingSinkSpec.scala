@@ -109,6 +109,27 @@ class StreamingSinkSpec extends SparkSuite {
     assert(rows === Map(1L -> 10.0, 2L -> 99.0, 3L -> 30.0))
   }
 
+  test("an aggregation stream re-emitting a null-keyed group keeps one row for it") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Option[String], Long)]
+    val totals = input.toDF().toDF("k", "v").groupBy(col("k")).agg(sum(col("v")).as("total"))
+    val stateDir = java.nio.file.Files.createTempDirectory("ups_null").toString + "/s"
+    val ck = java.nio.file.Files.createTempDirectory("ups_null_ck").toString
+    val q = UpsertSink.keyedParquetUpsert(totals, Seq("k"), stateDir, ck)
+    try {
+      input.addData((None, 1L), (Some("a"), 10L))
+      q.processAllAvailable()
+      input.addData((None, 2L))
+      q.processAllAvailable()
+    } finally q.stop()
+    // the group's state holds one row, and the store is that state: the
+    // null key's first total is replaced, not kept beside the new one
+    val rows = spark.read.parquet(stateDir).collect()
+      .map(r => Option(r.getAs[String]("k")) -> r.getAs[Long]("total")).toSet
+    assert(rows === Set(None -> 3L, Some("a") -> 10L))
+  }
+
   test("mid-swap crash recovery: .old-only state is restored, not deleted") {
     import spark.implicits._
     val stateDir = java.nio.file.Files.createTempDirectory("ups3").toString + "/s"
