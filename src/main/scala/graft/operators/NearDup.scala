@@ -139,9 +139,9 @@ object NearDup {
     * BIGINTs (truncated md5, the [[baseHashesOf]] recipe) rather than
     * 32-char hex strings: band keys exist only to be exploded, shuffled and
     * equi-joined, so an 8-byte key quarters the banded relation's shuffle
-    * bytes and makes the bucket self-join compare longs instead of strings
-    * (guide §2.3 "narrower types"). The oracle builds the identical
-    * truncation ([[bandKeySql]]), so both engines see the same buckets. */
+    * bytes and makes the bucket self-join compare longs instead of strings.
+    * The oracle builds the identical truncation ([[bandKeySql]]), so both
+    * engines see the same buckets. */
   private def bandArray: Column =
     array((0 until NumBands).map { b =>
       conv(substring(md5(concat_ws(",",
@@ -153,15 +153,34 @@ object NearDup {
   private def bandKeySql(parts: Seq[String]): String =
     s"('0x' || substr(md5(concat_ws(',', ${parts.mkString(", ")})), 1, 15))::BIGINT"
 
+  /** The oracle's banding CTEs over an `hh` CTE of per-doc base hashes:
+    * signatures (`m`), one row per band key (`b`) and the distinct
+    * candidate pairs (`c`) that share a band key and meet `pairCond`. */
+  private def bandCandidatesSql(pairCond: String): String = {
+    val mhs = (0 until NumHashes).map(k => s"${minhashSql(k)} AS mh_$k").mkString(", ")
+    val bandList = (0 until NumBands).map { b =>
+      bandKeySql((b * BandSize until (b + 1) * BandSize).map(k => s"mh_$k"))
+    }.mkString("[", ", ", "]")
+    s"""m AS (SELECT doc_id, $mhs FROM hh),
+       |b AS (SELECT doc_id, unnest($bandList) AS band FROM m),
+       |c AS (SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
+       |      FROM b a JOIN b b2 ON a.band = b2.band$pairCond),""".stripMargin
+  }
+
+  /** `pairCond` of the symmetric pair search: each unordered pair once. */
+  private val symmetricPairsSql = " AND a.doc_id < b2.doc_id"
+
+  /** `pairCond` of the incremental search: new-batch doc × corpus doc. */
+  private val arrivalPairsSql = "\n      WHERE a.doc_id % 5 = 0 AND b2.doc_id % 5 != 0"
+
   /** (doc_id, band) — one row per band per doc; the LSH bucket relation.
     * `carrySh = true` keeps the shingle set on each row so a streaming
     * probe side can verify without re-joining itself (stream-stream joins
     * are exactly what the incremental design avoids). `bandSh`, when set,
     * is the (possibly DF-pruned) shingle expression SIGNATURES are built
     * from — `sh` still carries the FULL set for verify, and rows whose
-    * banding set prunes to empty drop out of candidate generation, exactly
-    * like the batch pruned form's anti-join + groupBy. All expressions
-    * stay narrow/stateless, so this works on streaming frames. */
+    * banding set prunes to empty drop out of candidate generation. All
+    * expressions stay narrow/stateless, so this works on streaming frames. */
   private[graft] def bandedOf(shingleTbl: DataFrame, carrySh: Boolean = false,
       bandSh: Option[Column] = None): DataFrame = {
     val keep = if (carrySh) Seq(col("doc_id"), col("sh")) else Seq(col("doc_id"))
@@ -199,6 +218,67 @@ object NearDup {
   def lshCandidateCount(spark: SparkSession, dir: String): Long =
     lshCandidates(shingleTable(spark, dir)).count()
 
+  // ------------------------------------------------------------ size gate
+
+  /** Doc-frequency prune threshold: shingles present in more than this
+    * fraction of documents are "boilerplate" and excluded from SIGNATURE
+    * generation (verify still uses full sets). */
+  val DfPruneFrac = 0.02
+
+  /** DF-pruning gate, derived as an explicit CANDIDATE-VOLUME BUDGET.
+    *
+    * Budget: keep the verify join's shuffle ≤ ~1 candidate pair per
+    * document, i.e. O(corpus) — the width any linear pipeline stage
+    * tolerates at 100 TB. On the measured Zipf decade the unpruned
+    * candidate stream fits cands(n) ≈ 1.30e6 · (n/5e5)^1.8 (303 → 15.3k →
+    * 1.30M at 5k → 50k → 500k), so candidates-per-doc = 2.6 · (n/5e5)^0.8
+    * crosses 1.0 at n = 5e5 · (1/2.6)^1.25 ≈ 1.5e5 — the gate. The pruned
+    * form stays ~n^1.0 (60k pairs at 500k), so above the gate it bounds
+    * shuffle width at the cost of ≤1.6× single-host wall time in the
+    * 150k–900k band (the measured worst point; on one 32-thread host the
+    * unpruned form is faster to ~900k docs, 7.4 s vs 11.8 s at 500k,
+    * BENCH_DEEP.json). [[GateBudgetSpec]] pins this derivation to the
+    * constant. Either side of the gate is correctness-identical (same
+    * full-set verify, same emitted-pair meaning);
+    * `q_dedup_minhash_lsh_auto_lowgate` oracle-checks the pruned branch of
+    * the gated SQL at every correctness scale. */
+  val DfPruneMinDocs = 150000L
+
+  /** Gate threshold of the lowgate registry twin — small enough that every
+    * correctness scale (500 docs at sf0.01) takes the PRUNED branch of the
+    * gated plan AND of its one-SQL oracle. */
+  private[graft] val LowGateMinDocs = 100L
+
+  /** The corpus DF stop list as a driver array, subtracted per row with
+    * `array_except` (stateless, so it also prunes a streaming probe).
+    * Bounded REGARDLESS of corpus size: a shingle needs df > frac·n while
+    * total shingle instances are ~52·n, so at most ~52/frac ≈ 2600
+    * entries — the justified k-sized collect. Sorted for deterministic
+    * plans. */
+  private[graft] def commonShingleArray(shingleTbl: DataFrame, n: Long): Array[String] =
+    shingleTbl.select(explode(col("sh")).as("t"))
+      .groupBy(col("t")).agg(count(lit(1)).as("df"))
+      .filter(col("df") > lit(DfPruneFrac) * n)
+      .select(col("t")).collect().map(_.getString(0)).sorted
+
+  /** The size gate of every gated near-dup path: the shingle column MinHash
+    * signatures are built from, for a corpus of `n` docs whose shingle
+    * table is `corpusShingles`. None below `minDocs` (sign the full set);
+    * at or above it, the set minus the corpus stop list. Docs whose every
+    * shingle is boilerplate then drop out of banding ([[bandedOf]] filters
+    * empty banding sets); verify always uses the full sets. */
+  private[graft] def signatureShingles(corpusShingles: DataFrame, n: Long,
+      minDocs: Long): Option[Column] =
+    if (n < minDocs) None
+    else Some(array_except(col("sh"), typedlit(commonShingleArray(corpusShingles, n).toSeq)))
+
+  /** [[signatureShingles]] past the gate: the stop-list-pruned column of a
+    * persisted shingle table, the table counting its own docs. */
+  private def prunedShingles(shingleTbl: DataFrame): Option[Column] =
+    signatureShingles(shingleTbl, shingleTbl.count(), minDocs = 0L)
+
+  // ------------------------------------------------------- batch LSH pairs
+
   /** MinHash-LSH near-dup pairs: band-bucket candidates + Jaccard verify.
     * The per-doc shingle table is persisted: it feeds signature generation
     * AND both sides of the verify join, and it is tiny relative to the
@@ -211,11 +291,9 @@ object NearDup {
     * unrelated docs. Production corpora use [[minhashPairsAuto]]
     * (`q_dedup_minhash_lsh_auto`), which switches to the DF-pruned form at
     * the [[DfPruneMinDocs]] candidate-volume budget. Note the budget is a
-    * SHUFFLE-WIDTH control, not a single-host wall-time optimum: the clean
-    * per-point-calibrated measure (round 11, BENCH_DEEP.json) has this
-    * unpruned form FASTER on one 32-thread host until ~900k docs
-    * (7.4 s vs 11.8 s pruned at 500k; the round-10 48 s reading that first
-    * motivated the gate was batch-run contamination and is withdrawn) —
+    * SHUFFLE-WIDTH control, not a single-host wall-time optimum: measured
+    * per point (BENCH_DEEP.json), this unpruned form is FASTER on one
+    * 32-thread host until ~900k docs (7.4 s vs 11.8 s pruned at 500k) —
     * what diverges first at cluster scale is its ~n^1.8 candidate stream
     * (1.30M vs 60k verify pairs at 500k; ~80M vs ~600k extrapolated at
     * 5M). This form stays registered as the exact-recall baseline and the
@@ -224,51 +302,21 @@ object NearDup {
     minhashPairsOf(Tables.documents(spark, dir))
 
   /** [[minhashPairs]] over any documents-shaped frame — library API. */
-  def minhashPairsOf(docs: DataFrame): DataFrame = {
+  def minhashPairsOf(docs: DataFrame): DataFrame = lshPairsOf(docs, _ => None)
+
+  /** The LSH pair body: persisted shingle table, band candidates signed
+    * over `bandSh(shingle table)`, full-set Jaccard verify. */
+  private def lshPairsOf(docs: DataFrame,
+      bandSh: DataFrame => Option[Column]): DataFrame = {
     val shingleTbl = shingleTableOf(docs).persist()
-    verifyJaccard(lshCandidates(shingleTbl), shingleTbl)
+    verifyJaccard(lshCandidates(shingleTbl, bandSh(shingleTbl)), shingleTbl)
   }
 
-  private[operators] val minhashPairsSql = {
-    val mhs = (0 until NumHashes).map(k => s"${minhashSql(k)} AS mh_$k").mkString(", ")
-    val bandList = (0 until NumBands).map { b =>
-      val parts = (b * BandSize until (b + 1) * BandSize).map(k => s"mh_$k")
-      bandKeySql(parts)
-    }.mkString("[", ", ", "]")
+  private[operators] val minhashPairsSql =
     s"""WITH s AS (SELECT doc_id, $shinglesSql AS sh FROM documents),
        |hh AS (SELECT doc_id, sh, $baseHashesSql AS hb FROM s),
-       |m AS (SELECT doc_id, $mhs FROM hh),
-       |b AS (SELECT doc_id, unnest($bandList) AS band FROM m),
-       |c AS (SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
-       |      FROM b a JOIN b b2 ON a.band = b2.band AND a.doc_id < b2.doc_id),
+       |${bandCandidatesSql(symmetricPairsSql)}
        |${jaccardVerifySql("c")}""".stripMargin
-  }
-
-  /** Doc-frequency prune threshold: shingles present in more than this
-    * fraction of documents are "boilerplate" and excluded from SIGNATURE
-    * generation (verify still uses full sets). */
-  val DfPruneFrac = 0.02
-
-  /** DF-pruning gate, derived as an explicit CANDIDATE-VOLUME BUDGET
-    * (round-12 re-grounding; the round-5 "time crossover at 150k" story is
-    * withdrawn — round 11's clean re-measure showed its 48 s anchor was
-    * batch-run contamination, and on one 32-thread host unpruned stays
-    * faster to ~900k docs: 7.4 s vs 11.8 s at 500k, BENCH_DEEP.json).
-    *
-    * Budget: keep the verify join's shuffle ≤ ~1 candidate pair per
-    * document, i.e. O(corpus) — the width any linear pipeline stage
-    * tolerates at 100 TB. On the measured Zipf decade the unpruned
-    * candidate stream fits cands(n) ≈ 1.30e6 · (n/5e5)^1.8 (303 → 15.3k →
-    * 1.30M at 5k → 50k → 500k), so candidates-per-doc = 2.6 · (n/5e5)^0.8
-    * crosses 1.0 at n = 5e5 · (1/2.6)^1.25 ≈ 1.5e5 — the gate. The pruned
-    * form stays ~n^1.0 (60k pairs at 500k), so above the gate it bounds
-    * shuffle width at the cost of ≤1.6× single-host wall time in the
-    * 150k–900k band (the measured worst point). [[GateBudgetSpec]] pins
-    * this derivation to the constant. Either side of the gate is
-    * correctness-identical (same full-set verify, same emitted-pair
-    * meaning); `q_dedup_minhash_lsh_auto_lowgate` oracle-checks the pruned
-    * branch of the gated SQL at every correctness scale. */
-  val DfPruneMinDocs = 150000L
 
   /** The gated form for composed pipelines: unpruned LSH below
     * [[DfPruneMinDocs]] (the pre-pass costs more than the candidates it
@@ -298,37 +346,28 @@ object NearDup {
     * form verbatim. So this SQL ≡ minhashPairsSql below the gate and
     * ≡ minhashPairsPrunedSql at/above it — exactly the branch
     * [[minhashPairsAuto]] takes. The threshold is a PARAMETER of the
-    * builder (round-11 advice): `q_dedup_minhash_lsh_auto` checks the
-    * production constant (unpruned branch at correctness scales) and
+    * builder: `q_dedup_minhash_lsh_auto` checks the production constant
+    * (unpruned branch at correctness scales) and
     * `q_dedup_minhash_lsh_auto_lowgate` checks a 100-doc gate, so the
-    * PRUNED branch of this same SQL is DuckDB-verified every round too. */
-  private[graft] def minhashPairsAutoSqlFor(minDocs: Long): String = {
-    val mhs = (0 until NumHashes).map(k => s"${minhashSql(k)} AS mh_$k").mkString(", ")
-    val bandList = (0 until NumBands).map { b =>
-      val parts = (b * BandSize until (b + 1) * BandSize).map(k => s"mh_$k")
-      bandKeySql(parts)
-    }.mkString("[", ", ", "]")
+    * PRUNED branch of this same SQL is DuckDB-verified too. */
+  private[graft] def minhashPairsAutoSqlFor(minDocs: Long): String =
+    dfPrunedPairsSql(s"nn.n >= $minDocs AND ")
+
+  private[operators] val minhashPairsAutoSql = minhashPairsAutoSqlFor(DfPruneMinDocs)
+
+  /** The DF-pruned LSH oracle; `sizeGate` prefixes the stop-list predicate
+    * (empty: always pruned). */
+  private def dfPrunedPairsSql(sizeGate: String): String =
     s"""WITH s AS (SELECT doc_id, $shinglesSql AS sh FROM documents),
        |x AS (SELECT doc_id, unnest(sh) AS t FROM s),
        |nn AS (SELECT count(*) AS n FROM s),
        |common AS (SELECT t FROM (SELECT t, count(*) AS df FROM x GROUP BY t) d, nn
-       |           WHERE nn.n >= $minDocs AND d.df > $DfPruneFrac * nn.n),
+       |           WHERE ${sizeGate}d.df > $DfPruneFrac * nn.n),
        |p AS (SELECT doc_id, list_sort(list(DISTINCT t)) AS sh FROM x
        |      WHERE t NOT IN (SELECT t FROM common) GROUP BY doc_id),
        |hh AS (SELECT doc_id, $baseHashesSql AS hb FROM p),
-       |m AS (SELECT doc_id, $mhs FROM hh),
-       |b AS (SELECT doc_id, unnest($bandList) AS band FROM m),
-       |c AS (SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
-       |      FROM b a JOIN b b2 ON a.band = b2.band AND a.doc_id < b2.doc_id),
+       |${bandCandidatesSql(symmetricPairsSql)}
        |${jaccardVerifySql("c")}""".stripMargin
-  }
-
-  private[operators] val minhashPairsAutoSql = minhashPairsAutoSqlFor(DfPruneMinDocs)
-
-  /** Gate threshold of the lowgate registry twin — small enough that every
-    * correctness scale (500 docs at sf0.01) takes the PRUNED branch of the
-    * gated plan AND of its one-SQL oracle. */
-  private[graft] val LowGateMinDocs = 100L
 
   /** MinHash-LSH with doc-frequency shingle pruning — the candidate-volume
     * control for corpora whose background (unrelated-pair) shingle overlap
@@ -341,72 +380,31 @@ object NearDup {
     * [[minhashPairs]] — recall on borderline pairs is traded for
     * candidate volume (measured in the bench's LSH scale pass: ~29× fewer
     * candidates at the 50k-doc point, every injected near-dup class still
-    * found; SyntheticDocsSpec pins a recall floor).
-    *
-    * Scale shape: the common-shingle list is bounded by
-    * (shingles-per-doc)/DfPruneFrac rows REGARDLESS of corpus size (a
-    * shingle needs df > frac·n, and total shingle instances are
-    * ~52·n), so collecting it to a driver array for a per-row
-    * `array_except` is the justified k-sized pattern, not a corpus-sized
-    * collect. Docs whose every shingle is boilerplate drop out of
-    * candidate generation by design. */
+    * found; SyntheticDocsSpec pins a recall floor). Docs whose every
+    * shingle is boilerplate drop out of candidate generation by design. */
   def minhashPairsPruned(spark: SparkSession, dir: String): DataFrame =
     minhashPairsPrunedOf(Tables.documents(spark, dir))
 
   /** [[minhashPairsPruned]] over any documents-shaped frame — library API.
     *
-    * Plan shape (round-12 optimization, guide §2.4 "remove shuffles
-    * outright"): the old form exploded the shingle table a second time and
-    * anti-joined the broadcast stop list, then re-aggregated per doc
-    * (collect_set + sort — one extra Exchange plus an ObjectHashAggregate
-    * pair over the full ~52·n shingle-instance stream). The stop list is
-    * bounded at ≤ ~52/[[DfPruneFrac]] entries REGARDLESS of corpus size
-    * (see [[commonShingleArray]]), so pruning is now the same stateless
-    * per-row `array_except` the streaming twin already uses
-    * ([[graft.streaming.NearDupStream]]) — a narrow map over the persisted
-    * shingle table, no second explode, no re-aggregation Exchange. Set
-    * equality with the anti-join form is structural (array_except returns
-    * the distinct left-set minus the stop list; signatures and set sizes
-    * are order-insensitive), and docs whose every shingle is boilerplate
-    * still drop out of banding ([[bandedOf]] filters empty banding sets,
-    * exactly like the old groupBy losing all its rows). Verified unchanged
-    * against the UNCHANGED DuckDB oracle (anti-join form) at sf0.001/0.01/0.1. */
-  def minhashPairsPrunedOf(docs: DataFrame): DataFrame = {
-    val shingleTbl = shingleTableOf(docs).persist()
-    val n = shingleTbl.count()
-    val bandSh = array_except(col("sh"), typedlit(commonShingleArray(shingleTbl, n).toSeq))
-    verifyJaccard(lshCandidates(shingleTbl, bandSh = Some(bandSh)), shingleTbl)
-  }
+    * Plan shape: pruning is the bounded stop list ([[commonShingleArray]])
+    * subtracted per row with `array_except` — a narrow map over the
+    * persisted shingle table, no second explode and no re-aggregation
+    * Exchange. Set equality with the oracle's anti-join + regroup form is
+    * structural (array_except returns the distinct left-set minus the stop
+    * list; signatures and set sizes are order-insensitive). */
+  def minhashPairsPrunedOf(docs: DataFrame): DataFrame = lshPairsOf(docs, prunedShingles)
 
-  private val minhashPairsPrunedSql = {
-    val mhs = (0 until NumHashes).map(k => s"${minhashSql(k)} AS mh_$k").mkString(", ")
-    val bandList = (0 until NumBands).map { b =>
-      val parts = (b * BandSize until (b + 1) * BandSize).map(k => s"mh_$k")
-      bandKeySql(parts)
-    }.mkString("[", ", ", "]")
-    s"""WITH s AS (SELECT doc_id, $shinglesSql AS sh FROM documents),
-       |x AS (SELECT doc_id, unnest(sh) AS t FROM s),
-       |nn AS (SELECT count(*) AS n FROM s),
-       |common AS (SELECT t FROM (SELECT t, count(*) AS df FROM x GROUP BY t) d, nn
-       |           WHERE d.df > $DfPruneFrac * nn.n),
-       |p AS (SELECT doc_id, list_sort(list(DISTINCT t)) AS sh FROM x
-       |      WHERE t NOT IN (SELECT t FROM common) GROUP BY doc_id),
-       |hh AS (SELECT doc_id, $baseHashesSql AS hb FROM p),
-       |m AS (SELECT doc_id, $mhs FROM hh),
-       |b AS (SELECT doc_id, unnest($bandList) AS band FROM m),
-       |c AS (SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
-       |      FROM b a JOIN b b2 ON a.band = b2.band AND a.doc_id < b2.doc_id),
-       |${jaccardVerifySql("c")}""".stripMargin
-  }
+  private val minhashPairsPrunedSql = dfPrunedPairsSql("")
 
   /** Pruned-signature candidate count — bench instrumentation, the
     * counterpart of [[lshCandidateCount]]. */
   def lshPrunedCandidateCount(spark: SparkSession, dir: String): Long = {
     val shingleTbl = shingleTable(spark, dir).persist()
-    val n = shingleTbl.count()
-    val bandSh = array_except(col("sh"), typedlit(commonShingleArray(shingleTbl, n).toSeq))
-    lshCandidates(shingleTbl, bandSh = Some(bandSh)).count()
+    lshCandidates(shingleTbl, prunedShingles(shingleTbl)).count()
   }
+
+  // -------------------------------------------------- incremental probe
 
   /** Incremental NEAR-dup check — the continuous-ingestion twin of the
     * exact `q_dedup_incremental`: each new-batch document (doc_id % 5 = 0,
@@ -417,56 +415,15 @@ object NearDup {
     * duplicated here).
     *
     * Scale shape: in production the corpus side of the band join is a
-    * MATERIALIZED band index (written once via the bucketed layout /
-    * manifest sink, band-key partitioned), so each increment pays only
-    * batch signatures + an equi-join probe into the index — corpus text is
-    * never re-read, never re-hashed. Here both sides derive inline from
-    * the single harness-mandated input table, but the join is already the
-    * asymmetric probe (batch bands ⋈ corpus bands), so swapping the
-    * corpus side for the stored index is a source change, not a plan
-    * change. Candidate volume is O(batch · collisions), never corpus². */
-  def incrementalNearPairs(spark: SparkSession, dir: String): DataFrame = {
-    val shingleTbl = shingleTable(spark, dir).persist()
-    val banded = bandedOf(shingleTbl)
-    val batch = banded.filter(col("doc_id") % 5 === 0)
-      .select(col("doc_id").as("id_a"), col("band"))
-    val corpus = banded.filter(col("doc_id") % 5 =!= 0)
-      .select(col("doc_id").as("id_b"), col("band"))
-    val cand = batch.join(corpus, "band")
-      .select(col("id_a"), col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    verifyJaccard(cand, shingleTbl)
-  }
-
-  private val incrementalNearSql = {
-    val mhs = (0 until NumHashes).map(k => s"${minhashSql(k)} AS mh_$k").mkString(", ")
-    val bandList = (0 until NumBands).map { b =>
-      val parts = (b * BandSize until (b + 1) * BandSize).map(k => s"mh_$k")
-      bandKeySql(parts)
-    }.mkString("[", ", ", "]")
-    s"""WITH s AS (SELECT doc_id, $shinglesSql AS sh FROM documents),
-       |hh AS (SELECT doc_id, sh, $baseHashesSql AS hb FROM s),
-       |m AS (SELECT doc_id, $mhs FROM hh),
-       |b AS (SELECT doc_id, unnest($bandList) AS band FROM m),
-       |c AS (SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
-       |      FROM b a JOIN b b2 ON a.band = b2.band
-       |      WHERE a.doc_id % 5 = 0 AND b2.doc_id % 5 != 0),
-       |${jaccardVerifySql("c")}""".stripMargin
-  }
-
-  /** The CORPUS-side DF stop list as a driver array, for streaming probes
-    * where the broadcast anti-join form is unavailable (a stream prunes
-    * per-row with `array_except` instead — stateless, codegen-friendly).
-    * Bounded REGARDLESS of corpus size: a shingle needs df > frac·n while
-    * total shingle instances are ~52·n, so at most ~52/frac ≈ 2600
-    * entries — the justified k-sized collect, same bound as the batch
-    * broadcast ([[minhashPairsPrunedOf]]'s scaladoc). Sorted for
-    * deterministic plans. */
-  private[graft] def commonShingleArray(shingleTbl: DataFrame, n: Long): Array[String] =
-    shingleTbl.select(explode(col("sh")).as("t"))
-      .groupBy(col("t")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > lit(DfPruneFrac) * n)
-      .select(col("t")).collect().map(_.getString(0)).sorted
+    * MATERIALIZED band index ([[corpusIndex]]), so each increment pays only
+    * batch signatures + an equi-join probe into the index ([[probePairs]],
+    * the streaming form) — corpus text is never re-read, never re-hashed.
+    * Here both sides derive inline from the single harness-mandated input
+    * table, but the join is already the asymmetric probe (batch bands ⋈
+    * corpus bands). Candidate volume is O(batch · collisions), never
+    * corpus². */
+  def incrementalNearPairs(spark: SparkSession, dir: String): DataFrame =
+    incrementalNearOf(shingleTable(spark, dir).persist(), None)
 
   /** Size-gated incremental near-dedup — [[incrementalNearPairs]] with the
     * same candidate-volume gate as [[minhashPairsAuto]]: at or above
@@ -474,25 +431,18 @@ object NearDup {
     * from shingles with corpus df ≤ [[DfPruneFrac]]·n (verify unchanged,
     * full sets). DF comes from the CORPUS side only — the standing index
     * is what a streaming deployment has at hand; arriving batches must not
-    * shift it (and [[graft.streaming.NearDupStream]] mirrors exactly this,
-    * so its replay spec can assert parity on both sides of the gate). The
-    * gate folds into one filter (`n >= minDocs` is a driver literal), so
-    * below it the stop list is empty and the plan reduces to the unpruned
-    * form — same single-plan trick as the auto oracle SQL. */
+    * shift it, and [[corpusIndex]] decides it the same way. Below the gate
+    * the plan is the unpruned form. */
   def incrementalNearPairsAuto(spark: SparkSession, dir: String,
       minDocs: Long = DfPruneMinDocs): DataFrame = {
     val shingleTbl = shingleTable(spark, dir).persist()
     val corpusSide = shingleTbl.filter(col("doc_id") % 5 =!= 0)
-    val n = corpusSide.count()
-    // round-12 optimization: same stateless array_except prune as
-    // [[minhashPairsPrunedOf]] and the streaming twin — below the gate the
-    // plan is the plain unpruned banding (the old form still paid the
-    // explode + anti-join + re-aggregate Exchange on BOTH sides of the
-    // gate); above it the bounded stop list prunes per row, no re-agg.
-    val bandSh =
-      if (n >= minDocs)
-        Some(array_except(col("sh"), typedlit(commonShingleArray(corpusSide, n).toSeq)))
-      else None
+    incrementalNearOf(shingleTbl, signatureShingles(corpusSide, corpusSide.count(), minDocs))
+  }
+
+  /** The incremental body over a persisted shingle table: batch bands ⋈
+    * corpus bands, signed over `bandSh`, then full-set Jaccard verify. */
+  private def incrementalNearOf(shingleTbl: DataFrame, bandSh: Option[Column]): DataFrame = {
     val banded = bandedOf(shingleTbl, bandSh = bandSh)
     val batch = banded.filter(col("doc_id") % 5 === 0)
       .select(col("doc_id").as("id_a"), col("band"))
@@ -504,16 +454,17 @@ object NearDup {
     verifyJaccard(cand, shingleTbl)
   }
 
+  private val incrementalNearSql =
+    s"""WITH s AS (SELECT doc_id, $shinglesSql AS sh FROM documents),
+       |hh AS (SELECT doc_id, sh, $baseHashesSql AS hb FROM s),
+       |${bandCandidatesSql(arrivalPairsSql)}
+       |${jaccardVerifySql("c")}""".stripMargin
+
   /** One-SQL oracle for [[incrementalNearPairsAuto]], threshold-
     * parameterized like [[minhashPairsAutoSqlFor]]: DF over the corpus
     * split only, empty stop list below the gate (≡ incrementalNearSql),
     * pruned signatures at/above it. */
-  private[graft] def incrementalNearAutoSqlFor(minDocs: Long): String = {
-    val mhs = (0 until NumHashes).map(k => s"${minhashSql(k)} AS mh_$k").mkString(", ")
-    val bandList = (0 until NumBands).map { b =>
-      val parts = (b * BandSize until (b + 1) * BandSize).map(k => s"mh_$k")
-      bandKeySql(parts)
-    }.mkString("[", ", ", "]")
+  private[graft] def incrementalNearAutoSqlFor(minDocs: Long): String =
     s"""WITH s AS (SELECT doc_id, $shinglesSql AS sh FROM documents),
        |nn AS (SELECT count(*) AS n FROM s WHERE doc_id % 5 != 0),
        |cx AS (SELECT doc_id, unnest(sh) AS t FROM s WHERE doc_id % 5 != 0),
@@ -523,13 +474,45 @@ object NearDup {
        |p AS (SELECT doc_id, list_sort(list(DISTINCT t)) AS sh FROM x
        |      WHERE t NOT IN (SELECT t FROM common) GROUP BY doc_id),
        |hh AS (SELECT doc_id, $baseHashesSql AS hb FROM p),
-       |m AS (SELECT doc_id, $mhs FROM hh),
-       |b AS (SELECT doc_id, unnest($bandList) AS band FROM m),
-       |c AS (SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
-       |      FROM b a JOIN b b2 ON a.band = b2.band
-       |      WHERE a.doc_id % 5 = 0 AND b2.doc_id % 5 != 0),
+       |${bandCandidatesSql(arrivalPairsSql)}
        |${jaccardVerifySql("c")}""".stripMargin
+
+  /** The standing corpus as a probe target: its band index `(id_b, band)`,
+    * its shingle table `(id_b, sh_b)`, and the [[signatureShingles]] column
+    * both the index and every probe are signed with. */
+  private[graft] final case class CorpusIndex(bands: DataFrame, shingles: DataFrame,
+      bandSh: Option[Column])
+
+  /** [[CorpusIndex]] of `corpusDocs` behind the size gate at `minDocs`. The
+    * gate costs one count() of the corpus (and, past it, the stop-list
+    * collect) here, once, at setup. Not persisted: a caller that probes the
+    * index more than once caches `bands` and `shingles` itself. */
+  private[graft] def corpusIndex(corpusDocs: DataFrame, minDocs: Long): CorpusIndex = {
+    val corpusShingles = shingleTableOf(corpusDocs)
+    val bandSh = signatureShingles(corpusShingles, corpusDocs.count(), minDocs)
+    CorpusIndex(
+      bandedOf(corpusShingles, bandSh = bandSh).select(col("doc_id").as("id_b"), col("band")),
+      corpusShingles.select(col("doc_id").as("id_b"), col("sh").as("sh_b")),
+      bandSh)
   }
+
+  /** Verified near-dup pairs `(id_a, id_b, jaccard)` of `arrivals` (new
+    * docs) against the corpus `index`. The probe side carries its own
+    * shingle set, so both joins are stream-static equi-joins (band bucket,
+    * then corpus shingle lookup) and the same plan runs on a streaming
+    * frame and on a `foreachBatch` micro-batch. The one stateful operator
+    * on a stream is the `dropDuplicates` that folds a pair meeting in
+    * several bands: one key per distinct candidate pair. Work per batch is
+    * O(batch · bucket collisions), never corpus². */
+  private[graft] def probePairs(arrivals: DataFrame, index: CorpusIndex): DataFrame =
+    bandedOf(shingleTableOf(arrivals), carrySh = true, bandSh = index.bandSh)
+      .select(col("doc_id").as("id_a"), col("sh").as("sh_a"), col("band"))
+      .join(index.bands, "band")
+      .select(col("id_a"), col("sh_a"), col("id_b"))
+      .dropDuplicates("id_a", "id_b")
+      .join(index.shingles, "id_b")
+      .select(col("id_a"), col("id_b"), jaccardOf(col("sh_a"), col("sh_b")).as("jaccard"))
+      .filter(col("jaccard") >= JaccardThreshold)
 
   /** n-gram Jaccard dedup with single-fingerprint blocking: candidates share
     * their minimum shingle hash (1-hash MinHash blocking), then exact
@@ -650,19 +633,11 @@ object NearDup {
   }
 
   private val containmentPairsSql = {
-    val mhs = (0 until NumHashes).map(k => s"${minhashSql(k)} AS mh_$k").mkString(", ")
-    val bandList = (0 until NumBands).map { b =>
-      val parts = (b * BandSize until (b + 1) * BandSize).map(k => s"mh_$k")
-      bandKeySql(parts)
-    }.mkString("[", ", ", "]")
     val contain = roundNSql(
       "CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) / least(len(sa.sh), len(sb.sh))", 4)
     s"""WITH s AS (SELECT doc_id, $shinglesSql AS sh FROM documents),
        |hh AS (SELECT doc_id, sh, $baseHashesSql AS hb FROM s),
-       |m AS (SELECT doc_id, $mhs FROM hh),
-       |b AS (SELECT doc_id, unnest($bandList) AS band FROM m),
-       |c AS (SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
-       |      FROM b a JOIN b b2 ON a.band = b2.band AND a.doc_id < b2.doc_id),
+       |${bandCandidatesSql(symmetricPairsSql)}
        |j AS (SELECT id_a, id_b, $contain AS containment
        |      FROM c JOIN s sa ON sa.doc_id = c.id_a JOIN s sb ON sb.doc_id = c.id_b)
        |SELECT id_a, id_b, containment FROM j

@@ -13,9 +13,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *  - **Ingest**: file-source stream over a watched documents directory
   *    (the S3-arrival model; checkpoint makes file pickup exactly-once).
   *  - **Near-dup gate** (per micro-batch): arriving docs probe the
-  *    STANDING corpus through the LSH band index — the same asymmetric
-  *    band-bucket → shingle-verify plan as NearDupStream, O(batch ·
-  *    collisions), never corpus² — and verified near-dups are dropped.
+  *    STANDING corpus through the LSH band index — the same
+  *    [[graft.operators.NearDup.probePairs]] plan as NearDupStream,
+  *    O(batch · collisions), never corpus² — and verified near-dups are
+  *    dropped.
   *  - **KPI upsert**: the survivors' per-(lang, source) doc/char counts
   *    are merged ADDITIVELY into a keyed store via the UpsertSink swap
   *    (crash-safe two-rename publish).
@@ -37,8 +38,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Scale notes: the stream side never holds state (the gate's joins are
   * batch-local inside foreachBatch; `dropDuplicates` there dedups one
   * micro-batch's candidate pairs, not history); the corpus index is built
-  * once, persisted, and unpersisted when the query terminates (listener
-  * registered by [[run]]). The KPI store is hash-partitioned by key
+  * once, persisted, and unpersisted when the query terminates or fails to
+  * start ([[run]]). The KPI store is hash-partitioned by key
   * ([[NumStateParts]] `part=` directories): each batch reads ONLY the
   * partitions its delta touches (partition-pruned scan), rewrites those,
   * and HARD-LINKS the untouched partition files into the new published
@@ -65,47 +66,47 @@ object IngestPipeline {
   /** Start the composed pipeline. `corpusDocs` is the standing corpus the
     * near-dup gate screens against (static side of every join). The
     * corpus band index and shingle table are persisted for the query's
-    * lifetime and unpersisted when THIS query terminates (stop or crash)
-    * via a self-removing listener — repeated starts in one session don't
-    * accumulate cached blocks. */
+    * lifetime and released exactly once: when THIS query terminates (stop
+    * or crash, seen by a self-removing listener, or already over by the
+    * time the listener is added), or when `start()` throws — so repeated
+    * starts in one session don't accumulate cached blocks. */
   def run(spark: SparkSession, srcDir: String, corpusDocs: DataFrame,
       stateDir: String, checkpointDir: String,
       minDocs: Long = NearDup.DfPruneMinDocs): StreamingQuery = {
-    val corpusShingles = NearDup.shingleTableOf(corpusDocs)
-    // same size gate as NearDupStream / the batch auto family: at or above
-    // minDocs standing docs, signatures both sides come from DF-pruned
-    // shingles (bounded stop array collected once at setup; stateless
-    // per-row array_except on the probe). Verify is unchanged.
-    val bandSh: Option[org.apache.spark.sql.Column] = {
-      val n = corpusDocs.count()
-      if (n < minDocs) None
-      else Some(array_except(col("sh"),
-        typedlit(NearDup.commonShingleArray(corpusShingles, n).toSeq)))
+    val index = NearDup.corpusIndex(corpusDocs, minDocs)
+    index.bands.persist()
+    index.shingles.persist()
+    val released = new java.util.concurrent.atomic.AtomicBoolean(false)
+    def release(): Unit = if (released.compareAndSet(false, true)) {
+      index.bands.unpersist(); index.shingles.unpersist()
     }
-    val index = NearDup.bandedOf(corpusShingles, bandSh = bandSh)
-      .select(col("doc_id").as("id_b"), col("band")).persist()
-    val corpusSh = corpusShingles
-      .select(col("doc_id").as("id_b"), col("sh").as("sh_b")).persist()
-    val query = DocIngest.docsStream(spark, srcDir)
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, index, corpusSh, stateDir, bandSh)
-      }
-      .start()
-    val qid = query.id
+    val query =
+      try DocIngest.docsStream(spark, srcDir)
+        .writeStream
+        .outputMode("update")
+        .option("checkpointLocation", checkpointDir)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          applyBatch(batch, batchId, index, stateDir)
+        }
+        .start()
+      catch { case e: Throwable => release(); throw e }
     val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
       import org.apache.spark.sql.streaming.StreamingQueryListener._
       override def onQueryStarted(e: QueryStartedEvent): Unit = ()
       override def onQueryProgress(e: QueryProgressEvent): Unit = ()
       override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-        if (e.id == qid) {
-          index.unpersist(); corpusSh.unpersist()
+        if (e.id == query.id) {
+          release()
           spark.streams.removeListener(this)
         }
     }
     spark.streams.addListener(listener)
+    // a query marks itself inactive before it posts its termination event,
+    // so one found inactive here may have ended unseen by the listener
+    if (!query.isActive) {
+      release()
+      spark.streams.removeListener(listener)
+    }
     query
   }
 
@@ -161,35 +162,24 @@ object IngestPipeline {
   /** One micro-batch: near-dup gate then additive KPI merge. Public to the
     * package so the spec can force a REPLAY of an already-applied id. */
   private[graft] def applyBatch(batch: DataFrame, batchId: Long,
-      index: DataFrame, corpusSh: DataFrame, stateDir: String,
-      bandSh: Option[org.apache.spark.sql.Column] = None): Unit = {
+      index: NearDup.CorpusIndex, stateDir: String): Unit = {
     val spark = batch.sparkSession
     if (lastAppliedBatch(spark, stateDir) >= batchId) return // replayed batch
-    val probe = NearDup.bandedOf(NearDup.shingleTableOf(batch), carrySh = true,
-      bandSh = bandSh)
-      .select(col("doc_id").as("id_a"), col("sh").as("sh_a"), col("band"))
-    val dupIds = probe.join(index, "band")
-      .select(col("id_a"), col("sh_a"), col("id_b"))
-      .dropDuplicates("id_a", "id_b") // batch-local multi-band candidate fold
-      .join(corpusSh, "id_b")
-      .filter(NearDup.jaccardOf(col("sh_a"), col("sh_b")) >= NearDup.JaccardThreshold)
-      .select(col("id_a").as("doc_id")).distinct()
+    val dupIds = NearDup.probePairs(batch, index).select(col("id_a").as("doc_id")).distinct()
     val kept = batch.join(dupIds, Seq("doc_id"), "left_anti")
     val delta = kept.groupBy(KpiKeys.map(col): _*)
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars"))
     mergeAdd(delta, batchId, stateDir)
   }
 
-  /** Additive keyed merge, PARTITION-PRUNED (round-10 verdict task #6):
-    * the store is `part=` hash partitions of the key; this batch reads
-    * only the partitions its delta touches (a partition-pruned scan —
-    * `part` is a directory column), merges and rewrites those, and
-    * hard-links every untouched partition's files into the new tree
-    * unchanged (byte-identical, spec-pinned). The `_last_batch` sidecar
-    * and the whole tree still publish under ONE atomic swap (UpsertSink's
-    * two-rename with crash recovery), so the exactly-once story is
-    * unchanged — deleting the displaced `.old` tree only drops link
-    * counts, never the live files. */
+  /** Additive keyed merge, PARTITION-PRUNED: the store is `part=` hash
+    * partitions of the key; this batch reads only the partitions its delta
+    * touches (a partition-pruned scan — `part` is a directory column),
+    * merges and rewrites those, and hard-links every untouched partition's
+    * files into the new tree unchanged (byte-identical, spec-pinned). The
+    * `_last_batch` sidecar and the whole tree publish under ONE atomic
+    * swap (UpsertSink's two-rename with crash recovery) — deleting the
+    * displaced `.old` tree only drops link counts, never the live files. */
   private def mergeAdd(delta: DataFrame, batchId: Long, stateDir: String): Unit = {
     val spark = delta.sparkSession
     val d = delta.withColumn("part", partCol).persist()

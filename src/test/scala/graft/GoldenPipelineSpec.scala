@@ -6,22 +6,31 @@ import org.apache.spark.sql.Row
 /** Reference-parity gate: runs the full pipeline against the reference's
   * own shipped data (`/root/reference/Data`, read in place) and asserts the
   * notebook's published golden outputs verbatim (cells 13 and 17 — the only
-  * expected values the reference publishes; SURVEY.md §5.2). */
+  * expected values the reference publishes; SURVEY.md §5.2). Where that
+  * data is absent each test reports canceled, not failed: the in-repo
+  * fixture's `ReferenceFixtureKpiSpec` covers the same behaviour. */
 class GoldenPipelineSpec extends SparkSuite {
 
   lazy val pipe = new EcommercePipeline(spark, SparkSpec.referenceData)
 
+  private def assumeReferenceData(): Unit =
+    assume(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(SparkSpec.referenceData)),
+      s"reference data absent: ${SparkSpec.referenceData}")
+
   test("reference data loads with the declared schemas and row counts") {
+    assumeReferenceData()
     assert(pipe.products.count() === 10000L)
     assert(pipe.orders.count() === 9000L)
     assert(pipe.orderItems.count() === 27007L)
   }
 
   test("validation passes on the reference's shipped data") {
+    assumeReferenceData()
     assert(pipe.validate() === Right(()))
   }
 
   test("category KPIs reproduce the notebook golden rows (cell 13)") {
+    assumeReferenceData()
     val kpis = pipe.categoryKpis
     assert(kpis.count() === 217L) // 7 categories x 31 days, dense
     val beauty = kpis.filter("category = 'Beauty' AND order_date = DATE'2025-03-08'").head()
@@ -31,6 +40,7 @@ class GoldenPipelineSpec extends SparkSuite {
   }
 
   test("order KPIs reproduce the notebook golden rows (cell 17)") {
+    assumeReferenceData()
     val kpis = pipe.orderKpis
     assert(kpis.count() === 31L) // 2025-03-08 .. 2025-04-07
     val d = kpis.filter("order_date = DATE'2025-03-08'").head()
@@ -43,6 +53,7 @@ class GoldenPipelineSpec extends SparkSuite {
   }
 
   test("run() gates on validation and writes both keyed KPI tables") {
+    assumeReferenceData()
     val out = java.nio.file.Files.createTempDirectory("graft_run").toString
     assert(pipe.run(out) === 0)
     val cat = spark.read.parquet(s"$out/category_kpis")

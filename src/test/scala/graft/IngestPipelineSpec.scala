@@ -1,9 +1,13 @@
 package graft
 
+import graft.operators.NearDup
 import graft.sources.Tables
 import graft.streaming.IngestPipeline
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 /** The composed end-to-end stream (streaming/IngestPipeline.scala):
   * ingest → near-dup gate → keyed KPI upsert chained through one
@@ -92,18 +96,15 @@ class IngestPipelineSpec extends SparkSuite {
     // (foreachBatch is at-least-once; the additive merge must not double)
     val lastId = IngestPipeline.lastAppliedBatch(spark, stateDir)
     assert(lastId >= 0L)
-    val corpusShingles = graft.operators.NearDup.shingleTableOf(corpus)
-    val index = graft.operators.NearDup.bandedOf(corpusShingles)
-      .select(col("doc_id").as("id_b"), col("band"))
-    val corpusSh = corpusShingles.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
-    IngestPipeline.applyBatch(docsDf(arrivingRows), lastId, index, corpusSh, stateDir)
+    val index = NearDup.corpusIndex(corpus, NearDup.DfPruneMinDocs)
+    IngestPipeline.applyBatch(docsDf(arrivingRows), lastId, index, stateDir)
     val afterReplay = spark.read.parquet(stateDir)
       .select(col("lang"), col("source"), col("n_docs"), col("n_chars"))
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
       .toSet
     assert(afterReplay === got, "replayed batch id must not re-merge")
 
-    // crash-window replay (round-11 advice, medium): a crash between the
+    // crash-window replay: a crash between the
     // staging write and the swap leaves a stale tmp tree; the replayed
     // batch — including the EMPTY-delta shape, whose hard-link publish
     // would otherwise collide with the leftovers — must start clean
@@ -119,7 +120,7 @@ class IngestPipelineSpec extends SparkSuite {
     // doc 10 is an exact dup of corpus doc 2 -> its whole batch is gated
     // out -> empty delta -> pure hard-link publish over the stale tmp
     IngestPipeline.applyBatch(
-      docsDf(arrivingRows.filter(_._1 == 10L)), lastId + 1, index, corpusSh, stateDir)
+      docsDf(arrivingRows.filter(_._1 == 10L)), lastId + 1, index, stateDir)
     assert(!staleTmp.exists(), "publish must consume (not leak) the staging dir")
     val afterCrashReplay = spark.read.parquet(stateDir)
       .select(col("lang"), col("source"), col("n_docs"), col("n_chars"))
@@ -127,6 +128,54 @@ class IngestPipelineSpec extends SparkSuite {
       .toSet
     assert(afterCrashReplay === got, "stale tmp must not corrupt or dup state")
     assert(IngestPipeline.lastAppliedBatch(spark, stateDir) === lastId + 1)
+  }
+
+  test("ingest gate on the boilerplate corpus: the pure-boilerplate arrival is dropped below the gate, kept above") {
+    import BoilerplateCorpus.{arrivals, boiler, corpus}
+    val corpusDf = Tables.documents(spark,
+      fixtureDir("documents" -> docsDf(corpus.map { case (id, t) => (id, t, "en", "web") })))
+    // each arrival is its own KPI key, so the store shows which were counted:
+    // 5 (exact text of corpus doc 1) is dropped on both sides of the gate,
+    // 10 (pure boilerplate, identical to corpus doc 2) only below it
+    val landed = arrivals.map { case (id, t) => (id, t, "en", s"doc$id") } :+
+      ((15L, uniqEn, "en", "doc15"))
+    def counted(minDocs: Long): Set[(String, Long, Long)] = {
+      val srcDir = Files.createTempDirectory(s"ingest_gate_src_$minDocs").toString
+      val stateDir = Files.createTempDirectory(s"ingest_gate_state_$minDocs").toString + "/kpi"
+      val ck = Files.createTempDirectory(s"ingest_gate_ck_$minDocs").toString
+      docsDf(landed).repartition(1).write.mode("append").parquet(srcDir)
+      val q = IngestPipeline.run(spark, srcDir, corpusDf, stateDir, ck, minDocs)
+      q.processAllAvailable(); q.stop()
+      spark.read.parquet(stateDir).select(col("source"), col("n_docs"), col("n_chars"))
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    }
+    // below the gate (150 < 1000 standing docs): 10 is a near-dup of doc 2
+    assert(counted(1000L) === Set(("doc15", 1L, uniqEn.length.toLong)))
+    // at/above it (150 >= 100): 10 prunes to an empty banding set, is counted
+    assert(counted(100L) === Set(
+      ("doc10", 1L, boiler.length.toLong), ("doc15", 1L, uniqEn.length.toLong)))
+  }
+
+  test("the corpus index is cached while the query runs and released when it stops or fails to start") {
+    val corpus = Tables.documents(spark, fixtureDir("documents" -> docsDf(corpusRows)))
+    val index = NearDup.corpusIndex(corpus, NearDup.DfPruneMinDocs)
+    def cached: Boolean =
+      index.bands.storageLevel != StorageLevel.NONE || index.shingles.storageLevel != StorageLevel.NONE
+    val srcDir = Files.createTempDirectory("ingest_cache_src").toString
+    docsDf(arrivingRows.take(1)).repartition(1).write.mode("append").parquet(srcDir)
+    val stateDir = Files.createTempDirectory("ingest_cache_state").toString + "/kpi"
+    val q = IngestPipeline.run(spark, srcDir, corpus, stateDir,
+      Files.createTempDirectory("ingest_cache_ck").toString)
+    assert(cached, "a running query keeps its corpus index cached")
+    q.processAllAvailable(); q.stop()
+    eventually(timeout(30.seconds)) { assert(!cached, "a stopped query releases it") }
+
+    // a checkpoint location that is a regular file makes start() throw
+    val ckFile = Files.createTempFile("ingest_cache_ck", ".file").toString
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException] {
+      IngestPipeline.run(spark, srcDir, corpus, stateDir, ckFile)
+    }
+    assert(!cached, "a start() that throws must not leave the index cached")
   }
 
   private def existingParts(stateDir: String): Set[Int] =

@@ -43,11 +43,27 @@ class NearDupSpec extends SparkSuite {
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L)) // distinct doc never paired
   }
 
+  /** BoilerplateCorpus's standing docs plus its two arrivals (152 docs):
+    * the corpus where the stop list is non-empty. Pure-boilerplate docs 2
+    * and 10 are an exact pair that only the unpruned signatures band. */
+  private lazy val boilerDir = fixtureDir("documents" ->
+    (BoilerplateCorpus.corpus ++ BoilerplateCorpus.arrivals)
+      .map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars"))
+
+  private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+    df.select("id_a", "id_b").as[(Long, Long)].collect().toSet
+
+  private def assertStopListNonEmpty(dir: String): Unit = {
+    val shingles = NearDup.shingleTable(spark, dir)
+    assert(NearDup.commonShingleArray(shingles, shingles.count()).nonEmpty)
+  }
+
   test("DF-prune gate: unpruned below DfPruneMinDocs, pruned at/above (same pairs either way)") {
     val dir = SparkSpec.sf0001
     // discriminate the chosen path structurally: only the pruned plan
     // subtracts the bounded common-shingle stop list (per-row array_except
-    // before banding — round-12 form; was a broadcast anti-join)
+    // before banding)
     def usesPrune(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.executedPlan.toString.contains("array_except")
     val below = NearDup.minhashPairsAuto(spark, dir) // 500 docs < 150k default
@@ -57,13 +73,23 @@ class NearDupSpec extends SparkSuite {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs(below) === pairs(above))
+
+    // sf0.001's stop list is empty, so the prune above is a no-op there; on
+    // the boilerplate corpus it is not, and the gate changes the pairs
+    assertStopListNonEmpty(boilerDir)
+    val boilerBelow = NearDup.minhashPairsAuto(spark, boilerDir, minDocs = 1000)
+    val boilerAbove = NearDup.minhashPairsAuto(spark, boilerDir, minDocs = 100)
+    assert(!usesPrune(boilerBelow) && usesPrune(boilerAbove))
+    assert(pairSet(boilerBelow).contains((2L, 10L)))
+    assert(!pairSet(boilerAbove).contains((2L, 10L)))
+    assert(pairSet(boilerAbove).contains((1L, 5L)))
   }
 
   test("lowgate twin: pruned branch on BOTH the plan and the one-SQL oracle") {
     val dir = SparkSpec.sf0001
     // 500 docs >= LowGateMinDocs (100): the registered lowgate query must
     // take the PRUNED plan — the branch the default-gate oracle never
-    // exercises at correctness scales (round-11 advice)
+    // exercises at correctness scales
     val low = NearDup.minhashPairsAuto(spark, dir, minDocs = NearDup.LowGateMinDocs)
     assert(low.queryExecution.executedPlan.toString.contains("array_except"))
     def pairs(df: org.apache.spark.sql.DataFrame) =
@@ -76,6 +102,15 @@ class NearDupSpec extends SparkSuite {
     assert(lowSql.contains(s"nn.n >= ${NearDup.LowGateMinDocs}"))
     assert(lowSql.replace(s"nn.n >= ${NearDup.LowGateMinDocs}",
       s"nn.n >= ${NearDup.DfPruneMinDocs}") === defSql)
+
+    // on the boilerplate corpus (152 docs >= 100) the lowgate plan prunes a
+    // non-empty stop list: the pure-boilerplate pair is gone, as in the
+    // pruned query, and present at the default gate
+    assertStopListNonEmpty(boilerDir)
+    val boilerLow = NearDup.minhashPairsAuto(spark, boilerDir, minDocs = NearDup.LowGateMinDocs)
+    assert(pairSet(boilerLow) === pairSet(NearDup.minhashPairsPruned(spark, boilerDir)))
+    assert(!pairSet(boilerLow).contains((2L, 10L)))
+    assert(pairSet(NearDup.minhashPairsAuto(spark, boilerDir)).contains((2L, 10L)))
   }
 
   test("incremental near-dup: batch-vs-corpus only, no within-split pairs") {

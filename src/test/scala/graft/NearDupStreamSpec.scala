@@ -64,20 +64,9 @@ class NearDupStreamSpec extends SparkSuite {
 
   test("size gate routes the stream: replay parity with incrementalNearPairsAuto on both sides") {
     // 150 standing docs sharing a 12-word boilerplate tail, so DF pruning
-    // has real work: boiler-interior trigrams have df = 150 > 0.02·150 = 3
-    // (pruned above the gate), per-doc prefix trigrams have df = 1 (kept).
-    val boiler = (1 to 12).map(i => s"boiler$i").mkString(" ")
-    val corpusIds = Iterator.from(1).filter(_ % 5 != 0).take(150).map(_.toLong).toSeq
-    val corpusDocs = corpusIds.map { i =>
-      // id 2 is a PURE-boilerplate doc: every shingle prunes away above the gate
-      if (i == 2L) i -> boiler
-      else i -> s"u${i}a u${i}b u${i}c u${i}d u${i}e u${i}f $boiler"
-    }
-    // arrivals: 5 = exact text of corpus doc 1 (rare shingles survive pruning
-    // -> found on BOTH sides of the gate); 10 = pure boilerplate (identical
-    // to corpus doc 2 -> always found UNPRUNED; prunes to empty -> never a
-    // candidate above the gate)
-    val arrivals = Seq(5L -> corpusDocs.find(_._1 == 1L).get._2, 10L -> boiler)
+    // has real work (BoilerplateCorpus has the layout and the two arrivals)
+    val corpusDocs = BoilerplateCorpus.corpus
+    val arrivals = BoilerplateCorpus.arrivals
     val dir = fixtureDir("documents" -> docsDf(corpusDocs ++ arrivals))
     val corpus = Tables.documents(spark, dir).filter(col("doc_id") % 5 =!= 0)
 

@@ -19,7 +19,9 @@ import scala.jdk.CollectionConverters._
   *    `Stateful.customSessions`, which finalizes on the watermark and has
   *    no idle TTL, sets its own event-time timeout;
   *  - tooling: five mains, three `SPARK_GRAFT_*` switches, and the decade
-  *    re-timer and fits called only from `BenchCore.deepFamily`. */
+  *    re-timer and fits called only from `BenchCore.deepFamily`;
+  *  - near-dup: the DF stop list and its per-row `array_except` prune (the
+  *    size gate) are built once, in `NearDup`, for batch, stream and ingest. */
 class SessionTripwireSpec extends AnyFunSuite {
 
   /** Scala files under `root` that contain `needle`, as repo-relative paths. */
@@ -82,6 +84,11 @@ class SessionTripwireSpec extends AnyFunSuite {
   test("only BenchCore calls retimeSuspects and alphaMonoJson under src/main/scala") {
     for (call <- Seq("retimeSuspects(", "alphaMonoJson("))
       assert(filesContaining("src/main/scala", call) === graftFiles("BenchCore"), call)
+  }
+
+  test("only NearDup builds the near-dup stop list and its array_except prune under src/main/scala") {
+    for (call <- Seq("commonShingleArray(", "array_except(col(\"sh\")"))
+      assert(filesContaining("src/main/scala", call) === graftFiles("operators/NearDup"), call)
   }
 
   test("only Ttl.scala and customSessions' two lines hold timeout tokens under streaming/") {
